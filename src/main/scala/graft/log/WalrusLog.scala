@@ -8,11 +8,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
+
+import graft.sources.{WalrusLogSource, WalrusReaderFactory}
 
 /** Spark-native topic log with the semantics of the reference engine's
   * write-ahead log (reference: src/lib.rs:1-14): durable append/read of
@@ -346,14 +348,6 @@ class WalrusLog(
           org.apache.spark.sql.graft.GraftSqlInternal.toInternalRdd(shuffled)
         }
       try {
-      val timing = sys.env.contains("GRAFT_INGEST_TIMING")
-      var tMark = System.nanoTime()
-      def mark(name: String): Unit = if (timing) {
-        val now = System.nanoTime()
-        println(f"  [ingest] $name: ${(now - tMark) / 1e9}%.3f s")
-        tMark = now
-      }
-
       // Phase 1: per-(partition, topic) counts and payload bytes (tiny
       // result). getUTF8String on the binary column wraps bytes without
       // copying — numBytes is the payload length.
@@ -368,7 +362,6 @@ class WalrusLog(
           }
           Iterator.single((pid, acc.iterator.map { case (t, (c, b)) => (t, c, b) }.toSeq))
         }.collect()
-      mark("phase1 stats")
 
       val perTopicTotal = mutable.LinkedHashMap.empty[String, (Long, Long)] // count, bytes
       stats.sortBy(_._1).foreach { case (_, ts) =>
@@ -441,7 +434,6 @@ class WalrusLog(
 
       val id = nextBatchId
       claimBatchDir(id)(d => writeEntryRows(outRows, d))
-      mark("phase2 write")
 
       // Publish: the atomic rename IS the visibility point (W2/M2 parity).
       val ranges = perTopicTotal.map { case (t, (c, b)) =>
@@ -728,7 +720,11 @@ class WalrusLog(
 
   /** All committed entries as a DataFrame — the bridge that gives topic data
     * the full relational surface (SURVEY.md §2.5). Partition pruning applies
-    * on `topic` and `batch`; `offset` predicates prune via Parquet stats. */
+    * on `topic` and `batch`; `offset` predicates prune via Parquet stats.
+    * Every call lists each visible batch dir and every action on it runs
+    * Spark jobs, so the cursor and byte-offset reads below do not go
+    * through it: they read only the covering commits' files on the driver
+    * (see [[readRange]]). */
   def toDF(): DataFrame = {
     val dirs = visibleBatchDirs
     val raw =
@@ -790,11 +786,50 @@ class WalrusLog(
   private def visibleBatchDirs: Seq[String] =
     visibleCommits.map(c => dataDir.resolve(s"batch=${c.id}").toString)
 
+  /** Entries of `topic` with `lo <= offset < hi`, in offset order, read on
+    * the driver — the analogue of the reference's cursor read over the
+    * topic's own blocks (`read_one_for_topic_shared`,
+    * distributed-walrus/src/controller/mod.rs:199-276). The covering
+    * commits come from the in-memory catalog, so nothing lists the data
+    * dir and no Spark job runs: cost follows the few files of the covering
+    * batches, not the length of the log. Files are expanded and decoded by
+    * the DSv2 source's own planner and vectorized reader; `ts` is built
+    * from `ts_us` exactly as [[toDF]]'s collected `timestamp_micros` is. */
+  private def readRange(topic: String, lo: Long, hi: Long): Seq[WalrusEntry] = {
+    val covering = visibleCommits.filter(
+      _.topics.get(topic).exists(r => r.start < hi && r.end > lo))
+    // WalrusLogSource.Schema: offset, ts_us, value, checksum, then the
+    // `topic` partition column last (unused here — it is `topic`)
+    val factory = new WalrusReaderFactory(WalrusLogSource.Schema)
+    val out = mutable.ArrayBuffer.empty[WalrusEntry]
+    WalrusLogSource.partitionsFor(nsDir, covering.map(_ -> false), Some(topic))
+      .foreach { p =>
+        val reader = factory.createColumnarReader(p)
+        try while (reader.next()) {
+          val b = reader.get()
+          val (offsets, tsUs, values, checksums) =
+            (b.column(0), b.column(1), b.column(2), b.column(3))
+          var i = 0
+          while (i < b.numRows()) {
+            val o = offsets.getLong(i)
+            if (o >= lo && o < hi)
+              out += WalrusEntry(topic, o,
+                DateTimeUtils.toJavaTimestamp(tsUs.getLong(i)),
+                values.getBinary(i), checksums.getLong(i))
+            i += 1
+          }
+        } finally reader.close()
+      }
+    out.sortBy(_.offset).toSeq
+  }
+
   /** Consume/peek up to `maxBytes` of payload from the group's cursor
     * (always at least one entry; hard cap `maxBatchEntries` per call —
     * reference: `batch_read_for_topic`, src/wal/runtime/walrus_read.rs:368-1198).
     * `checkpoint=false` is a pure peek and advances nothing
-    * (reference: walrus_read.rs:147-176).
+    * (reference: walrus_read.rs:147-176). The window is served by
+    * [[readRange]]: a driver-side read of the commits covering it, no
+    * Spark job.
     */
   def batchRead(
       topic: String,
@@ -807,16 +842,14 @@ class WalrusLog(
       val cap = math.min(entriesCap, cfg.maxBatchEntries)
       // Time-based retention can reclaim a range ABOVE the cursor; jump
       // the window start to the first retained offset (from commit
-      // metadata) so the windowed predicate keeps two-sided parquet
-      // pruning without stalling in a gap.
+      // metadata) so the window covers retained commits instead of
+      // stalling in a gap.
       val from = firstVisibleOffsetAtOrAfter(topic, cursor)
-      val rows = toDF()
-        .where(col("topic") === topic && col("offset") >= from &&
-          col("offset") < from + cap)
-        .select("topic", "offset", "ts", "value", "checksum")
-        .orderBy("offset")
-        .collect()
-      val out = admit(rows, maxBytes)
+      val window = readRange(topic, from, from + cap)
+      // Byte admission: the longest prefix within `maxBytes`, ≥ 1 entry.
+      val fits = window.iterator.scanLeft(0L)(_ + _.value.length).drop(1)
+        .takeWhile(_ <= maxBytes).size
+      val out = window.take(math.max(fits, 1))
       verify(out)
       // Advance TO the position after the last delivered entry (not by
       // count): identical for dense logs, gap-correct after retention.
@@ -845,8 +878,8 @@ class WalrusLog(
     * 1059-1068; count-neutrality walrus.rs:939-957).
     *
     * The containing batch is located from commit metadata (per-batch byte
-    * ranges) so the prefix-sum window only runs over that batch plus at most
-    * `maxBatchEntries` following entries — not the whole topic.
+    * ranges), so the running byte sum only covers that batch plus at most
+    * `maxBatchEntries` following entries, read by [[readRange]].
     */
   def batchReadFromByteOffset(
       topic: String,
@@ -868,18 +901,14 @@ class WalrusLog(
     located match {
       case None => Seq.empty
       case Some((batchStart, batchEntries, bytesBefore)) =>
-        val w = Window.partitionBy("topic").orderBy("offset")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val rows = toDF()
-          .where(col("topic") === topic && col("offset") >= batchStart &&
-            col("offset") < batchStart + batchEntries + cfg.maxBatchEntries)
-          .withColumn("entryBytes", col("len").cast(LongType) + lit(meta))
-          .withColumn("cumEnd", sum(col("entryBytes")).over(w) + lit(bytesBefore))
-          .where(col("cumEnd") > startByte)
-          .orderBy("offset")
-          .limit(cfg.maxBatchEntries)
-          .select("topic", "offset", "ts", "value", "checksum", "cumEnd", "entryBytes")
-          .collect()
+        // (entry, stream position just past it): a running sum from the
+        // batch's start, kept from the first entry that ends after startByte
+        var cumEnd = bytesBefore
+        val rows = readRange(topic, batchStart,
+            batchStart + batchEntries + cfg.maxBatchEntries)
+          .map { e => cumEnd += e.value.length + meta; (e, cumEnd) }
+          .dropWhile(_._2 <= startByte)
+          .take(cfg.maxBatchEntries)
         // Reference parity (walrus_read.rs:536-545): a stateless read that
         // aligns at byte offset 0 into SEALED storage skips the leading run
         // of sub-128 B entries — the reference treats small block-head
@@ -893,21 +922,15 @@ class WalrusLog(
         val sealedBelow = state(topic).lastSealedEntryOffset
         val aligned =
           if (startByte == 0L && sealedBelow > 0)
-            rows.dropWhile(r =>
-              r.getAs[Long]("offset") < sealedBelow &&
-                r.getAs[Array[Byte]]("value").length < MetadataEntrySkipBytes)
+            rows.dropWhile { case (e, _) =>
+              e.offset < sealedBelow && e.value.length < MetadataEntrySkipBytes }
           else rows
-        val trimmed = aligned.iterator.zipWithIndex.map { case (r, i) =>
-          val value = r.getAs[Array[Byte]]("value")
-          val entryStart = r.getAs[Long]("cumEnd") - r.getAs[Long]("entryBytes")
-          val payloadStart = entryStart + meta
-          val v =
-            if (i == 0 && startByte > payloadStart)
-              value.drop((startByte - payloadStart).toInt)
-            else value
-          WalrusEntry(r.getAs[String]("topic"), r.getAs[Long]("offset"),
-            r.getAs[Timestamp]("ts"), v, r.getAs[Long]("checksum"))
-        }.toArray
+        val trimmed = aligned.zipWithIndex.map { case ((e, end), i) =>
+          val payloadStart = end - e.value.length
+          if (i == 0 && startByte > payloadStart)
+            e.copy(value = e.value.drop((startByte - payloadStart).toInt))
+          else e
+        }
         // Budget admission over (possibly trimmed) payload bytes, ≥ 1 entry.
         var cumOut = 0L
         val out = mutable.ArrayBuffer.empty[WalrusEntry]
@@ -921,23 +944,6 @@ class WalrusLog(
         verify(res.drop(if (res.nonEmpty && startByte > 0) 1 else 0))
         res
     }
-  }
-
-  private def admit(rows: Array[Row], maxBytes: Long): Seq[WalrusEntry] = {
-    var cum = 0L
-    val out = mutable.ArrayBuffer.empty[WalrusEntry]
-    var stopped = false
-    rows.foreach { r =>
-      if (!stopped) {
-        val v = r.getAs[Array[Byte]]("value")
-        if (out.isEmpty || cum + v.length <= maxBytes) {
-          out += WalrusEntry(r.getAs[String]("topic"), r.getAs[Long]("offset"),
-            r.getAs[Timestamp]("ts"), v, r.getAs[Long]("checksum"))
-          cum += v.length
-        } else stopped = true
-      }
-    }
-    out.toSeq
   }
 
   private def verify(entries: Seq[WalrusEntry]): Unit =

@@ -36,6 +36,9 @@ class WalrusServer(log: WalrusLog, port: Int = 0) {
     while (running.get()) {
       try {
         val sock = server.accept()
+        // replies are one small write each: without TCP_NODELAY, Nagle
+        // holds a reply behind the peer's delayed ACK (~40 ms per round trip)
+        sock.setTcpNoDelay(true)
         val t = new Thread(() => handleConn(sock))
         t.setDaemon(true)
         t.start()
@@ -97,10 +100,7 @@ class WalrusServer(log: WalrusLog, port: Int = 0) {
   } catch { case e: Throwable => s"ERR ${e.getMessage}" }
 
   private def writeFrame(out: DataOutputStream, s: String): Unit = {
-    val bytes = s.getBytes(StandardCharsets.UTF_8)
-    val lenBuf = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-      .putInt(bytes.length).array()
-    out.write(lenBuf); out.write(bytes); out.flush()
+    out.write(WalrusServer.frame(s)); out.flush()
   }
 
   def close(): Unit = {
@@ -109,23 +109,35 @@ class WalrusServer(log: WalrusLog, port: Int = 0) {
   }
 }
 
+object WalrusServer {
+  /** One wire frame (4-byte little-endian length + UTF-8 body) as a single
+    * buffer, so it leaves in one write. */
+  private[server] def frame(s: String): Array[Byte] = {
+    val bytes = s.getBytes(StandardCharsets.UTF_8)
+    ByteBuffer.allocate(4 + bytes.length).order(ByteOrder.LITTLE_ENDIAN)
+      .putInt(bytes.length).put(bytes).array()
+  }
+}
+
 /** Minimal client for tests/tools — same framing as the reference client. */
 object WalrusClient {
   def call(port: Int, cmd: String): String = {
     val sock = new Socket("127.0.0.1", port)
-    try {
-      val out = new DataOutputStream(sock.getOutputStream)
-      val in = new DataInputStream(sock.getInputStream)
-      val bytes = cmd.getBytes(StandardCharsets.UTF_8)
-      out.write(ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-        .putInt(bytes.length).array())
-      out.write(bytes); out.flush()
-      val lenBytes = new Array[Byte](4)
-      in.readFully(lenBytes)
-      val len = ByteBuffer.wrap(lenBytes).order(ByteOrder.LITTLE_ENDIAN).getInt
-      val body = new Array[Byte](len)
-      in.readFully(body)
-      new String(body, StandardCharsets.UTF_8)
-    } finally sock.close()
+    try call(sock, cmd)
+    finally sock.close()
+  }
+
+  /** One round trip on an open connection (the server keeps serving a
+    * connection until the client closes it). */
+  def call(sock: Socket, cmd: String): String = {
+    val out = new DataOutputStream(sock.getOutputStream)
+    val in = new DataInputStream(sock.getInputStream)
+    out.write(WalrusServer.frame(cmd)); out.flush()
+    val lenBytes = new Array[Byte](4)
+    in.readFully(lenBytes)
+    val len = ByteBuffer.wrap(lenBytes).order(ByteOrder.LITTLE_ENDIAN).getInt
+    val body = new Array[Byte](len)
+    in.readFully(body)
+    new String(body, StandardCharsets.UTF_8)
   }
 }

@@ -694,7 +694,7 @@ object WalrusLogSource {
     * (outputPartitioning × N plans + execution share ONE dir walk). */
   private[graft] val partitionPlanCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[sources] def partitionsFor(
+  private[graft] def partitionsFor(
       nsDir: Path, commits: Seq[(CommitRecord, Boolean)],
       topic: Option[String],
       prune: PruneSpec = PruneSpec()): Array[InputPartition] = {

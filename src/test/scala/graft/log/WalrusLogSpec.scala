@@ -3,6 +3,7 @@ package graft.log
 import java.nio.file.Files
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -1494,5 +1495,123 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fresh.entryCount("t") == 1L)
     val got = fresh.batchRead("t", 1 << 20, checkpoint = false)
     assert(got.map(e => str(e.value)) == Seq("from-a"))
+  }
+
+  // ---- cursor/byte-offset reads: driver-side, covering commits only ----
+
+  private def garble(root: String, batch: Long): Unit = {
+    val dir = java.nio.file.Paths.get(root, "default", "data", s"batch=$batch")
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .foreach(f => Files.write(f, bytes("not a parquet file")))
+    finally s.close()
+  }
+
+  test("readNext/batchRead/batchReadFromByteOffset run no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val log = new WalrusLog(spark, tempRoot())
+    (0 until 3).foreach(b => log.batchAppend("t", (0 until 4).map(i => bytes(s"b$b-$i"))))
+    // the appends' own job events must not reach the listener
+    org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(log.readNext("t").map(e => str(e.value)).contains("b0-0"))
+      assert(log.batchRead("t", Long.MaxValue, checkpoint = false).size == 11)
+      assert(log.batchRead("t", Long.MaxValue, entriesCap = 5).map(_.offset) == (1L to 5L))
+      assert(log.batchReadFromByteOffset("t", 1 << 20, 256 + 2).head.offset == 0L)
+      assert(log.readNext("ghost").isEmpty)
+      org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"reads launched ${jobs.get()} Spark jobs")
+  }
+
+  test("reads never touch a batch that does not cover the requested range") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    log.batchAppend("t", (0 until 4).map(i => bytes(s"a$i"))) // batch 0
+    log.batchAppend("u", Seq(bytes("u0")))                     // batch 1
+    log.batchAppend("t", (4 until 8).map(i => bytes(s"a$i"))) // batch 2
+    (0 until 4).foreach(_ => log.readNext("t"))
+    // batch 0 is behind the cursor, batch 1 holds another topic: neither
+    // covers t's next window, so garbage in them must not matter
+    garble(root, 0L)
+    garble(root, 1L)
+    val got = log.batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.map(e => str(e.value)) == (4 until 8).map(i => s"a$i"))
+    assert(str(log.readNext("t").get.value) == "a4")
+    // byte offset inside batch 2 (4 entries of 256 + 2 B precede it)
+    assert(log.batchReadFromByteOffset("t", 1 << 20, 4 * 258 + 256).head.offset == 4L)
+    // a read whose window DOES cover the garbled batch fails loudly
+    intercept[Exception](log.batchRead("u", Long.MaxValue, checkpoint = false))
+  }
+
+  test("a batchRead window crossing commit boundaries returns dense, ordered offsets") {
+    import spark.implicits._
+    val log = new WalrusLog(spark, tempRoot())
+    (0 until 5).foreach { b =>
+      // interleave another topic in the same commits
+      log.appendDF(Seq(("t", bytes(s"t$b-0")), ("o", bytes("o")), ("t", bytes(s"t$b-1")),
+        ("t", bytes(s"t$b-2"))).toDF("topic", "value"))
+    }
+    val first = log.batchRead("t", Long.MaxValue, entriesCap = 5)
+    assert(first.map(_.offset) == (0L until 5L))
+    assert(first.map(e => str(e.value)) == Seq("t0-0", "t0-1", "t0-2", "t1-0", "t1-1"))
+    val second = log.batchRead("t", Long.MaxValue, entriesCap = 5)
+    assert(second.map(_.offset) == (5L until 10L))
+    // byte admission across a boundary stops at the budget (4 B entries)
+    val third = log.batchRead("t", maxBytes = 12L)
+    assert(third.map(_.offset) == Seq(10L, 11L, 12L))
+    assert(log.batchRead("t", Long.MaxValue).map(_.offset) == Seq(13L, 14L))
+    assert(log.committedOffset(WalrusLog.SharedGroup, "t") == 15L)
+  }
+
+  test("reads stay correct across a vacuumOlderThan gap and after compact()") {
+    import java.sql.Timestamp
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    def ingest(vals: Seq[String], ts: Long): Unit = {
+      val df = spark.createDataFrame(vals.zipWithIndex.map { case (v, i) =>
+        ("t", v.getBytes("UTF-8"), i.toLong) }).toDF("topic", "value", "_seq")
+      log.appendDF(df, Some(org.apache.spark.sql.functions.col("_seq")), new Timestamp(ts))
+    }
+    ingest(Seq("old0", "old1"), ts = 1000L)
+    ingest(Seq("mid0", "mid1"), ts = 5000L)
+    ingest(Seq("new0", "new1"), ts = 6000L)
+    assert(log.vacuumOlderThan(3000L) == Seq(0L))
+    // cursor 0 sits in the gap: the window jumps to 2 and crosses into batch 2
+    val got = log.batchRead("t", Long.MaxValue, group = "g", entriesCap = 3)
+    assert(got.map(_.offset) == Seq(2L, 3L, 4L))
+    assert(got.map(e => str(e.value)) == Seq("mid0", "mid1", "new0"))
+    val fromByte = log.batchReadFromByteOffset("t", 1 << 20, 256 + 1)
+    assert(fromByte.map(_.offset) == Seq(2L, 3L, 4L, 5L))
+    assert(log.compact().isDefined)
+    assert(log.batchRead("t", Long.MaxValue, checkpoint = false).map(_.offset) == (2L until 6L))
+    assert(log.readNext("t", group = "g").map(e => str(e.value)).contains("new1"))
+    val fromByteAfter = log.batchReadFromByteOffset("t", 1 << 20, 256 + 1)
+    assert(fromByteAfter.map(e => (e.offset, str(e.value))) ==
+      fromByte.map(e => (e.offset, str(e.value))))
+  }
+
+  test("read timestamps equal toDF()'s ts for the same (topic, offset)") {
+    import java.sql.Timestamp
+    val log = new WalrusLog(spark, tempRoot())
+    Seq(1234567L, 1700000000123L, System.currentTimeMillis()).foreach { ms =>
+      val df = spark.createDataFrame(Seq(("t", bytes(s"at-$ms")), ("t", bytes("x"))))
+        .toDF("topic", "value")
+      log.appendDF(df, ingestTs = new Timestamp(ms))
+    }
+    val expected = log.toDF().where("topic = 't'").select("offset", "ts").collect()
+      .map(r => r.getLong(0) -> r.getTimestamp(1)).toMap
+    val got = log.batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.size == 6)
+    got.foreach(e => assert(e.ts == expected(e.offset), s"offset ${e.offset}"))
+    val fromByte = log.batchReadFromByteOffset("t", 1 << 20, 0L)
+    fromByte.foreach(e => assert(e.ts == expected(e.offset), s"byte read, offset ${e.offset}"))
   }
 }

@@ -43,4 +43,22 @@ class WalrusServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(WalrusClient.call(p, "GET never-registered") == "EMPTY")
     } finally server.close()
   }
+
+  test("replies leave without a Nagle/delayed-ACK stall: 20 STATE round trips on one connection") {
+    val root = Files.createTempDirectory("wserver-").toString
+    val log = new WalrusLog(spark, root)
+    log.append("orders", "x".getBytes("UTF-8"))
+    val server = new WalrusServer(log)
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      assert(WalrusClient.call(sock, "STATE orders").startsWith("OK {")) // warm-up
+      val t0 = System.nanoTime()
+      (0 until 20).foreach { _ =>
+        assert(WalrusClient.call(sock, "STATE orders").startsWith("OK {"))
+      }
+      val ms = (System.nanoTime() - t0) / 1e6
+      // a reply stalled behind a delayed ACK costs ~40 ms: 20 of them ≥ 800 ms
+      assert(ms < 20 * 40 / 2, f"20 STATE round trips took $ms%.1f ms")
+    } finally { sock.close(); server.close() }
+  }
 }
