@@ -20,10 +20,9 @@ import graft.streaming.WalrusStreams
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpusSpec = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cpusSpec]")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -46,6 +45,11 @@ object Bench {
       .config("spark.local.dir", "/dev/shm/spark-local")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // parsed once: a non-integer spec such as "*" is still a valid local[]
+    // master, and counts as the parallelism it resolved to
+    val cpus = scala.util.Try(cpusSpec.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
 
     // Scale-out legibility (VERDICT r13 item 1): count submitted stages and
     // tasks per timed query, keyed by the job group the sweep sets below.
@@ -158,7 +162,7 @@ object Bench {
     // topic-clustered — modeled as contiguous id ranges per topic and
     // ingested via the no-shuffle arrivalOrder path (per-topic order =
     // partition order, exactly the per-producer append order)
-    val producer = spark.range(0, 1000000, 1, cpus.toInt)
+    val producer = spark.range(0, 1000000, 1, cpus)
       .select(concat(lit("topic-"), (col("id") / 100000).cast("int").cast("string")).as("topic"),
         unhex(repeat(sha2(col("id").cast("string").cast("binary"), 256), 24)).as("value"))
       .cache()
@@ -283,8 +287,9 @@ object Bench {
         System.gc(); Thread.sleep(200); System.gc()
       }
       // job group labels the query's stages for the task-count listener
-      // (and the UI, guide §1.5); cleared before the timer stops so the
-      // label can never leak into a later query's attribution
+      // (and the UI, guide §1.5); cleared right after the timer stops,
+      // before the next query sets its own, so the label can never leak
+      // into a later query's attribution
       spark.sparkContext.setJobGroup(s"q:$name", name)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
@@ -314,11 +319,11 @@ object Bench {
           .where(substring(col("h"), 1, 1) <= "7").count()
         (System.nanoTime() - t0) / 1e9
       }
-      work(cpus.toInt) // warm codegen/JIT outside both measurements
+      work(cpus) // warm codegen/JIT outside both measurements
       val serial = work(1)
-      val parallel = work(cpus.toInt)
+      val parallel = work(cpus)
       if (parallel > 0)
-        math.rint(cpus.toInt * serial / parallel * 100) / 100
+        math.rint(cpus * serial / parallel * 100) / 100
       else -1.0
     }
 
@@ -431,7 +436,7 @@ object Bench {
       // that core count, and (in BENCH_DETAIL) per-query stage/task
       // counts. "harness" tags the GC-fence discipline so round-over-round
       // comparisons can be filtered to matching methodology (ADVICE r13).
-      "cpus" -> cpus.toInt,
+      "cpus" -> cpus,
       "parallel_probe_speedup" -> probeSpeedup,
       "ingest_rows_per_sec" -> ingestRps.toLong,
       "ingest_arrival_rows_per_sec" -> ingestArrivalRps.toLong,
@@ -455,6 +460,9 @@ object Bench {
     // rows-in-state vs trigger overhead should be readable, not inferred)
     val stateMetrics = graft.streaming.StreamStateProbe.snapshot().toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // stage events are posted asynchronously: drain the bus so the last
+    // queries' stages are counted before the map is read
+    org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
     // per-query parallelism attribution: submitted stages/tasks inside each
     // timed query (cloned-session streaming drives run their jobs off the
     // sweep thread, so stream entries may read 0 — their parallelism knob
@@ -465,7 +473,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-      s""""cpus":${cpus.toInt},"harness":"r14-gcgc500gc",""" +
+      s""""cpus":$cpus,"harness":"r14-gcgc500gc",""" +
       s""""queries":${results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")},""" +
       s""""query_families":${families.map { case (k, v) => "\"" + k + "\":" + v }
@@ -483,7 +491,7 @@ object Bench {
       try {
         Files.write(java.nio.file.Paths.get(detailPath), detail.getBytes("UTF-8"))
         if (!sys.env.contains("GRAFT_BENCH_DETAIL")) {
-          val keyed = s"BENCH_DETAIL_c${cpus.toInt}_$sfLeaf.json"
+          val keyed = s"BENCH_DETAIL_c${cpus}_$sfLeaf.json"
           Files.write(java.nio.file.Paths.get(keyed), detail.getBytes("UTF-8"))
         }
         detailPath

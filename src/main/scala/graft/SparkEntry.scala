@@ -794,13 +794,27 @@ object SparkEntry {
     * constant at the bench's 8- and 32-core contract points (32/4 = 8;
     * max(8, 2) = 8), scaling with the cluster beyond them.
     * `SPARK_GRAFT_STREAM_STATE_PARTS` overrides for deployments whose key
-    * cardinality is known to be far from cores/4. Results are
-    * partition-count invariant (hash partitioning only moves WHERE a key
-    * aggregates), and every drive uses a fresh checkpoint, so the knob is
-    * never a semantics knob. */
+    * cardinality is known to be far from cores/4; it must be a positive
+    * integer, anything else falls back to the derivation with a warning.
+    * Results are partition-count invariant (hash partitioning only moves
+    * WHERE a key aggregates), and every drive uses a fresh checkpoint, so
+    * the knob is never a semantics knob. */
   private[graft] def streamStateParts(s: SparkSession): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS",
-      math.max(8, s.sparkContext.defaultParallelism / 4).toString)
+    streamStateParts(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS"),
+      s.sparkContext.defaultParallelism)
+
+  /** [[streamStateParts]] with the override and core count passed in. */
+  private[graft] def streamStateParts(overrideParts: Option[String], cores: Int): String = {
+    val derived = math.max(8, cores / 4)
+    overrideParts.fold(derived) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"SPARK_GRAFT_STREAM_STATE_PARTS=\"$v\" is not a positive integer; " +
+            s"using the derived $derived")
+        derived
+      }
+    }.toString
+  }
 
   // --------------------------------------------- shared streaming drive
   /** Drives a streaming DataFrame through one AvailableNow pass into a

@@ -201,8 +201,9 @@ class WalrusLog(
   // =========================================================================
 
   /** Append a single entry (reference: `append_for_topic`,
-    * src/wal/runtime/walrus_write.rs:4-10). For high-throughput ingest use
-    * [[appendDF]]; this is the API-parity form. */
+    * src/wal/runtime/walrus_write.rs:4-10) as one commit written on the
+    * driver, with no Spark job (see [[appendOnDriver]]). For
+    * high-throughput ingest use [[appendDF]]; this is the API-parity form. */
   def append(topic: String, value: Array[Byte]): Unit =
     appendLocal(Seq(topic -> value), enforceCaps = false)
 
@@ -211,7 +212,8 @@ class WalrusLog(
     * Enforces the reference's caps (≤ `maxBatchEntries` entries,
     * ≤ `maxBatchBytes` payload; src/wal/config.rs:42-43) and rejects a
     * concurrent batch with [[WouldBlockException]]
-    * (reference: writer.rs:135-165). */
+    * (reference: writer.rs:135-165). The batch is one commit written on
+    * the driver, with no Spark job (see [[appendOnDriver]]). */
   def batchAppend(topic: String, batch: Seq[Array[Byte]]): Unit = {
     if (!isBatchWriting.compareAndSet(false, true))
       throw new WouldBlockException("another batch append is in progress")
@@ -219,6 +221,8 @@ class WalrusLog(
     finally isBatchWriting.set(false)
   }
 
+  /** Caps check, then one driver-side commit of entries that are already
+    * in driver memory (`append`, `batchAppend`, the shim's PUT). */
   private def appendLocal(entries: Seq[(String, Array[Byte])], enforceCaps: Boolean): Unit = {
     if (entries.isEmpty) return
     if (enforceCaps) {
@@ -228,18 +232,47 @@ class WalrusLog(
       require(bytes <= cfg.maxBatchBytes,
         s"batch of $bytes payload bytes exceeds cap ${cfg.maxBatchBytes}")
     }
-    val rows = entries.zipWithIndex.map { case ((t, v), i) => Row(t, v, i.toLong) }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("topic", StringType),
-        StructField("value", BinaryType),
-        StructField("_seq", LongType))))
-    // Exact size hint (RDD-backed plans have no usable Catalyst stats) so
-    // per-entry appends take the single-job small-commit path.
-    val hint = entries.iterator
-      .map { case (t, v) => t.length.toLong + v.length + 16L }.sum
-    appendDF(df, Some(col("_seq")), sizeHintBytes = Some(hint))
+    appendOnDriver(entries)
+  }
+
+  /** Commit driver-resident entries without a Spark job. Offsets, stats
+    * and the data files are all produced on the calling thread: entries
+    * group by topic in input order, offsets continue from the catalog's
+    * `nextOffset`, and each topic's rows go to one Parquet file written by
+    * Spark's own Parquet writer into the same `topic=<escaped>` layout a
+    * `partitionBy` write produces. The commit protocol is the one every
+    * ingest path shares: stage dir, rename claim, then [[publishCommit]]. */
+  private def appendOnDriver(entries: Seq[(String, Array[Byte])]): CommitRecord = {
+    val ingestTs = System.currentTimeMillis()
+    val tsUs = ingestTs * 1000L
+    val byTopic = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Array[Byte]]]
+    entries.foreach { case (t, v) =>
+      byTopic.getOrElseUpdate(t, mutable.ArrayBuffer.empty) += v
+    }
+    synchronized {
+      withCollisionRetry {
+        val bases = byTopic.keys.map(t =>
+          t -> topics.get(t).map(_.nextOffset).getOrElse(0L)).toMap
+        val id = nextBatchId
+        claimBatchDir(id) { d =>
+          org.apache.spark.sql.graft.GraftSqlInternal.writeParquetFiles(
+            spark, entryFileSchema, entryWriteOptions, byTopic.map { case (t, vs) =>
+              val dir = d.resolve(org.apache.spark.sql.catalyst.catalog
+                .ExternalCatalogUtils.getPartitionPathString("topic", t))
+              dir.toString -> vs.iterator.zipWithIndex.map { case (v, i) =>
+                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+                  Array[Any](bases(t) + i, tsUs, v,
+                    graft.functions.Fnv1a64.hash(v), v.length))
+              }
+            })
+        }
+        val ranges = byTopic.map { case (t, vs) =>
+          t -> TopicRange(bases(t), bases(t) + vs.size,
+            vs.iterator.map(_.length.toLong).sum, Some(tsUs), Some(tsUs))
+        }.toMap
+        publishCommit(CommitRecord(id, ingestTs, ranges))
+      }
+    }
   }
 
   /** Bulk ingest: append every row of `input` (columns `topic: STRING`,
@@ -267,15 +300,13 @@ class WalrusLog(
       seqCol: Option[org.apache.spark.sql.Column] = None,
       ingestTs: Timestamp = new Timestamp(System.currentTimeMillis()),
       tag: Option[String] = None,
-      arrivalOrder: Boolean = false,
-      sizeHintBytes: Option[Long] = None): CommitRecord =
+      arrivalOrder: Boolean = false): CommitRecord =
     synchronized {
       // Losing a commit race against another live writer resyncs this
       // instance from disk and re-runs the attempt (bounded; see
       // LogConfig.commitCollisionRetries) — offsets re-sequence from the
       // resynced state, so both writers' batches land durably.
-      withCollisionRetry(appendDFAttempt(
-        input, seqCol, ingestTs, tag, arrivalOrder, sizeHintBytes))
+      withCollisionRetry(appendDFAttempt(input, seqCol, ingestTs, tag, arrivalOrder))
     }
 
   private def appendDFAttempt(
@@ -283,8 +314,7 @@ class WalrusLog(
       seqCol: Option[org.apache.spark.sql.Column],
       ingestTs: Timestamp,
       tag: Option[String],
-      arrivalOrder: Boolean,
-      sizeHintBytes: Option[Long]): CommitRecord =
+      arrivalOrder: Boolean): CommitRecord =
     {
       // Idempotence for streaming-sink epoch retries: a commit tagged with
       // an already-committed tag is a no-op (exactly-once foreachBatch).
@@ -298,13 +328,12 @@ class WalrusLog(
         }
       }
       // Small commits collapse to ONE Spark job (see appendSmallCommit).
-      // Size comes from the caller's hint when exact (append/batchAppend)
-      // or Catalyst's plan statistics otherwise; unknown stats default to
-      // Long.MaxValue, which conservatively keeps the range path.
+      // Size comes from Catalyst's plan statistics; unknown stats default
+      // to Long.MaxValue, which conservatively keeps the range path.
       if (!arrivalOrder) {
-        val est: BigInt = sizeHintBytes.map(BigInt(_)).getOrElse(
+        val est: BigInt =
           try input.queryExecution.optimizedPlan.stats.sizeInBytes
-          catch { case _: Throwable => BigInt(Long.MaxValue) })
+          catch { case _: Throwable => BigInt(Long.MaxValue) }
         if (est <= cfg.smallCommitMaxBytes)
           return appendSmallCommit(input,
             seqCol.getOrElse(monotonically_increasing_id()), ingestTs, tag,
@@ -440,13 +469,7 @@ class WalrusLog(
         val tsUs = ingestTs.getTime * 1000L // every entry carries this ts_us
         t -> TopicRange(baseOffsets(t), baseOffsets(t) + c, b, Some(tsUs), Some(tsUs))
       }.toMap
-      val rec = CommitRecord(id, ingestTs.getTime, ranges, tag)
-      writeAtomicNew(commitsDir.resolve(f"$id%012d.json"), Serialization.write(rec))
-      nextBatchId = id + 1
-      applyCommit(rec)
-      persistClean()
-      maybeWriteManifest()
-      rec
+      publishCommit(CommitRecord(id, ingestTs.getTime, ranges, tag))
       } finally pinned.foreach(_.unpersist(false))
     }
 
@@ -544,27 +567,36 @@ class WalrusLog(
     StructField("checksum", LongType, nullable = false),
     StructField("len", IntegerType, nullable = false)))
 
+  /** On-disk layout of one `topic=<t>` data file: the entry columns minus
+    * the partition column, as [[writeEntryRows]]'s `partitionBy` write
+    * stores them (non-nullable, so `required` in the Parquet footer). */
+  private val entryFileSchema = StructType(entrySchema.filterNot(_.name == "topic"))
+
+  /** Parquet options of every ingest write. Page-level CRCs are off: the
+    * per-entry FNV column is the integrity check of record (reference
+    * parity), parquet footer checksums still cover metadata. */
+  private def entryWriteOptions: Map[String, String] = Map(
+    "compression" -> cfg.compression,
+    "parquet.enable.dictionary" -> cfg.dictionaryEncoding.toString,
+    "parquet.page.write-checksum.enabled" -> "false")
+
   /** Shared data-file write. Rows arrive already clustered by topic (range
     * or hash shuffle), but an RDD scan carries no ordering info, so a
     * partitionBy write re-sorts the stream unless concurrent writers (> 0,
     * set on the cloned write session) let it keep multiple open files per
-    * task instead. Page-level CRCs are off: the per-entry FNV column is
-    * the integrity check of record (reference parity), parquet footer
-    * checksums still cover metadata. */
+    * task instead. */
   private def writeEntryRows(
       outRows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       batchDir: Path): Unit = {
     val entryDf = org.apache.spark.sql.graft.GraftSqlInternal
       .internalCreateDataFrame(writeSession, outRows, entrySchema)
-    entryDf.write.mode(SaveMode.ErrorIfExists)
-      .option("compression", cfg.compression)
-      .option("parquet.enable.dictionary", cfg.dictionaryEncoding.toString)
-      .option("parquet.page.write-checksum.enabled", "false")
+    entryDf.write.mode(SaveMode.ErrorIfExists).options(entryWriteOptions)
       .partitionBy("topic").parquet(batchDir.toString)
   }
 
-  /** Single-job small-commit ingest (reference workload: frequent small
-    * `batch_append_for_topic` calls, src/wal/runtime/walrus_write.rs:12-18).
+  /** Single-job ingest for small `appendDF` inputs: DataFrames whose rows
+    * are not on the driver (driver-resident entries from `append` and
+    * `batchAppend` commit with no job at all, see [[appendOnDriver]]).
     *
     * The general path needs a count pass before offsets can be assigned
     * (per-(partition, topic) prefix sums) — 3 jobs total, whose fixed
@@ -683,9 +715,16 @@ class WalrusLog(
       val tsUs = ingestTs.getTime * 1000L // every entry carries this ts_us
       t -> TopicRange(start, start + c, b, Some(tsUs), Some(tsUs))
     }.toMap
-    val rec = CommitRecord(id, ingestTs.getTime, ranges, tag)
-    writeAtomicNew(commitsDir.resolve(f"$id%012d.json"), Serialization.write(rec))
-    nextBatchId = id + 1
+    publishCommit(CommitRecord(id, ingestTs.getTime, ranges, tag))
+  }
+
+  /** Publish tail every ingest path shares, after its batch dir is
+    * claimed: the create-exclusive commit file is the visibility point
+    * (W2/M2 parity), then in-memory state (segment rollover), clean
+    * markers and the manifest roll-up follow it. */
+  private def publishCommit(rec: CommitRecord): CommitRecord = {
+    writeAtomicNew(commitsDir.resolve(f"${rec.id}%012d.json"), Serialization.write(rec))
+    nextBatchId = rec.id + 1
     applyCommit(rec)
     persistClean()
     maybeWriteManifest()

@@ -51,6 +51,28 @@ object GraftSqlInternal {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Write one Parquet file per `(dir, rows)` pair on the calling thread
+    * with Spark's own Parquet file format: the footer, codec and encodings
+    * a DataFrame write with the same `options` produces, but no Spark job.
+    * Files are named like a write job's (`part-<i>-<uuid>.c000<ext>`);
+    * each `dir` is created as needed. `rows` match `dataSchema`. */
+  def writeParquetFiles(spark: SparkSession, dataSchema: StructType,
+      options: Map[String, String], files: Iterable[(String, Iterator[InternalRow])]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
+    val name = s"${java.util.UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
+    files.iterator.zipWithIndex.foreach { case ((dir, rows), i) =>
+      val w = factory.newInstance(f"$dir/part-$i%05d-$name", dataSchema, ctx)
+      try rows.foreach(w.write) finally w.close()
+    }
+  }
+
   /** Re-root a DataFrame's logical plan onto another session (e.g. a
     * clone carrying different execution confs). */
   def onSession(df: DataFrame, spark: SparkSession): DataFrame =

@@ -29,6 +29,14 @@ class R14OptimizationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.streamStateParts(spark) == "8")
   }
 
+  test("SPARK_GRAFT_STREAM_STATE_PARTS is accepted only as a positive integer") {
+    // invalid overrides fall back to the derivation, max(8, cores/4)
+    assert(SparkEntry.streamStateParts(Some("0"), cores = 64) == "16")
+    assert(SparkEntry.streamStateParts(Some("x"), cores = 4) == "8")
+    assert(SparkEntry.streamStateParts(Some("12"), cores = 4) == "12")
+    assert(SparkEntry.streamStateParts(None, cores = 64) == "16")
+  }
+
   private def pathEdges(n: Int) = {
     import scala.collection.JavaConverters._
     import org.apache.spark.sql.types._

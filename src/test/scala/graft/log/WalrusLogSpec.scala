@@ -1507,7 +1507,9 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally s.close()
   }
 
-  test("readNext/batchRead/batchReadFromByteOffset run no Spark job") {
+  /** Spark jobs started while `body` runs. The bus is drained on both
+    * sides, so earlier jobs' events never reach the count. */
+  private def jobsDuring(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -1515,20 +1517,26 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
         jobs.incrementAndGet(); ()
       }
     }
-    val log = new WalrusLog(spark, tempRoot())
-    (0 until 3).foreach(b => log.batchAppend("t", (0 until 4).map(i => bytes(s"b$b-$i"))))
-    // the appends' own job events must not reach the listener
     org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
+      body
+      org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("readNext/batchRead/batchReadFromByteOffset run no Spark job") {
+    val log = new WalrusLog(spark, tempRoot())
+    (0 until 3).foreach(b => log.batchAppend("t", (0 until 4).map(i => bytes(s"b$b-$i"))))
+    val jobs = jobsDuring {
       assert(log.readNext("t").map(e => str(e.value)).contains("b0-0"))
       assert(log.batchRead("t", Long.MaxValue, checkpoint = false).size == 11)
       assert(log.batchRead("t", Long.MaxValue, entriesCap = 5).map(_.offset) == (1L to 5L))
       assert(log.batchReadFromByteOffset("t", 1 << 20, 256 + 2).head.offset == 0L)
       assert(log.readNext("ghost").isEmpty)
-      org.apache.spark.sql.graft.GraftSqlInternal.waitListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0, s"reads launched ${jobs.get()} Spark jobs")
+    }
+    assert(jobs == 0, s"reads launched $jobs Spark jobs")
   }
 
   test("reads never touch a batch that does not cover the requested range") {
@@ -1613,5 +1621,131 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.foreach(e => assert(e.ts == expected(e.offset), s"offset ${e.offset}"))
     val fromByte = log.batchReadFromByteOffset("t", 1 << 20, 0L)
     fromByte.foreach(e => assert(e.ts == expected(e.offset), s"byte read, offset ${e.offset}"))
+  }
+
+  test("append and batchAppend commit on the driver: no Spark job") {
+    val log = new WalrusLog(spark, tempRoot())
+    val jobs = jobsDuring {
+      log.append("t", bytes("e0"))
+      log.batchAppend("t", (1 until 5).map(i => bytes(s"e$i")))
+      log.append("u", bytes("u0"))
+    }
+    assert(jobs == 0, s"appends launched $jobs Spark jobs")
+    val got = log.batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.map(_.offset) == (0L until 5L))
+    assert(got.map(e => str(e.value)) == (0 until 5).map(i => s"e$i"))
+    assert(log.entryCount("u") == 1L)
+  }
+
+  /** Parquet footers of every data file under `batch=<id>`. */
+  private def footers(root: String, id: Long) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = java.nio.file.Paths.get(root, "default", "data", s"batch=$id")
+    val s = Files.walk(dir)
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally s.close()
+    assert(files.nonEmpty, s"no data files under $dir")
+    files.map { f =>
+      val in = HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration())
+      val r = ParquetFileReader.open(in)
+      try r.getFooter finally r.close()
+    }
+  }
+
+  test("driver-side commits write the same file format as a small appendDF commit") {
+    import org.apache.spark.sql.functions.col
+    val vals = (0 until 6).map(i => bytes(s"payload-$i" * (i + 1)))
+    val driverRoot = tempRoot()
+    val driver = new WalrusLog(spark, driverRoot)
+    driver.batchAppend("t", vals)
+    def rows(log: WalrusLog) = log.toDF()
+      .select("topic", "offset", "ts", "value", "checksum", "len").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getTimestamp(2),
+        str(r.getAs[Array[Byte]](3)), r.getLong(4), r.getInt(5))).toSeq.sortBy(_._2)
+    val want = rows(driver)
+    // the same entries, at the same ingest instant, through appendDF's
+    // single-job small-commit path
+    val dfRoot = tempRoot()
+    val viaDf = new WalrusLog(spark, dfRoot)
+    val df = spark.createDataFrame(vals.zipWithIndex.map { case (v, i) => ("t", v, i.toLong) })
+      .toDF("topic", "value", "_seq")
+    viaDf.appendDF(df, Some(col("_seq")), want.head._3)
+    assert(rows(viaDf) == want)
+    assert(want.map(_._2) == (0L until 6L))
+    val (d, s) = (footers(driverRoot, 0L), footers(dfRoot, 0L))
+    def schemas(fs: Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata]) =
+      fs.map(_.getFileMetaData.getSchema).distinct
+    def codecs(fs: Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata]) =
+      fs.flatMap(_.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))).distinct
+    assert(schemas(d) == schemas(s)) // names, types, repetition
+    assert(schemas(d).head.getFields.asScala.map(_.getName) ==
+      Seq("offset", "ts_us", "value", "checksum", "len"))
+    assert(codecs(d) == codecs(s))
+    assert(codecs(d).map(_.name) == Seq("SNAPPY"))
+  }
+
+  test("topic names that need path escaping round-trip through every read path") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    // Non-ASCII names need a JVM whose file-name charset (the locale's)
+    // can encode them; under an ASCII locale the append fails loudly and
+    // commits nothing instead of writing a mangled dir name.
+    val fsCharset = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    val (names, unencodable) = Seq("a b", "x/y", "k=v", "50%", "wälrus-日本")
+      .partition(fsCharset.newEncoder().canEncode(_))
+    unencodable.foreach { t =>
+      intercept[java.nio.file.InvalidPathException](log.append(t, bytes("x")))
+      assert(log.entryCount(t) == 0L)
+    }
+    names.foreach { t =>
+      log.append(t, bytes(s"$t#0"))
+      log.batchAppend(t, Seq(bytes(s"$t#1"), bytes(s"$t#2")))
+    }
+    val want = names.flatMap(t => (0 until 3).map(i => (t, i.toLong, s"$t#$i"))).toSet
+    names.foreach { t =>
+      val got = log.batchRead(t, Long.MaxValue, checkpoint = false)
+      assert(got.map(e => (t, e.offset, str(e.value))).toSet ==
+        want.filter(_._1 == t), s"batchRead of '$t'")
+    }
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("topic", "offset", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1), str(r.getAs[Array[Byte]](2)))).toSet
+    assert(triples(log.toDF()) == want)
+    assert(triples(graft.streaming.WalrusStreams.read(spark, root)) == want)
+    assert(triples(graft.streaming.WalrusStreams.read(spark, root, topic = Some("x/y"))) ==
+      want.filter(_._1 == "x/y"))
+    val q = graft.streaming.WalrusStreams.readStream(spark, root)
+      .writeStream.format("memory").queryName("escaped_topics").start()
+    try {
+      q.processAllAvailable()
+      assert(triples(spark.table("escaped_topics")) == want)
+    } finally q.stop()
+  }
+
+  test("a crash between staging and publishing: reopen sweeps the stage, offsets stay dense") {
+    val root = tempRoot()
+    val a = new WalrusLog(spark, root)
+    a.batchAppend("t", Seq(bytes("e0"), bytes("e1")))
+    a.batchAppend("t", Seq(bytes("lost")))
+    // turn batch 1 back into the state a writer that died after writing
+    // its stage dir leaves behind: real data files, no claim, no commit
+    val data = java.nio.file.Paths.get(root, "default", "data")
+    val stage = data.resolve("batch=1.stage-crashed")
+    Files.move(data.resolve("batch=1"), stage)
+    Files.delete(java.nio.file.Paths.get(root, "default", "commits", f"${1L}%012d.json"))
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 60L * 60 * 1000)
+    val s = Files.walk(stage)
+    try s.iterator().asScala.toList.foreach(Files.setLastModifiedTime(_, old))
+    finally s.close()
+    val b = new WalrusLog(spark, root)
+    assert(!Files.exists(stage), "stale stage dir not swept at reopen")
+    assert(b.entryCount("t") == 2L)
+    b.append("t", bytes("e2"))
+    val got = b.batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.map(_.offset) == (0L until 3L))
+    assert(got.map(e => str(e.value)) == Seq("e0", "e1", "e2"))
   }
 }
