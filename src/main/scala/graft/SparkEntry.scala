@@ -783,6 +783,23 @@ object SparkEntry {
   private def jsonLong(js: String, k: String): Long =
     raw""""$k":(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong).getOrElse(0L)
 
+  /** rel_skyline's per-day Pareto base before its checkpoint: the top
+    * price of each order day (with that price's order count), keyed by
+    * day number `dk` and its 64-day range `rng`. The per-day rank window
+    * partitions by day. */
+  private[graft] def skylineDayBest(orders: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wd = Window.partitionBy("day").orderBy(col("price").desc)
+    orders
+      .groupBy(to_date(col("o_orderdate")).as("day"),
+        col("o_totalprice").as("price"))
+      .agg(count(lit(1)).as("n_orders"))
+      .withColumn("rn", row_number().over(wd))
+      .where(col("rn") === 1).drop("rn")
+      .withColumn("dk", datediff(col("day"), lit("1990-01-01")).cast("long"))
+      .withColumn("rng", expr("dk DIV 64"))
+  }
+
   /** State parallelism for the stateful stream drives. A stateful
     * micro-batch commits one state-store instance per shuffle partition
     * per trigger, so the right number tracks key cardinality and core
@@ -6733,7 +6750,7 @@ object SparkEntry {
     }),
     "sim_knn_lexical" -> ((s, dir) =>
       // lexical KNN: top-3 docs by shared distinct 8-shingles (stop-
-      // shingle cap bounds every join bucket; doc-partitioned rank window)
+      // shingle cap bounds every posting list; per-doc top-k aggregate)
       Dedup.lexicalKnn(table(s, dir, "documents"), "doc_id", "text",
           k = 8, topK = 3, maxDocFreq = 50)
         .orderBy("doc_id", "rnk")),
@@ -7672,11 +7689,6 @@ object SparkEntry {
       // runs as the two-phase per-range pattern (range bases collected on
       // the driver, range-local window) — no unpartitioned window, ever.
       import org.apache.spark.sql.expressions.Window
-      val g = table(s, dir, "orders")
-        .groupBy(to_date(col("o_orderdate")).as("day"),
-          col("o_totalprice").as("price"))
-        .agg(count(lit(1)).as("n_orders"))
-      val wd = Window.partitionBy("day").orderBy(col("price").desc)
       // r14: `best` feeds BOTH the per-range driver collect and the final
       // range-local window — without a barrier each consumer replays the
       // full orders scan + (day,price) agg + window (two passes, the
@@ -7684,11 +7696,7 @@ object SparkEntry {
       // (~2.5 k rows at ANY corpus scale — localCheckpoint of a
       // domain-bounded relation is the documented safe use; see
       // OPTIMIZATION_r14 localCheckpoint audit), so the scan now runs once.
-      val best = g.withColumn("rn", row_number().over(wd))
-        .where(col("rn") === 1).drop("rn")
-        .withColumn("dk", datediff(col("day"), lit("1990-01-01")).cast("long"))
-        .withColumn("rng", expr("dk DIV 64"))
-        .localCheckpoint()
+      val best = skylineDayBest(table(s, dir, "orders")).localCheckpoint()
       // defensive double cast: o_totalprice may arrive as DECIMAL in
       // canonical TPC-H data — read the max through the cast, as the
       // joins/filters below compare doubles anyway

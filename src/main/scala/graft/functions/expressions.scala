@@ -780,6 +780,194 @@ case class BottomK(child: Expression, k: Int,
   override def prettyName: String = "bottom_k"
 }
 
+/** Per-group co-occurrence top-k: counts how often each id appears across
+  * the group's `ids` arrays (skipping `self`), then keeps the `k` best by
+  * (count desc, id asc) — the ranking of a per-document
+  * `row_number() OVER (ORDER BY count DESC, id)`, without ever building
+  * the (self, id) pair rows. Output: array<struct<dst, both>> in rank order.
+  *
+  * Scale story: the group key is a document and each input row is one of
+  * its posting lists (capped upstream by a doc-frequency bound), so the
+  * buffer is a primitive long→long count map sized by the document's
+  * distinct neighbours, and ranking is an O(n log k) heap selection. The
+  * pair-count shuffle and the pair sort of the join plan disappear.
+  * Counts are integer sums, so merge order cannot change the result. */
+case class CoOccurrenceTopK(ids: Expression, self: Expression, k: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends org.apache.spark.sql.catalyst.expressions.aggregate
+      .TypedImperativeAggregate[CoOccurrenceTopK.CountMap]
+    with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
+  import CoOccurrenceTopK.CountMap
+  require(k > 0, "co_occurrence_top_k needs k > 0")
+
+  override def left: Expression = ids
+  override def right: Expression = self
+
+  override def checkInputDataTypes(): TypeCheckResult = (ids.dataType, self.dataType) match {
+    case (ArrayType(LongType, _), LongType) => TypeCheckResult.TypeCheckSuccess
+    case (a, s) => TypeCheckResult.TypeCheckFailure(
+      s"co_occurrence_top_k expects (ARRAY<BIGINT>, BIGINT), got " +
+        s"(${a.catalogString}, ${s.catalogString})")
+  }
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("dst", LongType, nullable = false),
+    StructField("both", LongType, nullable = false))), containsNull = false)
+  override def nullable: Boolean = false
+
+  override def createAggregationBuffer(): CountMap = new CountMap(16)
+
+  override def update(b: CountMap,
+      input: org.apache.spark.sql.catalyst.InternalRow): CountMap = {
+    val arr = ids.eval(input).asInstanceOf[ArrayData]
+    val s = self.eval(input)
+    if (arr != null && s != null) {
+      val me = s.asInstanceOf[Long]
+      var i = 0
+      while (i < arr.numElements()) {
+        if (!arr.isNullAt(i)) {
+          val id = arr.getLong(i)
+          if (id != me) b.add(id, 1L)
+        }
+        i += 1
+      }
+    }
+    b
+  }
+
+  override def merge(b: CountMap, o: CountMap): CountMap = {
+    var s = 0
+    while (s < o.keys.length) {
+      if (o.counts(s) != 0L) b.add(o.keys(s), o.counts(s))
+      s += 1
+    }
+    b
+  }
+
+  override def eval(b: CountMap): Any = {
+    val keys = b.keys; val counts = b.counts
+    // slot i ranks before slot j: more co-occurrences, then the smaller id
+    def before(i: Int, j: Int): Boolean =
+      counts(i) > counts(j) || (counts(i) == counts(j) && keys(i) < keys(j))
+    // bounded heap of slots whose root is the WORST kept entry
+    val m = math.min(k, b.size)
+    val heap = new Array[Int](m)
+    var n = 0
+    def siftDown(from: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1; val r = l + 1
+        var w = i
+        if (l < n && before(heap(w), heap(l))) w = l
+        if (r < n && before(heap(w), heap(r))) w = r
+        if (w == i) done = true
+        else { val t = heap(i); heap(i) = heap(w); heap(w) = t; i = w }
+      }
+    }
+    var s = 0
+    while (s < keys.length) {
+      if (counts(s) != 0L) {
+        if (n < m) {
+          heap(n) = s; n += 1
+          var i = n - 1
+          while (i > 0 && before(heap((i - 1) / 2), heap(i))) {
+            val p = (i - 1) / 2
+            val t = heap(i); heap(i) = heap(p); heap(p) = t; i = p
+          }
+        } else if (m > 0 && before(s, heap(0))) {
+          heap(0) = s; siftDown(0)
+        }
+      }
+      s += 1
+    }
+    // pop worst-first into the tail so the array ends in rank order
+    val rows = new Array[Any](m)
+    while (n > 0) {
+      val top = heap(0)
+      rows(n - 1) = org.apache.spark.sql.catalyst.InternalRow(keys(top), counts(top))
+      n -= 1; heap(0) = heap(n); siftDown(0)
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+  }
+
+  override def serialize(b: CountMap): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(4 + 16 * b.size)
+    bb.putInt(b.size)
+    var s = 0
+    while (s < b.keys.length) {
+      if (b.counts(s) != 0L) bb.putLong(b.keys(s)).putLong(b.counts(s))
+      s += 1
+    }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): CountMap = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val b = new CountMap(n)
+    (0 until n).foreach(_ => b.add(bb.getLong, bb.getLong))
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(n: Int): CoOccurrenceTopK =
+    copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): CoOccurrenceTopK =
+    copy(inputAggBufferOffset = n)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CoOccurrenceTopK =
+    copy(ids = newLeft, self = newRight)
+  override def prettyName: String = "co_occurrence_top_k"
+}
+
+object CoOccurrenceTopK {
+  /** Open-addressing long→long count map (linear probing, load ≤ 1/2).
+    * A slot is empty iff its count is 0 — every stored count is ≥ 1 — so
+    * any long, 0 and negatives included, is a valid key. */
+  final class CountMap(expected: Int) {
+    var keys: Array[Long] = new Array[Long](capacityFor(expected))
+    var counts: Array[Long] = new Array[Long](keys.length)
+    var size: Int = 0
+
+    private def capacityFor(n: Int): Int =
+      Integer.highestOneBit(math.max(16, n) * 2 - 1) << 1
+
+    private def slot(key: Long, ks: Array[Long], cs: Array[Long]): Int = {
+      val mask = ks.length - 1
+      // murmur3 fmix64: sequential ids must not cluster in the table
+      var h = key
+      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+      h ^= h >>> 33
+      var s = h.toInt & mask
+      while (cs(s) != 0L && ks(s) != key) s = (s + 1) & mask
+      s
+    }
+
+    def add(key: Long, c: Long): Unit = {
+      val s = slot(key, keys, counts)
+      if (counts(s) == 0L) {
+        keys(s) = key; size += 1
+        counts(s) = c
+        if (size * 2 > keys.length) grow()
+      } else counts(s) += c
+    }
+
+    private def grow(): Unit = {
+      val ok = keys; val oc = counts
+      keys = new Array[Long](ok.length * 2)
+      counts = new Array[Long](keys.length)
+      var i = 0
+      while (i < ok.length) {
+        if (oc(i) != 0L) {
+          val s = slot(ok(i), keys, counts)
+          keys(s) = ok(i); counts(s) = oc(i)
+        }
+        i += 1
+      }
+    }
+  }
+}
+
 /** HDR-histogram-style quantile sketch over non-negative longs — fixed
   * exponential buckets (value's power-of-two exponent) each split into 16
   * LINEAR sub-buckets, as a native typed imperative aggregate. The state
@@ -938,6 +1126,9 @@ object GraftFunctions {
   def bottom_k(c: Column, k: Int): Column =
     GraftSqlInternal.column(
       BottomK(GraftSqlInternal.expression(c), k).toAggregateExpression())
+  def co_occurrence_top_k(ids: Column, self: Column, k: Int): Column =
+    GraftSqlInternal.column(CoOccurrenceTopK(GraftSqlInternal.expression(ids),
+      GraftSqlInternal.expression(self), k).toAggregateExpression())
   def hdr_hist_sketch(c: Column): Column =
     GraftSqlInternal.column(
       HdrHistSketch(GraftSqlInternal.expression(c)).toAggregateExpression())

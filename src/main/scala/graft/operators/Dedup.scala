@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import TextOps._
 
@@ -197,8 +198,10 @@ object Dedup {
       .distinct() // a pair may agree on several chunks
   }
 
-  /** Shared discovery pipeline for all-pairs shingle overlap scores:
-    * distinct shingles, optional stop-shingle filter (shingles in >
+  /** Shared discovery pipeline for the THRESHOLD pair scores
+    * ([[ngramJaccardPairs]], [[containmentPairs]]) — both need every
+    * overlapping pair together with both set sizes, so they keep the join
+    * shape: distinct shingles, optional stop-shingle filter (shingles in >
     * maxDocFreq documents carry no near-dup signal and dominate the
     * equi-join fanout; dropped BEFORE sizing so the score space is the
     * filtered one — oracles apply the identical filter), set-size agg,
@@ -207,7 +210,8 @@ object Dedup {
     * sides; all references canonicalize to the same distinct exchange,
     * which AQE stage reuse computes once — an explicit cache measured
     * slower. Returns intersections joined with both set sizes:
-    * (id_a, id_b, both, sz_a, sz_b). */
+    * (id_a, id_b, both, sz_a, sz_b). [[lexicalKnn]] needs neither sizes
+    * nor pair rows and does not go through here. */
   private def pairOverlaps(
       df: DataFrame, idCol: String, textCol: String,
       k: Int, maxDocFreq: Option[Int]): DataFrame = {
@@ -231,23 +235,47 @@ object Dedup {
   }
 
   /** Lexical k-nearest-neighbors: per document, the `topK` documents
-    * sharing the most distinct k-shingles — the shingle-overlap analogue
-    * of embedding KNN, used for cluster seeding and near-dup triage. The
-    * stop-shingle cap (`maxDocFreq`) bounds every join bucket, so the
-    * discovery cost is candidate-proportional at any corpus size; ranking
-    * is a doc-partitioned window over the symmetrized pair list (each
-    * unordered pair ranks in both directions), never global. All-integer
-    * scores — engine-exact. */
+    * sharing the most distinct k-shingles (ties broken by the smaller id),
+    * ranked 1..topK — the shingle-overlap analogue of embedding KNN, used
+    * for cluster seeding and near-dup triage. Ids must be integral; they
+    * are counted as BIGINT and returned in the input's type. Null ids are
+    * ignored, and a document sharing no kept shingle emits no rows.
+    *
+    * Plan: posting-list counting with no pair row anywhere. The shingles
+    * are hash-partitioned by code; one window counts each code's document
+    * frequency, and only codes with 2 ≤ df ≤ `maxDocFreq` go on to a second
+    * window that collects the code's posting list (so a hot code never
+    * builds a list and every list holds ≤ maxDocFreq ids). Each
+    * (document, posting list) row is hash-partitioned by document, and
+    * [[graft.functions.CoOccurrenceTopK]] counts co-occurring ids and keeps
+    * the best `topK` per document in one aggregate. Both exchanges use an
+    * explicit partition count: their cost is CPU proportional to the
+    * posting-list fan-out, not to shuffle bytes, so AQE's by-bytes
+    * coalescing would serialize them (the scale_hash_chain precedent).
+    * All-integer scores — engine-exact; identical to a row_number over the
+    * symmetrized pair counts ordered by (shared desc, neighbor asc). */
   def lexicalKnn(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, topK: Int = 3, maxDocFreq: Int = 50): DataFrame = {
-    val ov = pairOverlaps(df, idCol, textCol, k, Some(maxDocFreq))
-    val sym = ov.select(col("id_a").as("src"), col("id_b").as("dst"), col("both"))
-      .unionAll(ov.select(col("id_b").as("src"), col("id_a").as("dst"), col("both")))
-    val w = Window.partitionBy("src").orderBy(col("both").desc, col("dst").asc)
-    sym.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= topK)
-      .select(col("src").as(idCol), col("dst").as("neighbor_id"),
-        col("both").as("shared_shingles"), col("rnk"))
+    import graft.functions.GraftFunctions.co_occurrence_top_k
+    val idType = df.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"lexicalKnn needs an integral id column, got ${idType.catalogString}")
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val byCode = Window.partitionBy("code")
+    shingles(df.where(col(idCol).isNotNull), idCol, textCol, k)
+      .select(col(idCol).cast("long").as("src"), col("code"))
+      .repartition(parts, col("code"))
+      .withColumn("df", count(lit(1)).over(byCode))
+      .where(col("df").between(2, maxDocFreq))
+      .withColumn("ids", collect_list(col("src")).over(byCode))
+      .repartition(parts, col("src"))
+      .groupBy("src")
+      .agg(co_occurrence_top_k(col("ids"), col("src"), topK).as("nb"))
+      .select(col("src"), posexplode(col("nb")).as(Seq("pos", "nb")))
+      .select(col("src").cast(idType).as(idCol),
+        col("nb.dst").cast(idType).as("neighbor_id"),
+        col("nb.both").as("shared_shingles"),
+        (col("pos") + 1).cast("long").as("rnk"))
   }
 
   /** Exact n-gram Jaccard similarity for pairs sharing ≥ 1 k-shingle:

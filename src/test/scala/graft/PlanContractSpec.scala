@@ -843,12 +843,18 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lexical knn: bucket-bounded discovery, doc-partitioned rank") {
+    // posting lists are built under code-partitioned windows and ranked by
+    // one per-document aggregate: no (doc, doc) pair row ever exists
     val plan = planOf("sim_knn_lexical")
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"),
-      s"all-pairs join crept into lexical knn:\n$plan")
-    assert(plan.contains("windowspecdefinition(src"),
-      s"rank window must partition by the source doc:\n$plan")
+    assert(!plan.contains("Join"), s"no pair row may exist — join-free:\n$plan")
+    assert(plan.contains("co_occurrence_top_k"),
+      s"ranking must be the fused co-occurrence aggregate:\n$plan")
+    val specs = "windowspecdefinition\\((\\w+)".r.findAllMatchIn(plan)
+      .map(_.group(1)).toSet
+    assert(specs == Set("code"),
+      s"the only windows partition by shingle code, got $specs:\n$plan")
+    assert(plan.contains("hashpartitioning(src"),
+      s"posting lists must be hash-partitioned by source doc:\n$plan")
   }
 
   test("schema evolution: merged read stays join-free") {
@@ -946,7 +952,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // driver's range-base collect and the final window — one orders scan
     // instead of two), so the returned plan starts from the materialized
     // day table (Scan ExistingRDD) and the per-day rank window is asserted
-    // on the BASE's own plan, built the same way the query builds it.
+    // on the base's own plan, from the builder the query checkpoints.
     val plan = planOf("rel_skyline")
     assert(plan.contains("Scan ExistingRDD"),
       s"per-day Pareto base must be materialized once (checkpoint):\n$plan")
@@ -954,18 +960,8 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"prefix max must run range-partitioned, not global:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), s"non-equi join:\n$plan")
-    // the day-rank window lives below the checkpoint: rebuild the base
-    // subplan (same expressions as rel_skyline's `best`, pre-checkpoint)
-    // and hold it to the original contract
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val g = spark.read.parquet(s"$sfDir/orders.parquet")
-      .groupBy(to_date(col("o_orderdate")).as("day"),
-        col("o_totalprice").as("price"))
-      .agg(count(lit(1)).as("n_orders"))
-    val wd = Window.partitionBy("day").orderBy(col("price").desc)
-    val basePlan = g.withColumn("rn", row_number().over(wd))
-      .where(col("rn") === 1)
+    val basePlan = SparkEntry.skylineDayBest(
+        spark.read.parquet(s"$sfDir/orders.parquet"))
       .queryExecution.executedPlan.toString
     assert("windowspecdefinition\\(day".r.findFirstIn(basePlan).isDefined,
       s"per-day rank window must partition by day:\n$basePlan")

@@ -1027,6 +1027,92 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.groupBy(_._1).values.forall(_.length <= 3))
   }
 
+  /** Seeded lexical-KNN corpus: 80 documents over a small, skewed
+    * vocabulary ("ab" is drawn 5 times in 8), so shared shingles, count
+    * ties and hot codes are common; plus one document that shares nothing
+    * and two null-id rows copying real documents' text. */
+  private lazy val knnCorpus: Seq[(java.lang.Long, String)] = {
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("ab", "ab", "ab", "ab", "ab", "cd", "efg", "hi")
+    val docs = (0L until 80L).map { i =>
+      (java.lang.Long.valueOf(i * 3 - 40),
+        Seq.fill(6 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    docs ++ Seq((java.lang.Long.valueOf(1000L), "qwertyuiopqwertyuiop"),
+      (null, docs(0)._2), (null, docs(1)._2))
+  }
+
+  private def knnReference(corpus: Seq[(java.lang.Long, String)], k: Int,
+      topK: Int, maxDocFreq: Int): Seq[(Long, Long, Long, Long)] = {
+    val sets = corpus.collect { case (id, t) if id != null =>
+      id.longValue -> (if (t.length < k) Set.empty[String] else t.sliding(k).toSet)
+    }
+    val df = sets.flatMap(_._2.toSeq).groupBy(identity).map { case (c, v) => c -> v.size }
+    val kept = sets.map { case (id, s) => id -> s.filter(c => df(c) >= 2 && df(c) <= maxDocFreq) }
+    kept.flatMap { case (a, sa) =>
+      kept.collect { case (b, sb) if b != a && (sa & sb).nonEmpty => (b, (sa & sb).size.toLong) }
+        .sortBy { case (b, n) => (-n, b) }.take(topK).zipWithIndex
+        .map { case ((b, n), r) => (a, b, n, r + 1L) }
+    }.sorted
+  }
+
+  test("lexical knn equals a plain-Scala posting-list reference") {
+    import org.apache.spark.sql.types._
+    val df = spark.createDataFrame(
+      knnCorpus.map { case (i, t) => org.apache.spark.sql.Row(i, t) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+      .repartition(3)
+    // the fixture must exercise hot codes and rank ties, or it proves little
+    val sets = knnCorpus.collect { case (id, t) if id != null => t.sliding(8).toSet }
+    val maxDf = sets.flatten.groupBy(identity).values.map(_.size).max
+    assert(maxDf > 50, s"no hot code at maxDocFreq=50 (max df $maxDf)")
+    val ref3 = knnReference(knnCorpus, 8, 1000, 50)
+    assert(ref3.groupBy(_._1).values.exists { rows =>
+      rows.size > 3 && rows(2)._3 == rows(3)._3 }, "no tie at the topK=3 boundary")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (parts <- Seq("1", "7")) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        // at 7 partitions also force the object-hash aggregate onto its
+        // sort-based fallback, so buffers are serialized and merged
+        spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+          if (parts == "7") "2" else "128")
+        for (topK <- Seq(1, 3, 1000); maxDocFreq <- Seq(3, 50)) {
+          val got = Dedup.lexicalKnn(df, "doc_id", "text", k = 8, topK = topK,
+              maxDocFreq = maxDocFreq)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+            .toSeq.sorted
+          val want = knnReference(knnCorpus, 8, topK, maxDocFreq)
+          assert(want.nonEmpty)
+          assert(got == want, s"parts=$parts topK=$topK maxDocFreq=$maxDocFreq")
+          assert(!got.exists(_._1 == 1000L), "a document sharing no kept code emits no rows")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    }
+  }
+
+  test("co_occurrence_top_k: merged partial counts, any long id, bounded output") {
+    import spark.implicits._
+    import graft.functions.GraftFunctions.co_occurrence_top_k
+    // group 1's lists are spread over 5 input partitions, so the final
+    // aggregate merges deserialized partial buffers; the ids span the
+    // whole long range and enough distinct ids to grow the count map
+    val ids = Seq(Long.MinValue, -1L, 0L, Long.MaxValue) ++ (1L to 300L)
+    val lists = (0 until 20).map(r => (1L, ids.filter(x => (x + r) % 3 != 0) :+ 1L))
+    val want = lists.flatMap(_._2).filter(_ != 1L).groupBy(identity)
+      .map { case (x, v) => (x, v.size.toLong) }.toSeq.sortBy { case (x, n) => (-n, x) }
+    val df = lists.toDF("src", "ids").repartition(5)
+    def topK(k: Int) = df.groupBy("src").agg(co_occurrence_top_k($"ids", $"src", k).as("nb"))
+      .select($"nb").head().getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(topK(5) == want.take(5))
+    // k far beyond the neighbour count: returns what exists, allocates no more
+    assert(topK(Int.MaxValue) == want)
+  }
+
   test("pagerank: hub dominates a star, leaves tie, mass is conserved up to floor loss") {
     import spark.implicits._
     // undirected star: center 0 <-> leaves 1..6
