@@ -21,6 +21,9 @@ for sf in $SFS; do
   note "oracle gate sf$sf"
   out="/tmp/gate_verify_sf$sf"
   rm -rf "$out"
+  # Verify runs at GraftSession's default of 32 cores unless told
+  # otherwise; the gate keeps its long-standing local[4]
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-4} \
   sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" \
     > "/tmp/gate_verify_sf$sf.log" 2>&1 || { echo "GATE: Verify sf$sf FAILED (see /tmp/gate_verify_sf$sf.log)"; FAIL=1; }
   # sf0.1: the heaviest DuckDB twins (recursive-CC clusters over the full

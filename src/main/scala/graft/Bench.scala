@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.log.{ReadConsistency, WalrusLog}
@@ -20,36 +19,9 @@ import graft.streaming.WalrusStreams
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpusSpec = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpusSpec]")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // local-FS parity with the reference's raw-byte file IO: skip
-      // Hadoop's .crc sidecar files + CRC32 of every byte (entry
-      // integrity is the per-row FNV column + parquet footer checks)
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // always use the serialized sort shuffle writer: the bypass writer
-      // creates a file per (map task × reduce partition) — quadratic file
-      // ops that dominate small-stage latency locally, and it never
-      // applies at cluster scale (> 200 reduce partitions) anyway
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // shuffle files are transient scratch — put them on tmpfs so the
-      // timed window doesn't pay disk for them twice (write + read back).
-      // The reference's no-fsync write bench similarly never waits on
-      // durable storage; our DATA files still land on the real filesystem
-      // via the commit protocol. On a cluster this is "shuffle on local
-      // NVMe", the standard deployment.
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // parsed once: a non-integer spec such as "*" is still a valid local[]
-    // master, and counts as the parallelism it resolved to
-    val cpus = scala.util.Try(cpusSpec.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
+    val spark = GraftSession.local()
+    // the resolved core count: GraftSession sizes shuffle partitions to it
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // Scale-out legibility (VERDICT r13 item 1): count submitted stages and
     // tasks per timed query, keyed by the job group the sweep sets below.

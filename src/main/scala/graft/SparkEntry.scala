@@ -134,7 +134,6 @@ object SparkEntry {
       |  FROM part, s_cnt, (SELECT unnest(generate_series(0, 3)) AS i))""".stripMargin
 
   // ------------------------------------------------------- log-layer setup
-  private val logCache = TrieMap.empty[(String, String), WalrusLog]
   private val FixedTs = new Timestamp(1704067200000L) // deterministic ingest ts
 
   /** Topic regex probed by log_topic_pattern (full-match, Java syntax =
@@ -166,47 +165,124 @@ object SparkEntry {
     else Files.createTempDirectory(prefix)
   }
 
-  /** Events ingested once per (sfDir, cfg) into a scratch WalrusLog:
-    * topic = event_type, value = utf-8 props, arrival order = event_id. */
-  private def eventsLog(spark: SparkSession, dir: String, key: String,
-      cfg: LogConfig): WalrusLog =
-    logCache.getOrElseUpdate((dir, key), {
-      val root = Files.createTempDirectory(s"graft-log-$key-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = cfg)
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
+  // ------------------------------------------------------ fixture registry
+  /** A scratch fixture (log or parquet layout) the queries reading it
+    * share: built at most once per (sfDir, key). Every builder is
+    * deterministic, so a query observes the identical fresh state whether
+    * it or [[warmup]] built the fixture. */
+  private[graft] final class Fixture[A](val key: String,
+      build: (SparkSession, String) => A) {
+    def apply(spark: SparkSession, dir: String): A =
+      fixtureCache.getOrElseUpdate((dir, key), build(spark, dir)).asInstanceOf[A]
+    def isBuilt(dir: String): Boolean = fixtureCache.contains((dir, key))
+  }
+  private val fixtureCache = TrieMap.empty[(String, String), Any]
+  private val registry = scala.collection.mutable.ArrayBuffer.empty[Fixture[_]]
+
+  /** Every fixture, in declaration order. */
+  private[graft] def fixtures: Seq[Fixture[_]] = registry.toSeq
+
+  private def fixture[A](key: String)(build: (SparkSession, String) => A): Fixture[A] = {
+    val f = new Fixture(key, build)
+    registry += f
+    f
+  }
+
+  private def scratchDir(key: String): String =
+    Files.createTempDirectory(s"graft-$key-").toString
+
+  /** Every fixture log reads AtLeastOnce(5000) unless it says otherwise. */
+  private val FixtureConsistency = ReadConsistency.AtLeastOnce(5000)
+
+  /** The fixtures' one log constructor. */
+  private def openLog(spark: SparkSession, root: String, namespace: String = "default",
+      consistency: ReadConsistency = FixtureConsistency,
+      cfg: LogConfig = LogConfig()): WalrusLog =
+    new WalrusLog(spark, root, namespace, consistency, cfg)
+
+  /** A log on a fresh scratch root, opened and then filled by `fill`. */
+  private def logFixture(key: String, consistency: ReadConsistency = FixtureConsistency)(
+      fill: (SparkSession, String, WalrusLog) => Unit): Fixture[WalrusLog] =
+    fixture(key) { (spark, dir) =>
+      val log = openLog(spark, scratchDir(key), consistency = consistency)
+      fill(spark, dir, log)
       log
-    })
+    }
 
-  private def mainLog(spark: SparkSession, dir: String): WalrusLog =
-    eventsLog(spark, dir, "main", LogConfig())
+  /** A parquet layout written by `write` to `<fresh scratch dir>/<leaf>`;
+    * the fixture value is that path. */
+  private def dirFixture(key: String, leaf: String)(
+      write: (SparkSession, String, String) => Unit): Fixture[String] =
+    fixture(key) { (spark, dir) =>
+      val out = s"${scratchDir(key)}/$leaf"
+      write(spark, dir, out)
+      out
+    }
 
-  private val nsFedCache = TrieMap.empty[String, String]
+  /** Events as log entries: topic = event_type unless given, value = the
+    * utf-8 of `value` (props unless given), arrival order `_seq` =
+    * event_id. */
+  private def eventEntries(spark: SparkSession, dir: String,
+      value: Column = col("props"), topic: Column = col("event_type")): DataFrame =
+    events(spark, dir).select(topic.as("topic"), encode(value, "UTF-8").as("value"),
+      col("event_id").as("_seq"))
+
+  /** Appends `ev` as THREE commits, split at `_seq` = n/3 and 2n/3 (n = its
+    * row count), running `afterCommit(i)` after commit i. */
+  private def appendThirds(log: WalrusLog, ev: DataFrame)(
+      afterCommit: Int => Unit = _ => ()): Unit = {
+    val cached = ev.cache()
+    val n = cached.count()
+    val (cut1, cut2) = (n / 3, 2 * n / 3)
+    Seq(col("_seq") < cut1, col("_seq") >= cut1 && col("_seq") < cut2,
+        col("_seq") >= cut2).zipWithIndex.foreach { case (slice, i) =>
+      log.appendDF(cached.where(slice), Some(col("_seq")), FixedTs)
+      afterCommit(i)
+    }
+    cached.unpersist()
+  }
+
+  /** Per-topic appended counts — after commit i of a fresh log, commit
+    * i's per-topic range ends. */
+  private def appendedCounts(log: WalrusLog): Map[String, Long] =
+    log.topicNames.map(t => t -> log.totalAppended(t)).toMap
+
+  /** Commit i takes `_seq % 3 == i`, stamped i hours after FixedTs. */
+  private def appendHourly(log: WalrusLog, ev: DataFrame): Unit =
+    (0 until 3).foreach { i =>
+      log.appendDF(ev.where(col("_seq") % 3 === i), Some(col("_seq")),
+        new Timestamp(FixedTs.getTime + i * 3600L * 1000L))
+    }
+
+  // ---------------------------------------------------------- the fixtures
+  /** Events ingested once per sfDir into a scratch WalrusLog:
+    * topic = event_type, value = utf-8 props, arrival order = event_id. */
+  private val mainLog = logFixture("main") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir), Some(col("_seq")), FixedTs)
+  }
+
+  /** Same data as [[mainLog]], reopened with maxSegmentEntries=50: recovery
+    * replays the commit log under the new config, so segment accounting is
+    * recomputed without re-ingesting anything. */
+  private val segLog = fixture("seg50") { (spark, dir) =>
+    val main = mainLog(spark, dir)
+    openLog(spark, main.root, main.namespace, cfg = LogConfig(maxSegmentEntries = 50))
+  }
+
   /** Documents sharded into ONE WalrusLog NAMESPACE PER LANG under a
     * single root (topic = source, value = utf-8 text, arrival = doc_id) —
     * the multi-tenant layout `walrus_namespaces` federates. Built once per
-    * sfDir; each namespace lands in one commit. */
-  private def nsFedRoot(spark: SparkSession, dir: String): String =
-    nsFedCache.getOrElseUpdate(dir, {
-      val root = Files.createTempDirectory("graft-log-nsfed-").toString
-      val langs = table(spark, dir, "documents").select("lang").distinct()
-        .collect().map(_.getString(0)).sorted
-      langs.foreach { lang =>
-        val log = new WalrusLog(spark, root, lang,
-          consistency = ReadConsistency.AtLeastOnce(5000))
-        val in = table(spark, dir, "documents")
-          .where(col("lang") === lang)
-          .select(col("source").as("topic"),
-            encode(col("text"), "UTF-8").as("value"),
-            col("doc_id").as("_seq"))
-        log.appendDF(in, Some(col("_seq")), FixedTs)
-      }
-      root
-    })
+    * sfDir; each namespace lands in one commit. The value is the root. */
+  private val nsFedRoot = fixture("nsfed") { (spark, dir) =>
+    val root = scratchDir("nsfed")
+    val docs = table(spark, dir, "documents")
+    docs.select("lang").distinct().collect().map(_.getString(0)).sorted.foreach { lang =>
+      openLog(spark, root, lang).appendDF(docs.where(col("lang") === lang)
+        .select(col("source").as("topic"), encode(col("text"), "UTF-8").as("value"),
+          col("doc_id").as("_seq")), Some(col("_seq")), FixedTs)
+    }
+    root
+  }
 
   /** Lineitem mirrored once per sfDir into a scratch log — topic =
     * ship YEAR (`ship-1997`), value = JSON of the Q6 measure columns.
@@ -217,118 +293,62 @@ object SparkEntry {
     * distributed-walrus/src/controller/mod.rs:209-224). Doubles survive
     * the JSON hop exactly: to_json emits Jackson's shortest round-trip
     * form and from_json parses it back to the identical IEEE value. */
-  private def lineitemLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "lineitem"), {
-      val root = Files.createTempDirectory("graft-log-li-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val li = table(spark, dir, "lineitem").select(
-        concat(lit("ship-"), year(col("l_shipdate"))).as("topic"),
-        encode(to_json(struct(
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))),
-          "UTF-8").as("value"),
-        (col("l_orderkey") * 10 + col("l_linenumber")).as("_seq"))
-      log.appendDF(li, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val lineitemLog = logFixture("lineitem") { (spark, dir, log) =>
+    log.appendDF(table(spark, dir, "lineitem").select(
+      concat(lit("ship-"), year(col("l_shipdate"))).as("topic"),
+      encode(to_json(struct(
+        col("l_quantity"), col("l_extendedprice"), col("l_discount"))),
+        "UTF-8").as("value"),
+      (col("l_orderkey") * 10 + col("l_linenumber")).as("_seq")),
+      Some(col("_seq")), FixedTs)
+  }
 
   /** Events mirrored once with every 5th payload truncated mid-JSON —
     * the planted-corruption fixture behind the dead-letter-queue query
     * (the oracle reproduces the PLANT rule, not the parse, so the routing
     * split is proven, not assumed). */
-  private def dlqLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "dlq"), {
-      val root = Files.createTempDirectory("graft-log-dlq-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(when(col("event_id") % 5 === 0,
-            expr("substring(props, 1, 4)"))
-          .otherwise(col("props")), "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val dlqLog = logFixture("dlq") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir, value = when(col("event_id") % 5 === 0,
+      expr("substring(props, 1, 4)")).otherwise(col("props"))), Some(col("_seq")), FixedTs)
+  }
 
   /** A 1/23 slice of events mirrored once (topic = event_type) — the
     * consumer-group rebalance fixture: its OWN scratch log because the
     * rebalance query drives a dedicated group's cursors through partial
     * drains (mainLog's groups are owned by log_consumer_lag, NOTES). The
     * slice keeps per-topic counts under one batchRead cap per phase. */
-  private def rebalLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "rebal"), {
-      val root = Files.createTempDirectory("graft-log-rebal-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).where(col("event_id") % 23 === 0).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val rebalLog = logFixture("rebal") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir).where(col("_seq") % 23 === 0),
+      Some(col("_seq")), FixedTs)
+  }
 
   /** A 1/11 slice of events mirrored as THREE commits (split by
     * (event_id div 11) % 3, all topics in every commit) — the
     * offset-islands fixture: a consumption vacuum can then reclaim a
     * commit-granular prefix per the all-topics-below-cursor rule. */
-  private def gapLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "gap"), {
-      val root = Files.createTempDirectory("graft-log-gap-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).where(col("event_id") % 11 === 0)
-        .select(col("event_type").as("topic"),
-          encode(col("props"), "UTF-8").as("value"),
-          col("event_id").as("_seq"),
-          (expr("event_id div 11") % 3).as("_third"))
-      (0 until 3).foreach { j =>
-        log.appendDF(ev.where(col("_third") === j).drop("_third"),
-          Some(col("_seq")), FixedTs)
-      }
-      log
-    })
+  private val gapLog = logFixture("gap") { (spark, dir, log) =>
+    val ev = eventEntries(spark, dir).where(col("_seq") % 11 === 0)
+    (0 until 3).foreach { j =>
+      log.appendDF(ev.where(expr("_seq div 11") % 3 === j), Some(col("_seq")), FixedTs)
+    }
+  }
 
   /** Events mirrored once as "<user_id>|<day>" payloads on one topic —
     * the fixture behind the streaming retention query (user/day must ride
     * IN the payload; mainLog carries only props). */
-  private def retentionLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "ret"), {
-      val root = Files.createTempDirectory("graft-log-ret-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        lit("ret").as("topic"),
-        encode(concat_ws("|", col("user_id"),
-          expr("ts DIV 86400000000000")), "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val retentionLog = logFixture("ret") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir, topic = lit("ret"), value = concat_ws("|",
+      col("user_id"), expr("ts DIV 86400000000000"))), Some(col("_seq")), FixedTs)
+  }
 
-  /** Documents mirrored once into a scratch log: topic "docs",
-    * value = "<doc_id>|<text>", arrival order = doc_id. Shared by the
-    * streaming text/dedup queries. */
   /** Events in THREE commits with ascending append timestamps (T0, +1h,
     * +2h; commit i takes `event_id % 3 == i`, offsets ordered by event_id
     * within each) — the fixture behind the time-index read
     * (`offsetForTimestamp`): entry timestamps vary by commit, exactly as
     * the reference stamps entries at append time. */
-  private def timesLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "times"), {
-      val root = Files.createTempDirectory("graft-log-times-").toString
-      val log = new WalrusLog(spark, root)
-      (0 until 3).foreach { i =>
-        val ev = events(spark, dir).where(col("event_id") % 3 === i).select(
-          col("event_type").as("topic"),
-          encode(col("props"), "UTF-8").as("value"),
-          col("event_id").as("_seq"))
-        log.appendDF(ev, Some(col("_seq")),
-          new Timestamp(FixedTs.getTime + i * 3600L * 1000L))
-      }
-      log
-    })
+  private val timesLog = logFixture("times", ReadConsistency.StrictlyAtOnce) {
+    (spark, dir, log) => appendHourly(log, eventEntries(spark, dir))
+  }
 
   /** [[timesLog]] twin whose first two commits are COMPACTED into one
     * batch: the compaction commit inherits per-topic ts bounds
@@ -338,50 +358,36 @@ object SparkEntry {
     * non-empty, losing time addressing exactly where the log is oldest
     * and largest (the reference never does: file-name ms timestamps,
     * src/wal/paths.rs:47-49). */
-  private def compactTimesLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "ctimes"), {
-      val root = Files.createTempDirectory("graft-log-ctimes-").toString
-      val log = new WalrusLog(spark, root)
-      (0 until 3).foreach { i =>
-        val ev = events(spark, dir).where(col("event_id") % 3 === i).select(
-          col("event_type").as("topic"),
-          encode(col("props"), "UTF-8").as("value"),
-          col("event_id").as("_seq"))
-        log.appendDF(ev, Some(col("_seq")),
-          new Timestamp(FixedTs.getTime + i * 3600L * 1000L))
-      }
+  private val compactTimesLog = logFixture("ctimes", ReadConsistency.StrictlyAtOnce) {
+    (spark, dir, log) =>
+      appendHourly(log, eventEntries(spark, dir))
       require(log.compact(maxSourceBatches = 2).nonEmpty,
         "compaction of the first two commits must succeed")
-      log
-    })
+  }
 
   /** Built through the PUBLIC batch writer (`df.write.format("walruslog")`
     * — the V1-fallback batch write path, twin of the streaming sink), not
     * the WalrusLog API: the fixture IS the test of that surface. seqCol
     * makes per-topic order follow event_id globally, so offsets are
     * deterministic at any shuffle layout. */
-  private def batchWriteLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "batchwrite"), {
-      val root = Files.createTempDirectory("graft-log-batchwrite-").toString
-      events(spark, dir).where(col("event_id") % 5 === 0).select(
-          col("event_type").as("topic"),
-          encode(col("props"), "UTF-8").as("value"),
-          col("event_id").as("seq"))
-        .write.format("walruslog").mode("append")
-        .option("path", root).option("seqCol", "seq").save()
-      new WalrusLog(spark, root)
-    })
+  private val batchWriteLog = fixture("batchwrite") { (spark, dir) =>
+    val root = scratchDir("batchwrite")
+    eventEntries(spark, dir).where(col("_seq") % 5 === 0)
+      .write.format("walruslog").mode("append")
+      .option("path", root).option("seqCol", "_seq").save()
+    openLog(spark, root, consistency = ReadConsistency.StrictlyAtOnce)
+  }
 
-  private def docsLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "docs"), {
-      val root = Files.createTempDirectory("graft-log-docs-").toString
-      val log = new WalrusLog(spark, root)
+  /** Documents mirrored once into a scratch log: topic "docs",
+    * value = "<doc_id>|<text>", arrival order = doc_id. Shared by the
+    * streaming text/dedup queries. */
+  private val docsLog = logFixture("docs", ReadConsistency.StrictlyAtOnce) {
+    (spark, dir, log) =>
       log.appendDF(table(spark, dir, "documents")
         .select(lit("docs").as("topic"),
           encode(concat_ws("|", col("doc_id"), col("text")), "UTF-8").as("value"),
           col("doc_id").as("_seq")), Some(col("_seq")), FixedTs)
-      log
-    })
+  }
 
   /** The streaming read of [[docsLog]] with its wire format decoded back
     * to (doc_id, text, ...) — the format is defined and parsed in ONE
@@ -398,178 +404,76 @@ object SparkEntry {
     * no-data micro-batch (a session is only emitted once the watermark
     * passes its end). The sentinel's own session stays unflushed — it never
     * reaches the sink. */
-  private def sessionLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "session"), {
-      val root = Files.createTempDirectory("graft-log-session-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      val sentinels = ev.select("topic").distinct()
-        .select(col("topic"),
-          encode(lit("""{"k": 1000000}"""), "UTF-8").as("value"),
-          lit(0L).as("_seq"))
-      log.appendDF(sentinels, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val sessionLog = logFixture("session") { (spark, dir, log) =>
+    val ev = eventEntries(spark, dir)
+    log.appendDF(ev, Some(col("_seq")), FixedTs)
+    val sentinels = ev.select("topic").distinct()
+      .select(col("topic"),
+        encode(lit("""{"k": 1000000}"""), "UTF-8").as("value"),
+        lit(0L).as("_seq"))
+    log.appendDF(sentinels, Some(col("_seq")), FixedTs)
+  }
 
   /** Events ingested as three sequential commits, then compacted into one
     * batch — the dump query proves compaction preserves every (topic,
     * offset, value) triple (same oracle as the straight dump). */
-  private def compactLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "compacted"), {
-      val root = Files.createTempDirectory("graft-log-compacted-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      Seq(
-        ev.where(col("_seq") < cut1),
-        ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        ev.where(col("_seq") >= cut2)
-      ).foreach(slice => log.appendDF(slice, Some(col("_seq")), FixedTs))
-      ev.unpersist()
-      require(log.compact(targetFileBytes = 256L << 20).nonEmpty, "compact ran")
-      log
-    })
+  private val compactLog = logFixture("compacted") { (spark, dir, log) =>
+    appendThirds(log, eventEntries(spark, dir))()
+    require(log.compact(targetFileBytes = 256L << 20).nonEmpty, "compact ran")
+  }
 
   /** Events re-encoded as CSV payloads into their own log — the typed-codec
     * surface: the log stores opaque bytes, the relational layer decodes
     * them in place (from_csv here, JSON in log_json_extract). */
-  private def csvLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "csv"), {
-      val root = Files.createTempDirectory("graft-log-csv-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(concat_ws(",", col("event_id"), col("user_id"), col("event_type")),
-          "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      log
-    })
-
-  /** Same data as [[mainLog]], reopened with maxSegmentEntries=50: recovery
-    * replays the commit log under the new config, so segment accounting is
-    * recomputed without re-ingesting anything. */
-  private def segLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "seg50"), {
-      val main = mainLog(spark, dir)
-      new WalrusLog(spark, main.root, main.namespace,
-        ReadConsistency.AtLeastOnce(5000), LogConfig(maxSegmentEntries = 50))
-    })
+  private val csvLog = logFixture("csv") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir, value = concat_ws(",",
+      col("event_id"), col("user_id"), col("event_type"))), Some(col("_seq")), FixedTs)
+  }
 
   /** Events ingested as three sequential commits into a log reserved for
     * the vacuum query (M3 reclamation is destructive — no other query may
-    * read this log). Returns the log plus the per-topic appended counts
-    * snapshotted after commit 1 (= commit 1's per-topic range ends), the
-    * cursor positions that make vacuum() reclaim exactly that batch. */
-  private val vacCache = TrieMap.empty[String, (WalrusLog, Map[String, Long])]
-  private def vacLog(spark: SparkSession, dir: String): (WalrusLog, Map[String, Long]) =
-    vacCache.getOrElseUpdate(dir, {
-      val root = Files.createTempDirectory("graft-log-vac-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      log.appendDF(ev.where(col("_seq") < cut1), Some(col("_seq")), FixedTs)
-      val cuts = log.topicNames.map(t => t -> log.totalAppended(t)).toMap
-      log.appendDF(ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut2), Some(col("_seq")), FixedTs)
-      ev.unpersist()
-      (log, cuts)
-    })
+    * read this log). The value is the log plus the per-topic appended
+    * counts snapshotted after commit 1 (= commit 1's per-topic range
+    * ends), the cursor positions that make vacuum() reclaim exactly that
+    * batch. */
+  private val vacLog = fixture("vac") { (spark, dir) =>
+    val log = openLog(spark, scratchDir("vac"))
+    var cuts = Map.empty[String, Long]
+    appendThirds(log, eventEntries(spark, dir)) { i =>
+      if (i == 0) cuts = appendedCounts(log)
+    }
+    (log, cuts)
+  }
 
   /** Events in three commits (same thirds as [[vacLog]]) on a fresh
     * namespace with ONE group ("planner") seeked to commit 1's cuts —
     * the NON-mutating fixture behind `log_vacuum_plan`: the dry run must
     * see all three commits on every rerun, so it cannot share
     * [[vacLog]], which the destructive `log_vacuum` reclaims from. */
-  private def planLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "vacplan"), {
-      val root = Files.createTempDirectory("graft-log-vacplan-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      log.appendDF(ev.where(col("_seq") < cut1), Some(col("_seq")), FixedTs)
-      val cuts = log.topicNames.map(t => t -> log.totalAppended(t)).toMap
-      log.topicNames.sorted.foreach(t =>
-        log.seek("planner", t, cuts.getOrElse(t, 0L)))
-      log.appendDF(ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut2), Some(col("_seq")), FixedTs)
-      ev.unpersist()
-      log
-    })
+  private val planLog = logFixture("vacplan") { (spark, dir, log) =>
+    appendThirds(log, eventEntries(spark, dir)) { i =>
+      if (i == 0) {
+        val cuts = appendedCounts(log)
+        log.topicNames.sorted.foreach(t => log.seek("planner", t, cuts.getOrElse(t, 0L)))
+      }
+    }
+  }
 
   /** Events in three commits (same thirds as [[vacLog]]) on a fresh
     * namespace with NO consumers — the fixture behind size-based
     * retention (`log_retention_bytes`), which must reclaim storage purely
     * from per-topic payload-byte accounting. */
-  private def retainBytesLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "retainbytes"), {
-      val root = Files.createTempDirectory("graft-log-retain-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      log.appendDF(ev.where(col("_seq") < cut1), Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut2), Some(col("_seq")), FixedTs)
-      ev.unpersist()
-      log
-    })
+  private val retainBytesLog = logFixture("retainbytes") { (spark, dir, log) =>
+    appendThirds(log, eventEntries(spark, dir))()
+  }
 
   /** Events as THREE visible commits (event-id thirds, once per sfDir) —
     * the fixture for per-row commit provenance (`log_commit_provenance`):
     * unlike [[mainLog]] (one commit) or [[churnLog]] (churn leaves one
     * visible), all three publish batches stay live. */
-  private def multiLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "multi"), {
-      val root = Files.createTempDirectory("graft-log-multi-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      log.appendDF(ev.where(col("_seq") < cut1), Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut2), Some(col("_seq")), FixedTs)
-      ev.unpersist()
-      log
-    })
+  private val multiLog = logFixture("multi") { (spark, dir, log) =>
+    appendThirds(log, eventEntries(spark, dir))()
+  }
 
   /** Events through the full storage-churn lifecycle (once per sfDir):
     * two commits → `compact()` merges them (replaces + source deletion)
@@ -577,29 +481,18 @@ object SparkEntry {
     * → `vacuum()` reclaims the compacted batch. The surviving offset
     * space is the dense suffix [c2_t, total_t) per topic — the fixture
     * behind `log_offset_audit_churn`. */
-  private def churnLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "churn"), {
-      val root = Files.createTempDirectory("graft-log-churn-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      val n = ev.count()
-      val cut1 = n / 3
-      val cut2 = 2 * n / 3
-      log.appendDF(ev.where(col("_seq") < cut1), Some(col("_seq")), FixedTs)
-      log.appendDF(ev.where(col("_seq") >= cut1 && col("_seq") < cut2),
-        Some(col("_seq")), FixedTs)
-      val c2 = log.topicNames.map(t => t -> log.totalAppended(t)).toMap
-      require(log.compact(targetFileBytes = 256L << 20).nonEmpty, "compact ran")
-      log.appendDF(ev.where(col("_seq") >= cut2), Some(col("_seq")), FixedTs)
-      ev.unpersist()
-      log.topicNames.sorted.foreach(t => log.seek("gc", t, c2.getOrElse(t, 0L)))
-      require(log.vacuum().nonEmpty, "vacuum reclaimed the compacted batch")
-      log
-    })
+  private val churnLog = logFixture("churn") { (spark, dir, log) =>
+    var c2 = Map.empty[String, Long]
+    appendThirds(log, eventEntries(spark, dir)) {
+      case 1 =>
+        c2 = appendedCounts(log)
+        require(log.compact(targetFileBytes = 256L << 20).nonEmpty, "compact ran")
+      case 2 =>
+        log.topicNames.sorted.foreach(t => log.seek("gc", t, c2.getOrElse(t, 0L)))
+        require(log.vacuum().nonEmpty, "vacuum reclaimed the compacted batch")
+      case _ =>
+    }
+  }
 
   /** Events through the transactional-producer lifecycle (once per
     * sfDir): txn1 stages thirds A (ids ≡ 0 mod 3) and B (≡ 1) across TWO
@@ -608,29 +501,21 @@ object SparkEntry {
     * the visible log is exactly A∪B published as ONE atomic commit —
     * per topic, A's rows take offsets [0, |A|) (append order), then B's.
     * The fixture behind `log_txn_producer`. */
-  private def txnLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "txn"), {
-      val root = Files.createTempDirectory("graft-log-txn-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(col("props"), "UTF-8").as("value"),
-        col("event_id").as("_seq")).cache()
-      ev.count() // materialize once; three stage writes read it
-      val t1 = log.beginTxn()
-      t1.append(ev.where(col("_seq") % 3 === 0), col("_seq"))
-      t1.append(ev.where(col("_seq") % 3 === 1), col("_seq"))
-      val t2 = log.beginTxn()
-      t2.append(ev.where(col("_seq") % 3 === 2), col("_seq"))
-      t2.abort()
-      val t3 = log.beginTxn()
-      t3.append(ev.where(col("_seq") % 3 === 2), col("_seq"))
-      // t3 stays open: its staged spool must stay invisible forever
-      t1.commit(FixedTs)
-      ev.unpersist()
-      log
-    })
+  private val txnLog = logFixture("txn") { (spark, dir, log) =>
+    val ev = eventEntries(spark, dir).cache()
+    ev.count() // materialize once; three stage writes read it
+    val t1 = log.beginTxn()
+    t1.append(ev.where(col("_seq") % 3 === 0), col("_seq"))
+    t1.append(ev.where(col("_seq") % 3 === 1), col("_seq"))
+    val t2 = log.beginTxn()
+    t2.append(ev.where(col("_seq") % 3 === 2), col("_seq"))
+    t2.abort()
+    val t3 = log.beginTxn()
+    t3.append(ev.where(col("_seq") % 3 === 2), col("_seq"))
+    // t3 stays open: its staged spool must stay invisible forever
+    t1.commit(FixedTs)
+    ev.unpersist()
+  }
 
   /** Events as a keyed changelog with planted tombstones (once per
     * sfDir): topic = event_type, entries encode `<user_id>|<payload>`
@@ -638,61 +523,38 @@ object SparkEntry {
     * every event with id ≡ 0 (mod 7) carries an EMPTY payload —
     * `<user_id>|` — the deletion marker. The fixture behind
     * `log_compact_tombstones`. */
-  private def tombLog(spark: SparkSession, dir: String): WalrusLog =
-    logCache.getOrElseUpdate((dir, "tomb"), {
-      val root = Files.createTempDirectory("graft-log-tomb-").toString
-      val log = new WalrusLog(spark, root,
-        consistency = ReadConsistency.AtLeastOnce(5000), cfg = LogConfig())
-      val ev = events(spark, dir).select(
-        col("event_type").as("topic"),
-        encode(concat(col("user_id").cast("string"), lit("|"),
-          when(col("event_id") % 7 === 0, lit("")).otherwise(col("props"))),
-          "UTF-8").as("value"),
-        col("event_id").as("_seq"))
-      log.appendDF(ev, Some(col("_seq")), FixedTs)
-      log
-    })
+  private val tombLog = logFixture("tomb") { (spark, dir, log) =>
+    log.appendDF(eventEntries(spark, dir, value = concat(col("user_id").cast("string"),
+      lit("|"), when(col("event_id") % 7 === 0, lit("")).otherwise(col("props")))),
+      Some(col("_seq")), FixedTs)
+  }
 
-  /** Documents re-written PARTITIONED BY lang (once per sfDir): the
-    * partition-pruning fixture. A lang predicate on this layout prunes
-    * whole directories at planning time — the first and cheapest pruning
-    * layer a 100 TB corpus store relies on (before row-group stats or
-    * row-level filters ever run). */
   /** Events changelog split into 3 parquet files (once per sfDir): the
     * FILE-streaming-source fixture behind `stream_cdc_apply` — with
     * maxFilesPerTrigger=1 the change stream replays as 3 micro-batches
     * whose boundaries (and arrival order) the final state must be
     * independent of. */
-  private val cdcDirCache = TrieMap.empty[String, String]
-  private def cdcStreamDir(spark: SparkSession, dir: String): String =
-    cdcDirCache.getOrElseUpdate(dir, {
-      val out = Files.createTempDirectory("graft-cdc-stream-").toString + "/changes"
-      events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .repartitionByRange(3, col("event_id"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+  private val cdcStreamDir = dirFixture("cdc-stream", "changes") { (spark, dir, out) =>
+    events(spark, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .repartitionByRange(3, col("event_id"))
+      .write.mode("overwrite").parquet(out)
+  }
 
   /** Events' (event_id, item, day) stream split into 3 parquet files
     * (once per sfDir): the file-source fixture behind
     * `stream_decay_topk` — the decayed counters must come out identical
     * whatever the file batch boundaries. */
-  private val decayDirCache = TrieMap.empty[String, String]
-  private def decayStreamDir(spark: SparkSession, dir: String): String =
-    decayDirCache.getOrElseUpdate(dir, {
-      val out = Files.createTempDirectory("graft-decay-stream-").toString + "/days"
-      events(spark, dir)
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").as("item"),
-          expr("ts div 86400000000000").as("day"))
-        .where(col("item").isNotNull)
-        .repartitionByRange(3, col("event_id"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+  private val decayStreamDir = dirFixture("decay-stream", "days") { (spark, dir, out) =>
+    events(spark, dir)
+      .select(col("event_id"),
+        get_json_object(col("props"), "$.k").as("item"),
+        expr("ts div 86400000000000").as("day"))
+      .where(col("item").isNotNull)
+      .repartitionByRange(3, col("event_id"))
+      .write.mode("overwrite").parquet(out)
+  }
 
-  private val coGraphCache = TrieMap.empty[String, String]
   /** The events co-occurrence edge list (the graph family's shared input:
     * user_id × props.$.k, maxUserDegree = 1000) materialized ONCE per
     * sfDir at minShared = 2 — the weakest gate any query uses — and served
@@ -702,70 +564,62 @@ object SparkEntry {
     * queries each rebuilt the edge list from events per run (59 s of the
     * sf0.1 bench); the DuckDB twins keep recomputing from events verbatim,
     * so the oracle still gates the full construction every time. */
-  private def coGraph(spark: SparkSession, dir: String,
-      minShared: Long): DataFrame = {
-    val out = coGraphCache.getOrElseUpdate(dir, {
-      val o = Files.createTempDirectory("graft-cograph-").toString + "/edges"
-      graft.operators.Graph.cooccurrence(
-        table(spark, dir, "events").select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item")),
-        "user_id", "item", minShared = 2L, maxUserDegree = 1000)
-        .coalesce(1).write.mode("overwrite").parquet(o)
-      o
-    })
-    spark.read.parquet(out).where(col("co_users") >= minShared)
+  private val coGraphEdges = dirFixture("cograph", "edges") { (spark, dir, out) =>
+    graft.operators.Graph.cooccurrence(
+      table(spark, dir, "events").select(col("user_id"),
+        get_json_object(col("props"), "$.k").cast("long").as("item")),
+      "user_id", "item", minShared = 2L, maxUserDegree = 1000)
+      .coalesce(1).write.mode("overwrite").parquet(out)
   }
+  private def coGraph(spark: SparkSession, dir: String, minShared: Long): DataFrame =
+    spark.read.parquet(coGraphEdges(spark, dir)).where(col("co_users") >= minShared)
 
-  private val partDirCache = TrieMap.empty[String, String]
-  private def partitionedDocs(spark: SparkSession, dir: String): String =
-    partDirCache.getOrElseUpdate(dir, {
-      val out = Files.createTempDirectory("graft-part-docs-").toString + "/docs"
-      table(spark, dir, "documents")
-        .write.mode("overwrite").partitionBy("lang").parquet(out)
-      out
-    })
+  /** Documents re-written PARTITIONED BY lang (once per sfDir): the
+    * partition-pruning fixture. A lang predicate on this layout prunes
+    * whole directories at planning time — the first and cheapest pruning
+    * layer a 100 TB corpus store relies on (before row-group stats or
+    * row-level filters ever run). */
+  private val partitionedDocs = dirFixture("part-docs", "docs") { (spark, dir, out) =>
+    table(spark, dir, "documents")
+      .write.mode("overwrite").partitionBy("lang").parquet(out)
+  }
 
   /** Documents + embeddings persisted as 8-way bucketed tables on their
     * join keys (once per sfDir): the co-located-join fixture. Two tables
     * bucketed the same way join WITHOUT shuffling either side — at 100 TB
     * the difference between a metadata lookup and re-hashing the corpus
     * over the network every query. Registered as external tables (explicit
-    * tmp path — nothing lands in a warehouse dir). */
-  private val bucketCache = TrieMap.empty[String, (String, String)]
-  private def bucketedTables(spark: SparkSession, dir: String): (String, String) =
-    bucketCache.getOrElseUpdate(dir, {
-      val tag = (dir.hashCode.toLong & 0xffffffffL).toString
-      val (dt, et) = (s"b_docs_$tag", s"b_emb_$tag")
-      val root = Files.createTempDirectory("graft-bucketed-").toString
-      table(spark, dir, "documents")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "doc_id").sortBy("doc_id")
-        .option("path", s"$root/$dt").saveAsTable(dt)
-      table(spark, dir, "embeddings")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(8, "vec_id").sortBy("vec_id")
-        .option("path", s"$root/$et").saveAsTable(et)
-      (dt, et)
-    })
+    * tmp path — nothing lands in a warehouse dir). The value is the two
+    * table names. */
+  private val bucketedTables = fixture("bucketed") { (spark, dir) =>
+    val tag = (dir.hashCode.toLong & 0xffffffffL).toString
+    val (dt, et) = (s"b_docs_$tag", s"b_emb_$tag")
+    val root = scratchDir("bucketed")
+    table(spark, dir, "documents")
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(8, "doc_id").sortBy("doc_id")
+      .option("path", s"$root/$dt").saveAsTable(dt)
+    table(spark, dir, "embeddings")
+      .write.mode("overwrite").format("parquet")
+      .bucketBy(8, "vec_id").sortBy("vec_id")
+      .option("path", s"$root/$et").saveAsTable(et)
+    (dt, et)
+  }
 
   /** Two-generation corpus layout (once per sfDir): batch=0 holds the
     * docs in the ORIGINAL schema, batch=1 adds a quality_milli column —
     * the schema-evolution fixture. A 100 TB corpus is never rewritten
     * when a column is added; readers must merge generations in place. */
-  private val evoDirCache = TrieMap.empty[String, String]
-  private def evolvedDocs(spark: SparkSession, dir: String): String =
-    evoDirCache.getOrElseUpdate(dir, {
-      val out = Files.createTempDirectory("graft-evo-docs-").toString + "/docs"
-      val docs = table(spark, dir, "documents")
-      docs.where(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("text"), col("lang"))
-        .write.parquet(s"$out/batch=0")
-      docs.where(col("doc_id") % 2 =!= 0)
-        .select(col("doc_id"), col("text"), col("lang"),
-          (length(col("text")) % 1000).cast("long").as("quality_milli"))
-        .write.parquet(s"$out/batch=1")
-      out
-    })
+  private val evolvedDocs = dirFixture("evo-docs", "docs") { (spark, dir, out) =>
+    val docs = table(spark, dir, "documents")
+    docs.where(col("doc_id") % 2 === 0)
+      .select(col("doc_id"), col("text"), col("lang"))
+      .write.parquet(s"$out/batch=0")
+    docs.where(col("doc_id") % 2 =!= 0)
+      .select(col("doc_id"), col("text"), col("lang"),
+        (length(col("text")) % 1000).cast("long").as("quality_milli"))
+      .write.parquet(s"$out/batch=1")
+  }
 
   private def entriesToDF(spark: SparkSession, es: Seq[graft.log.WalrusEntry]): DataFrame = {
     val rows = es.map(e => Row(e.topic, e.offset, new String(e.value, "UTF-8")))
@@ -803,11 +657,11 @@ object SparkEntry {
   /** State parallelism for the stateful stream drives. A stateful
     * micro-batch commits one state-store instance per shuffle partition
     * per trigger, so the right number tracks key cardinality and core
-    * count, not a constant: at bench SFs (~100 keys) the r13
-    * FloorKnobProbe measured 8 as the knee (2.83 s at 32 instances vs
-    * 1.32 s at 8 for a zero-work 3-trigger drive), while a 100 TB
-    * deployment with millions of keys wants it to grow with the executor
-    * core count. Derivation: max(8, cores/4) — identical to the measured
+    * count, not a constant: at bench SFs (~100 keys) the r13 A/B
+    * recorded in BASELINE.md measured 8 as the knee (2.83 s at 32
+    * instances vs 1.32 s at 8 for a zero-work 3-trigger drive), while a
+    * 100 TB deployment with millions of keys wants it to grow with the
+    * executor core count. Derivation: max(8, cores/4) — identical to the measured
     * constant at the bench's 8- and 32-core contract points (32/4 = 8;
     * max(8, 2) = 8), scaling with the cluster beyond them.
     * `SPARK_GRAFT_STREAM_STATE_PARTS` overrides for deployments whose key
@@ -848,8 +702,8 @@ object SparkEntry {
     // Right-size the drive's state parallelism, the stream_outer_join
     // knob applied to the SHARED drive: a stateful micro-batch commits
     // one state-store instance per shuffle partition per trigger, and at
-    // toy key cardinalities that is pure fixed overhead — the r13
-    // FloorKnobProbe measured the zero-work 3-trigger drive at 2.0 s
+    // toy key cardinalities that is pure fixed overhead — the r13 A/B
+    // in BASELINE.md measured the zero-work 3-trigger drive at 2.0 s
     // with 32 instances vs 1.0 s with 8 (task launch + store commit
     // scale with instance count; the data stages never need 32-way
     // parallelism at bench SFs). Results are partition-count invariant
@@ -1214,40 +1068,13 @@ object SparkEntry {
     * touch of lineitemLog costs rel_q6_log_scan 3.7 s vs 0.4 s steady-state,
     * nsFedRoot costs log_tvf_namespaces 3.1 s vs 0.05 s, coGraph costs
     * graph_assortativity 1.8 s vs 0.2 s) — an inconsistency, not a
-    * methodology change: this list simply completes the bench's declared
-    * contract for every cached fixture. Each builder is deterministic and
-    * idempotent per (dir), and queries observe the identical fresh state
-    * they saw when they built the fixture themselves. */
-  def warmup(spark: SparkSession, dir: String): Unit = {
-    mainLog(spark, dir)
-    segLog(spark, dir)
-    compactLog(spark, dir)
-    csvLog(spark, dir)
-    vacLog(spark, dir)
-    lineitemLog(spark, dir)
-    dlqLog(spark, dir)
-    rebalLog(spark, dir)
-    gapLog(spark, dir)
-    retentionLog(spark, dir)
-    timesLog(spark, dir)
-    compactTimesLog(spark, dir)
-    batchWriteLog(spark, dir)
-    docsLog(spark, dir)
-    sessionLog(spark, dir)
-    planLog(spark, dir)
-    retainBytesLog(spark, dir)
-    multiLog(spark, dir)
-    churnLog(spark, dir)
-    txnLog(spark, dir)
-    tombLog(spark, dir)
-    nsFedRoot(spark, dir)
-    cdcStreamDir(spark, dir)
-    decayStreamDir(spark, dir)
-    coGraph(spark, dir, minShared = 2L)
-    partitionedDocs(spark, dir)
-    bucketedTables(spark, dir)
-    evolvedDocs(spark, dir)
-  }
+    * methodology change: walking the registry completes the bench's
+    * declared contract for every cached fixture. Each builder is
+    * deterministic and idempotent per (dir), and queries observe the
+    * identical fresh state they saw when they built the fixture
+    * themselves. */
+  def warmup(spark: SparkSession, dir: String): Unit =
+    fixtures.foreach(_(spark, dir))
 
   // ============================================================== queries
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused query timer for plan iteration: times the named
   * `SparkEntry.queries` entries (3 runs each, best + per-run) on
   * `SPARK_GRAFT_SF_DIR` with the same session config as [[graft.Bench]].
@@ -10,19 +8,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val names = if (args.nonEmpty) args.toSeq else Seq("dedup_pipeline")
     val warmDir = "/root/testdata/sf0.001"
     names.foreach { n =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -74,11 +73,7 @@ object CommitScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(10000, 100000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     for (n <- counts; manifest <- Seq(false, true)) {

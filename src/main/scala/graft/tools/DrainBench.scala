@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.log.{LogConfig, ReadConsistency, WalrusLog}
@@ -18,17 +17,7 @@ import graft.log.{LogConfig, ReadConsistency, WalrusLog}
 object DrainBench {
   def main(args: Array[String]): Unit = {
     val runs = args.headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     val big = spark.range(1000000)
       .select(concat(lit("topic-"), (col("id") % 10).cast("string")).as("topic"),

@@ -1,26 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: replay the bench's sweep loop for the named family prefixes
   * (alphabetical order, GC discipline identical to graft.Bench) at
   * SPARK_GRAFT_SF_DIR — used to isolate late-sweep inflation. */
 object FamilySweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val fams = args.toSet
     graft.SparkEntry.warmup(spark, sfDir)
     val warmDir = "/root/testdata/sf0.001"

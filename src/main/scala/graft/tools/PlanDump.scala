@@ -2,13 +2,13 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `PLANS_DUMP.md`: the actual `explain("formatted")` output for
   * the headline queries at the given SF — the evidence backing PLANS.md's
   * claims (pushdown, broadcast choices, exchange reuse, partial aggs).
   *
-  * Usage: sbt "runMain graft.tools.PlanDump [sfDir] [outFile]"
+  * Usage: `SPARK_GRAFT_CPUS=8 sbt "runMain graft.tools.PlanDump [sfDir] [outFile]"`
+  * — the committed PLANS_DUMP.md was generated at 8 cores, and partition
+  * counts in the plans follow the core count.
   */
 object PlanDump {
   private val Headline = Seq(
@@ -65,13 +65,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS_DUMP.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
