@@ -8,7 +8,13 @@ import org.apache.spark.sql.SparkSession
   * the others.
   *
   * Cores come from `SPARK_GRAFT_CPUS` (a positive integer or `*`; 32, the
-  * bench's contract point, when unset), validated before Spark starts. */
+  * bench's contract point, when unset), validated before Spark starts.
+  *
+  * Local file IO starts no child process: `file:` paths use
+  * [[graft.io.ForkFreeLocalFileSystem]] and stream checkpoints
+  * [[graft.io.LocalCheckpointFileManager]]. The log and `WalrusStreams`
+  * get the same without this factory; here it also covers every other
+  * Spark write and checkpoint of the session. */
 private[graft] object GraftSession {
 
   private val CpusVar = "SPARK_GRAFT_CPUS"
@@ -37,8 +43,14 @@ private[graft] object GraftSession {
       .config("spark.ui.enabled", "false")
       // local-FS parity with the reference's raw-byte file IO: skip
       // Hadoop's .crc sidecar files + CRC32 of every byte (entry
-      // integrity is the per-row FNV column + parquet footer checks)
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+      // integrity is the per-row FNV column + parquet footer checks),
+      // and set permissions in-process rather than by spawning `chmod`
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      // stream checkpoints on `file:` paths: temp file + rename(2) over
+      // the fork-free FS instead of FileContext (which spawns readlink and
+      // chmod per checkpoint file); other schemes keep Spark's default
+      .config(graft.io.LocalCheckpointFileManager.ConfKey,
+        classOf[graft.io.LocalCheckpointFileManager].getName)
       // always use the serialized sort shuffle writer: the bypass writer
       // creates a file per (map task × reduce partition) — quadratic file
       // ops that dominate small-stage latency locally, and it never

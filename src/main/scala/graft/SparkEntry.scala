@@ -188,8 +188,24 @@ object SparkEntry {
     f
   }
 
-  private def scratchDir(key: String): String =
-    Files.createTempDirectory(s"graft-$key-").toString
+  /** The one parent of every fixture scratch root this JVM creates,
+    * deleted recursively when the JVM exits. */
+  private[graft] lazy val scratchParent: java.nio.file.Path = {
+    val p = Files.createTempDirectory("graft-fixtures-")
+    sys.addShutdownHook(WalrusLog.deleteRecursively(p))
+    p
+  }
+
+  /** Every scratch root created so far, with the fixture key it is for. */
+  private val scratchRoots = TrieMap.empty[String, String]
+  private[graft] def scratchRootsOf(key: String): Seq[String] =
+    scratchRoots.collect { case (root, k) if k == key => root }.toSeq
+
+  private def scratchDir(key: String): String = {
+    val root = Files.createTempDirectory(scratchParent, s"$key-").toString
+    scratchRoots(root) = key
+    root
+  }
 
   /** Every fixture log reads AtLeastOnce(5000) unless it says otherwise. */
   private val FixtureConsistency = ReadConsistency.AtLeastOnce(5000)
@@ -4300,13 +4316,16 @@ object SparkEntry {
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       s2.conf.set("spark.sql.shuffle.partitions", streamStateParts(s2))
-      // RocksDB's checkpoint manager casts to the checksummed
-      // LocalFileSystem; the bench session pins RawLocalFileSystem
-      // globally AND Hadoop caches FileSystem instances JVM-wide. Session
-      // newHadoopConf() copies SQLConf keys VERBATIM (no spark.hadoop.
-      // prefix stripping), so set the bare hadoop keys: restore the
-      // default impl and bypass the fs cache for conf derived from this
-      // clone.
+      // RocksDB uploads its SST files with Hadoop's copyFromLocalFile,
+      // which goes through FileSystem.getLocal — a cast of the `file:`
+      // FS to the checksummed LocalFileSystem, which GraftSession's
+      // ForkFreeLocalFileSystem (a RawLocalFileSystem) is not. Hadoop
+      // caches FileSystem instances JVM-wide, and session newHadoopConf()
+      // copies SQLConf keys VERBATIM (no spark.hadoop. prefix stripping),
+      // so set the bare hadoop keys: restore the default impl and bypass
+      // the fs cache for conf derived from this clone. Checkpoint files
+      // still go through LocalCheckpointFileManager, which picks its own
+      // filesystem for `file:` paths.
       s2.conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
       s2.conf.set("fs.file.impl.disable.cache", "true")
       import s2.implicits._

@@ -572,13 +572,18 @@ class WalrusLog(
     * stores them (non-nullable, so `required` in the Parquet footer). */
   private val entryFileSchema = StructType(entrySchema.filterNot(_.name == "topic"))
 
-  /** Parquet options of every ingest write. Page-level CRCs are off: the
-    * per-entry FNV column is the integrity check of record (reference
-    * parity), parquet footer checksums still cover metadata. */
+  /** Parquet and Hadoop options of every ingest write. Page-level CRCs
+    * are off: the per-entry FNV column is the integrity check of record
+    * (reference parity), parquet footer checksums still cover metadata.
+    * The log root is always a local path, so the files go through
+    * [[graft.io.ForkFreeLocalFileSystem]] whatever the session's `file:`
+    * filesystem is: no `.crc` sidecars and no `chmod` child process per
+    * file and directory. */
   private def entryWriteOptions: Map[String, String] = Map(
     "compression" -> cfg.compression,
     "parquet.enable.dictionary" -> cfg.dictionaryEncoding.toString,
-    "parquet.page.write-checksum.enabled" -> "false")
+    "parquet.page.write-checksum.enabled" -> "false") ++
+    graft.io.ForkFreeLocalFileSystem.options
 
   /** Shared data-file write. Rows arrive already clustered by topic (range
     * or hash shuffle), but an RDD scan carries no ordering info, so a

@@ -28,7 +28,8 @@ object StreamFloorProbe {
 
   // per-query progress aggregates, attributed by runId registration order
   private case class Agg(var triggers: Int = 0, var triggerMs: Long = 0L,
-      var addBatchMs: Long = 0L, var walMs: Long = 0L,
+      var addBatchMs: Long = 0L, var walCommitMs: Long = 0L,
+      var commitOffsetsMs: Long = 0L,
       var planMs: Long = 0L, var stateCommitMs: Long = 0L,
       var inputRows: Long = 0L)
 
@@ -53,7 +54,8 @@ object StreamFloorProbe {
           a.triggers += 1
           a.triggerMs += d("triggerExecution")
           a.addBatchMs += d("addBatch")
-          a.walMs += d("walCommit") + d("commitOffsets")
+          a.walCommitMs += d("walCommit")
+          a.commitOffsetsMs += d("commitOffsets")
           a.planMs += d("queryPlanning")
           a.stateCommitMs += p.stateOperators
             .map(_.commitTimeMs).sum
@@ -125,9 +127,10 @@ object StreamFloorProbe {
       f"start_stop_floor=$startStopFloorS%.2f s")
 
     // ---- per-query decomposition at sf0.1
-    println("[floor] query, wall_s, n_trig, trig_s, addBatch_s, wal_s, " +
-      "plan_s, stateCommit_s, start_stop_s, floor_est_s, above_floor_s")
+    println("[floor] query, wall_s, n_trig, trig_s, addBatch_s, walCommit_s, " +
+      "commitOffsets_s, plan_s, stateCommit_s, start_stop_s, floor_est_s, above_floor_s")
     var sumWall = 0.0; var sumFloor = 0.0
+    val family = new Agg
     val rows = mutable.ArrayBuffer.empty[String]
     for (q <- streamQueries) {
       current.set(new Agg)
@@ -143,12 +146,22 @@ object StreamFloorProbe {
       sumWall += wall; sumFloor += math.min(wall, floorEst)
       val line = f"[floor] $q%-28s wall=$wall%6.2f trig_n=${a.triggers}%2d " +
         f"trig=${a.triggerMs / 1e3}%5.2f add=${a.addBatchMs / 1e3}%5.2f " +
-        f"wal=${a.walMs / 1e3}%5.2f plan=${a.planMs / 1e3}%5.2f " +
+        f"wal=${a.walCommitMs / 1e3}%5.2f offs=${a.commitOffsetsMs / 1e3}%5.2f " +
+        f"plan=${a.planMs / 1e3}%5.2f " +
         f"state=${a.stateCommitMs / 1e3}%5.2f ss=$startStop%5.2f " +
         f"floor=$floorEst%5.2f above=$above%5.2f rows=$n%d"
       println(line)
       rows += line
+      family.triggers += a.triggers; family.triggerMs += a.triggerMs
+      family.addBatchMs += a.addBatchMs; family.walCommitMs += a.walCommitMs
+      family.commitOffsetsMs += a.commitOffsetsMs
+      family.stateCommitMs += a.stateCommitMs
     }
+    println(f"[floor] PHASES: triggers=${family.triggers} " +
+      f"trigger=${family.triggerMs / 1e3}%.2f s addBatch=${family.addBatchMs / 1e3}%.2f s " +
+      f"walCommit=${family.walCommitMs / 1e3}%.2f s " +
+      f"commitOffsets=${family.commitOffsetsMs / 1e3}%.2f s " +
+      f"stateCommit=${family.stateCommitMs / 1e3}%.2f s")
     println(f"[floor] FAMILY: wall=$sumWall%.1f s, floor_est=$sumFloor%.1f s " +
       f"(${100 * sumFloor / sumWall}%.0f%% of wall), " +
       f"above-floor (data work + any shaveable) = ${sumWall - sumFloor}%.1f s " +

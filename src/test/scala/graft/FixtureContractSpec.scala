@@ -143,4 +143,30 @@ class FixtureContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val missing = SparkEntry.fixtures.filterNot(_.isBuilt(dir)).map(_.key)
     assert(missing.isEmpty, s"warmup left fixtures unbuilt: $missing")
   }
+
+  test("every fixture's scratch root lives under the per-JVM scratch parent") {
+    val dir = privateSfCopy()
+    try checkScratchRoots(dir) finally WalrusLog.deleteRecursively(Paths.get(dir))
+  }
+
+  private def checkScratchRoots(dir: String): Unit = {
+    val parent = SparkEntry.scratchParent
+    // a fixture's roots: the ones it created, plus any log root its value
+    // holds (seg50 reopens main's)
+    val roots = SparkEntry.fixtures.map { f =>
+      val held = f(spark, dir) match {
+        case log: WalrusLog => Seq(log.root)
+        case (log: WalrusLog, _) => Seq(log.root)
+        case path: String => Seq(path)
+        case _ => Nil
+      }
+      f.key -> (held ++ SparkEntry.scratchRootsOf(f.key)).distinct
+    }
+    val rootless = roots.collect { case (k, rs) if rs.isEmpty => k }
+    assert(rootless.isEmpty, s"fixtures with no scratch root: $rootless")
+    val outside = roots.flatMap { case (k, rs) =>
+      rs.filterNot(r => Paths.get(r).startsWith(parent)).map(r => s"$k: $r")
+    }
+    assert(outside.isEmpty, s"roots outside $parent:\n${outside.mkString("\n")}")
+  }
 }
