@@ -71,6 +71,21 @@ LEAKS=$( { grep -rInE "s3://|gs://|AKIA[0-9A-Z]{16}|slack\.com|\.corp\.|\.intern
     src/main src/test build.sbt 2>/dev/null || true; } | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)\s*reference:" )
 if [ -n "$LEAKS" ]; then echo "$LEAKS"; echo "GATE: leak grep hits"; FAIL=1; else echo "clean"; fi
 
+note "per-file Hadoop conf greps (log Parquet IO goes through graft.io.LogParquet)"
+# a fresh Configuration parses core-default.xml on first use; Spark's
+# VectorizedParquetRecordReader.initialize(String path, columns) builds one
+# per file. Only LogParquet, which loads its conf once per JVM, may make one.
+CONFS=$( { grep -rnE "new (org\.apache\.hadoop\.conf\.)?Configuration\(\)" src/main/scala 2>/dev/null || true; } \
+    | grep -v "^src/main/scala/graft/io/LogParquet\.scala:" | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)" )
+# in files that use a Parquet record reader, every initialize call must
+# open a FileSplit (the split-based overload reads the context's conf)
+PATHINIT=$( { grep -rlE "VectorizedParquetRecordReader|SpecificParquetRecordReaderBase" src/main/scala 2>/dev/null || true; } \
+    | xargs -r grep -nH "\.initialize(" | grep -v "\.initialize(new FileSplit(" \
+    | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)" )
+if [ -n "$CONFS$PATHINIT" ]; then
+  echo "$CONFS"; echo "$PATHINIT"; echo "GATE: per-file Hadoop conf hits"; FAIL=1
+else echo "clean"; fi
+
 note "padding greps (no stubs in main)"
 PADS=$( { grep -rn '???' src/main/scala 2>/dev/null || true; } | grep -v MediaCodecStub )
 TODOS=$(grep -rnE "TODO|FIXME" src/main/scala 2>/dev/null || true)

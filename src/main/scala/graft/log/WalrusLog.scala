@@ -255,16 +255,15 @@ class WalrusLog(
           t -> topics.get(t).map(_.nextOffset).getOrElse(0L)).toMap
         val id = nextBatchId
         claimBatchDir(id) { d =>
-          org.apache.spark.sql.graft.GraftSqlInternal.writeParquetFiles(
-            spark, entryFileSchema, entryWriteOptions, byTopic.map { case (t, vs) =>
-              val dir = d.resolve(org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.getPartitionPathString("topic", t))
-              dir.toString -> vs.iterator.zipWithIndex.map { case (v, i) =>
-                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  Array[Any](bases(t) + i, tsUs, v,
-                    graft.functions.Fnv1a64.hash(v), v.length))
-              }
-            })
+          entryFileWriter.write(byTopic.map { case (t, vs) =>
+            val dir = d.resolve(org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.getPartitionPathString("topic", t))
+            dir.toString -> vs.iterator.zipWithIndex.map { case (v, i) =>
+              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+                Array[Any](bases(t) + i, tsUs, v,
+                  graft.functions.Fnv1a64.hash(v), v.length))
+            }
+          })
         }
         val ranges = byTopic.map { case (t, vs) =>
           t -> TopicRange(bases(t), bases(t) + vs.size,
@@ -584,6 +583,13 @@ class WalrusLog(
     "parquet.enable.dictionary" -> cfg.dictionaryEncoding.toString,
     "parquet.page.write-checksum.enabled" -> "false") ++
     graft.io.ForkFreeLocalFileSystem.options
+
+  /** The driver-side commit's Parquet writer, prepared on the first such
+    * commit and reused by every later one: the schema and
+    * [[entryWriteOptions]] are fixed for the life of the log, and
+    * [[appendOnDriver]] writes under the log's monitor. */
+  private lazy val entryFileWriter = new org.apache.spark.sql.graft.GraftSqlInternal
+    .ParquetFilesWriter(spark, entryFileSchema, entryWriteOptions)
 
   /** Shared data-file write. Rows arrive already clustered by topic (range
     * or hash shuffle), but an RDD scan carries no ordering info, so a

@@ -1875,7 +1875,7 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
   // the vectorized reader's partition-column mechanism, zero IO
   private val ConstNames = Set("topic", "_commit")
   private val constCols = schema.fields.filter(f => ConstNames(f.name))
-  private val fileCols = schema.fields.filterNot(f => ConstNames(f.name))
+  private val fileSchema = StructType(schema.fields.filterNot(f => ConstNames(f.name)))
 
   private def constRow(p: WalrusFilePartition): InternalRow =
     new GenericInternalRow(constCols.map {
@@ -1884,14 +1884,13 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
     }.toArray[Any])
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.isInstanceOf[WalrusFilePartition] && fileCols.nonEmpty
+    partition.isInstanceOf[WalrusFilePartition] && fileSchema.nonEmpty
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[WalrusFilePartition]
-    val reader = new VectorizedParquetRecordReader(false, 4096)
+    val reader = graft.io.LogParquet.openColumnar(p.file, fileSchema)
     var ok = false
     try {
-      reader.initialize(p.file, fileCols.map(_.name).toList.asJava)
       reader.initBatch(StructType(constCols.toSeq), constRow(p))
       reader.enableReturningBatches()
       ok = true
@@ -1914,10 +1913,7 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
   private def createCountingReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WalrusFilePartition]
-    val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.file), new org.apache.hadoop.conf.Configuration())
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
-    val rowCount = try footer.getRecordCount finally footer.close()
+    val rowCount = graft.io.LogParquet.rowCount(p.file)
     val row: InternalRow = constRow(p)
     new PartitionReader[InternalRow] {
       private var remaining = rowCount
@@ -1949,7 +1945,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   import SupportsRealTimeRead.RecordStatus
 
   private val nsDir = Paths.get(p.nsDirStr)
-  private val fileCols = schema.fields.filter(_.name != "topic")
+  private val fileSchema = StructType(schema.fields.filter(_.name != "topic"))
   private val hasTopic = schema.fieldNames.contains("topic")
 
   private var commits = WalrusLogSource.listCommits(nsDir).toVector
@@ -2038,11 +2034,10 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
     files match {
       case (t, f) :: rest =>
         files = rest
-        if (fileCols.nonEmpty) {
-          val r = new VectorizedParquetRecordReader(false, 4096)
+        if (fileSchema.nonEmpty) {
+          val r = graft.io.LogParquet.openColumnar(f, fileSchema)
           var ok = false
           try {
-            r.initialize(f, fileCols.map(_.name).toList.asJava)
             if (hasTopic)
               r.initBatch(StructType(Seq(StructField("topic", StringType))),
                 new GenericInternalRow(Array[Any](UTF8String.fromString(t))))
@@ -2051,10 +2046,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
           } finally if (!ok) r.close()
           reader = r
         } else {
-          val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), new org.apache.hadoop.conf.Configuration())
-          val footer = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
-          constRowsLeft = try footer.getRecordCount finally footer.close()
+          constRowsLeft = graft.io.LogParquet.rowCount(f)
           constRow =
             if (hasTopic) new GenericInternalRow(Array[Any](UTF8String.fromString(t)))
             else InternalRow.empty

@@ -51,25 +51,33 @@ object GraftSqlInternal {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Write one Parquet file per `(dir, rows)` pair on the calling thread
-    * with Spark's own Parquet file format: the footer, codec and encodings
-    * a DataFrame write with the same `options` produces, but no Spark job.
-    * Files are named like a write job's (`part-<i>-<uuid>.c000<ext>`);
-    * each `dir` is created as needed. `rows` match `dataSchema`. */
-  def writeParquetFiles(spark: SparkSession, dataSchema: StructType,
-      options: Map[String, String], files: Iterable[(String, Iterator[InternalRow])]): Unit = {
+  /** Spark's own Parquet writer for one data schema and option set,
+    * prepared once: [[write]] then produces the footer, codec and
+    * encodings a DataFrame write with the same `options` would, on the
+    * calling thread and with no Spark job. The session's SQL and hadoop
+    * confs are read when the writer is built, not per write. Not
+    * thread-safe: one writer serves one caller at a time. */
+  final class ParquetFilesWriter(spark: SparkSession, dataSchema: StructType,
+      options: Map[String, String]) {
     import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
-    val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+    private val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    private val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+    private val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
+    private val ctx = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
-    val name = s"${java.util.UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
-    files.iterator.zipWithIndex.foreach { case ((dir, rows), i) =>
-      val w = factory.newInstance(f"$dir/part-$i%05d-$name", dataSchema, ctx)
-      try rows.foreach(w.write) finally w.close()
+    private val extension = factory.getFileExtension(ctx)
+
+    /** Write one Parquet file per `(dir, rows)` pair, named like a write
+      * job's files (`part-<i>-<uuid>.c000<ext>`); each `dir` is created as
+      * needed. `rows` match the data schema. */
+    def write(files: Iterable[(String, Iterator[InternalRow])]): Unit = {
+      val name = s"${java.util.UUID.randomUUID()}.c000$extension"
+      files.iterator.zipWithIndex.foreach { case ((dir, rows), i) =>
+        val w = factory.newInstance(f"$dir/part-$i%05d-$name", dataSchema, ctx)
+        try rows.foreach(w.write) finally w.close()
+      }
     }
   }
 

@@ -44,7 +44,7 @@ class FixtureContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Fixtures are cached per sfDir, so a private copy of the tables gives
     * this spec fixtures no other suite's queries have touched. */
   private def privateSfCopy(): String = {
-    val dst = Files.createTempDirectory("fixture-contract-sf-")
+    val dst = TestDirs.create("fixture-contract-sf-")
     val walk = Files.walk(Sf0001)
     try walk.iterator().asScala.foreach { p =>
       val to = dst.resolve(Sf0001.relativize(p).toString)

@@ -26,7 +26,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Tiny sfDir with the table shapes SparkEntry queries expect. */
   private lazy val sfDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("plan-contract-sf-").toString
+    val dir = TestDirs.create("plan-contract-sf-").toString
     val rnd = new scala.util.Random(11)
     (0L until 40L).map { i =>
       (i, (0 until 30).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString,
@@ -81,7 +81,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       .explainString(org.apache.spark.sql.execution.FormattedMode)
 
   test("walruslog V2 scan: topic/offset predicates prune commits from metadata") {
-    val root = Files.createTempDirectory("plan-wl-").toString
+    val root = TestDirs.create("plan-wl-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 4).foreach(i =>
       log.batchAppend("t", (0 until 5).map(j => s"c$i-$j".getBytes("UTF-8"))))
@@ -136,7 +136,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the COUNT answer must come from the recorded exact rows, and MUST
     // still be served from metadata (the rowsKnown gate holds: the
     // compaction recorded its exact counts)
-    val root = Files.createTempDirectory("plan-hole-").toString
+    val root = TestDirs.create("plan-hole-").toString
     val log = new graft.log.WalrusLog(spark, root)
     // c0 is MULTI-topic (a[0,5) + b[0,1)) so it SURVIVES the vacuum (b
     // unconsumed) while the a-only c1 between the surviving a-ranges is
@@ -171,7 +171,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("walruslog aggregate pushdown: COUNT/MIN/MAX(offset) answered from commit metadata") {
-    val root = Files.createTempDirectory("plan-agg-").toString
+    val root = TestDirs.create("plan-agg-").toString
     val log = new graft.log.WalrusLog(spark, root)
     log.batchAppend("a", (0 until 5).map(i => s"a$i".getBytes("UTF-8")))
     log.batchAppend("a", (5 until 8).map(i => s"a$i".getBytes("UTF-8")))
@@ -223,7 +223,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("walruslog limit pushdown trims the commit prefix from metadata row counts") {
-    val root = Files.createTempDirectory("plan-lim-").toString
+    val root = TestDirs.create("plan-lim-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 10).foreach(i =>
       log.batchAppend("t", (0 until 5).map(j => s"c$i-$j".getBytes("UTF-8"))))
@@ -257,7 +257,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("storage-partitioned execution: per-topic aggregation over the log runs without a shuffle") {
-    val root = Files.createTempDirectory("plan-spj-").toString
+    val root = TestDirs.create("plan-spj-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 3).foreach { i =>
       (0 until 4).foreach(t =>
@@ -289,8 +289,8 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("storage-partitioned join: log-to-log on topic elides both exchanges") {
-    val rootA = Files.createTempDirectory("plan-spjj-a-").toString
-    val rootB = Files.createTempDirectory("plan-spjj-b-").toString
+    val rootA = TestDirs.create("plan-spjj-a-").toString
+    val rootB = TestDirs.create("plan-spjj-b-").toString
     val a = new graft.log.WalrusLog(spark, rootA)
     val b = new graft.log.WalrusLog(spark, rootB)
     (0 until 3).foreach { t =>
@@ -314,7 +314,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("walruslog runtime filtering: join values prune commits/topic dirs at runtime") {
     import org.apache.spark.sql.sources.{EqualTo, Filter}
-    val root = Files.createTempDirectory("plan-rf-").toString
+    val root = TestDirs.create("plan-rf-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 4).foreach(i =>
       log.batchAppend(s"t$i", (0 until 5).map(j => s"v$i-$j".getBytes("UTF-8"))))
@@ -345,7 +345,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("walruslog scan statistics: exact metadata counts drive UNHINTED auto-broadcast") {
     import org.apache.spark.sql.sources.{EqualTo, Filter}
-    val root = Files.createTempDirectory("plan-stats-").toString
+    val root = TestDirs.create("plan-stats-").toString
     val log = new graft.log.WalrusLog(spark, root)
     log.batchAppend("small", (0 until 3).map(i => s"s$i".getBytes("UTF-8")))   // 6 B payload
     log.batchAppend("big", (0 until 20).map(i => s"bbbb$i".getBytes("UTF-8")))
@@ -1055,7 +1055,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tombstone compaction: one max_by aggregation, no per-key sort window") {
-    val root = Files.createTempDirectory("plan-tomb-").toString
+    val root = TestDirs.create("plan-tomb-").toString
     val log = new graft.log.WalrusLog(spark, root)
     log.batchAppend("t", Seq("1|a", "2|b", "1|", "2|bb").map(_.getBytes("UTF-8")))
     val decoded = decode(col("value"), "UTF-8")
@@ -1179,7 +1179,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("legacy compaction commit without ts bounds refuses the ts agg push, stays correct") {
-    val root = Files.createTempDirectory("plan-tslegacy-").toString
+    val root = TestDirs.create("plan-tslegacy-").toString
     val log = new graft.log.WalrusLog(spark, root)
     val t0 = 1704067200000L
     def one(v: String, tsMs: Long) = log.appendDF(
@@ -1210,7 +1210,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SPJ partition planning is memoized: one dir walk per scan, however often Spark re-plans") {
-    val root = Files.createTempDirectory("plan-spj-memo-").toString
+    val root = TestDirs.create("plan-spj-memo-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 3).foreach(t =>
       log.batchAppend(s"t$t", (0 until 4).map(j => s"v$t$j".getBytes("UTF-8"))))
@@ -1231,7 +1231,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ADVICE r8 repro: offsets are PER-TOPIC counters, so a commit-prefix
     // trim by TOTAL covered rows would return topic a's {0,1,2} and miss
     // topic b's 0. commit0 = a:0-5, commit1 = b:0-2.
-    val root = Files.createTempDirectory("plan-topn-mt-").toString
+    val root = TestDirs.create("plan-topn-mt-").toString
     val log = new graft.log.WalrusLog(spark, root)
     log.batchAppend("a", (0 until 6).map(i => s"a$i".getBytes("UTF-8")))
     log.batchAppend("b", (0 until 3).map(i => s"b$i".getBytes("UTF-8")))
@@ -1263,7 +1263,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TopN on ts_us: tail-by-time opens only the newest commits") {
-    val root = Files.createTempDirectory("plan-topn-ts-").toString
+    val root = TestDirs.create("plan-topn-ts-").toString
     val log = new graft.log.WalrusLog(spark, root)
     val t0 = 1704067200000L
     (0 until 6).foreach { i =>
@@ -1307,7 +1307,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // oldest/largest. r10 orders each topic's commits by its RECORDED
     // offset range (and walks ts by guaranteed bounds), so the tail stays
     // O(k) files at any compaction age (VERDICT r9 item 1).
-    val root = Files.createTempDirectory("plan-topn-cp-").toString
+    val root = TestDirs.create("plan-topn-cp-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 3).foreach(i =>
       log.batchAppend("t", (0 until 4).map(j => s"v$i$j".getBytes("UTF-8"))))
@@ -1339,7 +1339,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the compaction-aware twin of the per-topic ADVICE r8 repro: topic a
     // compacted (old offsets at the newest id), topic b ingested after —
     // per-topic range ordering must cover BOTH topics' tails
-    val root = Files.createTempDirectory("plan-topn-cpmt-").toString
+    val root = TestDirs.create("plan-topn-cpmt-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 3).foreach(i =>
       log.batchAppend("a", (0 until 4).map(j => s"a$i$j".getBytes("UTF-8"))))
@@ -1360,7 +1360,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("builder and built scan share ONE commit listing (ts-aggregate offer included)") {
-    val root = Files.createTempDirectory("plan-onelist-").toString
+    val root = TestDirs.create("plan-onelist-").toString
     val log = new graft.log.WalrusLog(spark, root)
     (0 until 3).foreach(i =>
       log.batchAppend("t", (0 until 4).map(j => s"v$i$j".getBytes("UTF-8"))))
@@ -1376,7 +1376,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("topicPattern prunes topic dirs at plan time and flows into metadata aggregates") {
-    val root = Files.createTempDirectory("plan-pattern-").toString
+    val root = TestDirs.create("plan-pattern-").toString
     val log = new graft.log.WalrusLog(spark, root)
     Seq("orders", "orders_eu", "audit").foreach(t =>
       log.batchAppend(t, (0 until 3).map(j => s"$t$j".getBytes("UTF-8"))))
@@ -1413,7 +1413,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("batch publish-time window: starting/endingTimestampMs select whole commits from metadata") {
-    val root = Files.createTempDirectory("plan-window-").toString
+    val root = TestDirs.create("plan-window-").toString
     val log = new graft.log.WalrusLog(spark, root)
     val t0 = 1704067200000L
     (0 until 4).foreach { i =>
@@ -1453,7 +1453,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("endingTimestampMs", (t0 + 60000L).toString).load()
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("plan-window-ck-").toString)
+          TestDirs.create("plan-window-ck-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -52,7 +52,7 @@ class LocalFileIOSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def tempDir(prefix: String): JPath = {
-    val d = Files.createTempDirectory(prefix)
+    val d = graft.TestDirs.create(prefix)
     temps += d
     d
   }

@@ -1,7 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
-
 import org.json4s.DefaultFormats
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,7 +39,7 @@ class LongRunningSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("mixed append/read/compact/vacuum/restart churn holds every invariant") {
     val budgetSec = sys.env.getOrElse("GRAFT_LONGRUN_SECONDS", "40").toLong
     val deadline = System.nanoTime() + budgetSec * 1000000000L
-    val root = Files.createTempDirectory("walrus-longrun-").toString
+    val root = graft.TestDirs.create("walrus-longrun-").toString
     val maxSeg = 50L
     val cfg = LogConfig(maxSegmentEntries = maxSeg)
     var log = new WalrusLog(spark, root, cfg = cfg)
@@ -161,7 +159,7 @@ class LongRunningSpec extends AnyFunSuite with BeforeAndAfterAll {
     // duplicates.
     val budgetSec = sys.env.getOrElse("GRAFT_TWOWRITER_SECONDS", "25").toLong
     val deadline = System.nanoTime() + budgetSec * 1000000000L
-    val root = Files.createTempDirectory("walrus-twowriter-").toString
+    val root = graft.TestDirs.create("walrus-twowriter-").toString
     // generous retry budget: with two writers strictly alternating, one
     // resync per append suffices, but replacement opens can stack
     val cfg = LogConfig(commitCollisionRetries = 4)
@@ -217,7 +215,7 @@ class LongRunningSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Drive 120 fully-consumed commit+vacuum cycles and pin the v2
     // snapshot-then-truncate behavior: the newest manifest carries only
     // the small LIVE tail, recovery stays O(live), totals stay monotone.
-    val root = Files.createTempDirectory("wlr-churn-").toString
+    val root = graft.TestDirs.create("wlr-churn-").toString
     val cfg = LogConfig(manifestEveryCommits = 8)
     val log = new WalrusLog(spark, root, cfg = cfg)
     (0 until 120).foreach { i =>

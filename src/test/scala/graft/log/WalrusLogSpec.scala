@@ -25,7 +25,7 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tempRoot(): String =
-    Files.createTempDirectory("walruslog-test-").toString
+    graft.TestDirs.create("walruslog-test-").toString
 
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
   private def str(b: Array[Byte]): String = new String(b, "UTF-8")

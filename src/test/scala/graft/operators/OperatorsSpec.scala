@@ -569,7 +569,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // selectively-filtered build side and applies it to the probe-side
     // scan (might_contain), pruning rows BEFORE the shuffle. Values must
     // be unchanged vs the plain join.
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-").toString
+    val dir = graft.TestDirs.create("graft-bloom-").toString
     import spark.implicits._
     (0L until 2000L).map(i => (i, s"p${i % 5}", (i % 1000) * 7L))
       .toDF("fact_key", "tag", "v").write.parquet(s"$dir/fact")

@@ -59,7 +59,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("second JVM drives the 5-command wire protocol against this process's server") {
-    val root = Files.createTempDirectory("xjvm-proto-").toString
+    val root = graft.TestDirs.create("xjvm-proto-").toString
     val log = new WalrusLog(spark, root)
     val server = new WalrusServer(log)
     try {
@@ -75,7 +75,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("commit collision across real processes: exactly one of two racing JVMs wins") {
-    val dir = Files.createTempDirectory("xjvm-collide-")
+    val dir = graft.TestDirs.create("xjvm-collide-")
     val target = dir.resolve("000000000042.json")
     val a = spawnChild(Seq("collide", target.toString, "writer-a"), withSpark = false)
     val b = spawnChild(Seq("collide", target.toString, "writer-b"), withSpark = false)
@@ -111,7 +111,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // namespace FIRST (each believes nextBatchId = 0), so the commit race
     // is guaranteed, not timing-dependent: whichever publishes second MUST
     // collide and re-sequence its offsets after the winner's.
-    val root = Files.createTempDirectory("xjvm-race-").toString
+    val root = graft.TestDirs.create("xjvm-race-").toString
     val barrier = Paths.get(root, "go.barrier")
     val a = spawnChild(Seq("racingappend", root, "r", "5", "alpha",
       barrier.toString), withSpark = true)
@@ -154,7 +154,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("second JVM appends through its own WalrusLog; reopen here observes its commits") {
-    val root = Files.createTempDirectory("xjvm-append-").toString
+    val root = graft.TestDirs.create("xjvm-append-").toString
     val log = new WalrusLog(spark, root)
     log.batchAppend("shared", Seq("parent-0", "parent-1").map(_.getBytes("UTF-8")))
     log.close()
@@ -179,7 +179,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     // invisible to every reader surface before recovery, and recovery
     // must abort it (the reference's rollback-invisibility shape,
     // rollback_recovery.rs; Kafka's transaction-timeout abort).
-    val root = Files.createTempDirectory("xjvm-txn-").toString
+    val root = graft.TestDirs.create("xjvm-txn-").toString
     val log = new WalrusLog(spark, root)
     log.batchAppend("t", Seq("committed-0", "committed-1").map(_.getBytes("UTF-8")))
     log.close()
@@ -201,7 +201,7 @@ class CrossJvmE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("topic"), col("value"))
       .writeStream.format("memory").queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("xjvm-txn-ck-").toString)
+        graft.TestDirs.create("xjvm-txn-ck-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -1,7 +1,5 @@
 package graft.server
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -22,7 +20,7 @@ class WalrusServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("REGISTER / PUT / GET / STATE / METRICS roundtrip + error paths") {
-    val root = Files.createTempDirectory("wserver-").toString
+    val root = graft.TestDirs.create("wserver-").toString
     val log = new WalrusLog(spark, root)
     val server = new WalrusServer(log)
     try {
@@ -45,7 +43,7 @@ class WalrusServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("replies leave without a Nagle/delayed-ACK stall: 20 STATE round trips on one connection") {
-    val root = Files.createTempDirectory("wserver-").toString
+    val root = graft.TestDirs.create("wserver-").toString
     val log = new WalrusLog(spark, root)
     log.append("orders", "x".getBytes("UTF-8"))
     val server = new WalrusServer(log)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,7 +24,7 @@ class WalrusBatchWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def tempRoot(): String = Files.createTempDirectory("wbatchw-").toString
+  private def tempRoot(): String = graft.TestDirs.create("wbatchw-").toString
 
   private def df(rows: Seq[(String, String)]) = {
     val s = spark; import s.implicits._

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -13,7 +11,7 @@ import graft.log.WalrusLog
   * directory, distributed-walrus/src/controller/mod.rs:124-195). */
 class WalrusCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val root = Files.createTempDirectory("wcat-").toString
+  private val root = graft.TestDirs.create("wcat-").toString
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +23,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def tempRoot(): String = Files.createTempDirectory("wstream-").toString
+  private def tempRoot(): String = graft.TestDirs.create("wstream-").toString
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
 
   test("micro-batch source delivers committed entries exactly once, in commit order") {
@@ -411,7 +409,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = s2.readStream.format("walruslog").option("path", root)
       .option("realTimePartitions", "2").load()
       .select(col("topic"), col("offset"), decode(col("value"), "UTF-8").as("v"))
-    val ckpt = Files.createTempDirectory("rtm-ck-").toString
+    val ckpt = graft.TestDirs.create("rtm-ck-").toString
     def start() = df.writeStream.foreach(new RtmCollector.W).outputMode("update")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.RealTime("2 seconds"))
@@ -464,7 +462,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = s2.readStream.format("walruslog").option("path", root)
       .option("realTimePartitions", "4").load()
       .select(col("topic"), col("offset"), decode(col("value"), "UTF-8").as("v"))
-    val ckpt = Files.createTempDirectory("rtm-ck4-").toString
+    val ckpt = graft.TestDirs.create("rtm-ck4-").toString
     val q = df.writeStream.foreach(new RtmCollector.W).outputMode("update")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.RealTime("2 seconds"))
@@ -870,7 +868,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("minRowsPerTrigger", "1000000").load()
       .writeStream.format("memory").queryName("minrows_e2e")
       .option("checkpointLocation",
-        Files.createTempDirectory("minrows-ck-").toString)
+        graft.TestDirs.create("minrows-ck-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -893,7 +891,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       opts.foreach { case (k, v) => r = r.option(k, v) }
       val q = r.load().writeStream.format("memory").queryName(name)
         .option("checkpointLocation",
-          Files.createTempDirectory("fodl-ck-").toString)
+          graft.TestDirs.create("fodl-ck-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -920,7 +918,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("failOnDataLoss", "true").load()
       .writeStream.format("memory").queryName("fodl_compact")
       .option("checkpointLocation",
-        Files.createTempDirectory("fodl2-ck-").toString)
+        graft.TestDirs.create("fodl2-ck-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q2.awaitTermination()
@@ -1004,7 +1002,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("maxBytesPerTrigger", "3000").load()
       .writeStream.format("memory").queryName("maxbytes_e2e")
       .option("checkpointLocation",
-        Files.createTempDirectory("maxbytes-ck-").toString)
+        graft.TestDirs.create("maxbytes-ck-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1022,7 +1020,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("maxBytesPerTrigger", "100").load()
       .writeStream.format("memory").queryName("maxbytes_big")
       .option("checkpointLocation",
-        Files.createTempDirectory("maxbytes2-ck-").toString)
+        graft.TestDirs.create("maxbytes2-ck-").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q2.awaitTermination()
