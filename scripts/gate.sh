@@ -86,6 +86,17 @@ if [ -n "$CONFS$PATHINIT" ]; then
   echo "$CONFS"; echo "$PATHINIT"; echo "GATE: per-file Hadoop conf hits"; FAIL=1
 else echo "clean"; fi
 
+note "commit metadata codec grep (commit JSON goes through graft.log.CommitCodec)"
+# one module reads and writes commits/<id>.json and the manifests: no other
+# main file extracts a commit record or manifest, or spells the vacuumed
+# flag as JSON (a StructField of that name is a column, not the flag)
+CODEC=$( { grep -rnE 'extract\[(CommitRecord|ManifestEntry|LogManifest)\]|"vacuumed"|\\"vacuumed\\"' \
+    src/main/scala 2>/dev/null || true; } \
+    | grep -v "^src/main/scala/graft/log/CommitCodec\.scala:" \
+    | grep -vE 'StructField\("vacuumed",' | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)" )
+if [ -n "$CODEC" ]; then echo "$CODEC"; echo "GATE: commit codec hits"; FAIL=1
+else echo "clean"; fi
+
 note "padding greps (no stubs in main)"
 PADS=$( { grep -rn '???' src/main/scala 2>/dev/null || true; } | grep -v MediaCodecStub )
 TODOS=$(grep -rnE "TODO|FIXME" src/main/scala 2>/dev/null || true)

@@ -4190,7 +4190,7 @@ object SparkEntry {
           length(col("value")).cast("long").as("len"))
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation",
-          Files.createTempDirectory("graft-txniso-").toString)
+          Files.createTempDirectory(scratchParent, "txniso-ck-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()

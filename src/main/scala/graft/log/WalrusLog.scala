@@ -11,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
+import org.json4s.{DefaultFormats, Formats, JBool, JLong, JObject, JString}
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 import graft.sources.{WalrusLogSource, WalrusReaderFactory}
 
@@ -90,7 +90,7 @@ class WalrusLog(
   private val commits = mutable.ArrayBuffer.empty[CommitRecord]
   private val vacuumed = mutable.Set.empty[Long]
   private val replaced = mutable.Set.empty[Long] // batches rewritten by compaction
-  // Dropped-commit accounting (manifest v2 — the Raft snapshot-truncates-
+  // Dropped-commit accounting (the manifest is the Raft snapshot-truncates-
   // the-log analogue, reference: distributed-walrus/src/metadata.rs:
   // 115-189): fully-reclaimed commits leave `commits` at manifest-write
   // time; these scalars/maps preserve what replaying them would have
@@ -113,7 +113,7 @@ class WalrusLog(
 
   /** Split `<base>-<digits>` tags into their family key + epoch number —
     * ONLY for the tag shapes the sink paths themselves emit
-    * (`v1sink-<ckptId>-<batchId>`, `stream-epoch-<epochId>`). The
+    * (`v1sink-<ckptId>-<batchId>`, `stream-epoch-<ckptId>-<epochId>`). The
     * "only the newest epoch can replay" collapse argument holds exactly
     * for sink epochs (older epochs sit behind the sink's own checkpoint);
     * a HAND-tagged append (`job-1`) has no such ordering, so collapsing
@@ -124,7 +124,7 @@ class WalrusLog(
     if (i <= 0 || i == tag.length - 1) None
     else {
       val base = tag.substring(0, i)
-      if (base.startsWith("v1sink-") || base == "stream-epoch")
+      if (base.startsWith("v1sink-") || base.startsWith("stream-epoch-"))
         tag.substring(i + 1).toLongOption.map(n => (base, n))
       else None
     }
@@ -267,7 +267,7 @@ class WalrusLog(
         }
         val ranges = byTopic.map { case (t, vs) =>
           t -> TopicRange(bases(t), bases(t) + vs.size,
-            vs.iterator.map(_.length.toLong).sum, Some(tsUs), Some(tsUs))
+            vs.iterator.map(_.length.toLong).sum, tsUs, tsUs, vs.size.toLong)
         }.toMap
         publishCommit(CommitRecord(id, ingestTs, ranges))
       }
@@ -465,8 +465,7 @@ class WalrusLog(
 
       // Publish: the atomic rename IS the visibility point (W2/M2 parity).
       val ranges = perTopicTotal.map { case (t, (c, b)) =>
-        val tsUs = ingestTs.getTime * 1000L // every entry carries this ts_us
-        t -> TopicRange(baseOffsets(t), baseOffsets(t) + c, b, Some(tsUs), Some(tsUs))
+        t -> TopicRange(baseOffsets(t), baseOffsets(t) + c, b, tsUs, tsUs, c)
       }.toMap
       publishCommit(CommitRecord(id, ingestTs.getTime, ranges, tag))
       } finally pinned.foreach(_.unpersist(false))
@@ -723,8 +722,7 @@ class WalrusLog(
     publishStage(stage, id)
     val ranges = perTopic.map { case (t, (c, b)) =>
       val start = bases.getOrElse(t, 0L)
-      val tsUs = ingestTs.getTime * 1000L // every entry carries this ts_us
-      t -> TopicRange(start, start + c, b, Some(tsUs), Some(tsUs))
+      t -> TopicRange(start, start + c, b, tsUs, tsUs, c)
     }.toMap
     publishCommit(CommitRecord(id, ingestTs.getTime, ranges, tag))
   }
@@ -734,7 +732,7 @@ class WalrusLog(
     * (W2/M2 parity), then in-memory state (segment rollover), clean
     * markers and the manifest roll-up follow it. */
   private def publishCommit(rec: CommitRecord): CommitRecord = {
-    writeAtomicNew(commitsDir.resolve(f"${rec.id}%012d.json"), Serialization.write(rec))
+    CommitCodec.publish(commitsDir, rec)
     nextBatchId = rec.id + 1
     applyCommit(rec)
     persistClean()
@@ -757,7 +755,7 @@ class WalrusLog(
         // round-robin over the virtual node list.
         rec.topics.foreach { case (t, r) =>
           state(t).applyAppend(r.end,
-            r.bytes + cfg.metaOverheadBytes.toLong * (r.end - r.start),
+            r.bytes + cfg.metaOverheadBytes.toLong * r.rows,
             cfg.maxSegmentEntries,
             seg => virtualNodes((seg % virtualNodes.size).toInt))
         }
@@ -1088,11 +1086,7 @@ class WalrusLog(
   def commitHistory: Seq[(Long, Long, Int, Long, Long, Option[String], Int, Boolean, Boolean)] =
     synchronized {
       commits.iterator.filter(_.id >= 0).toSeq.sortBy(_.id).map { c =>
-        // exact when recorded: a compaction's end-start is only an upper
-        // bound once vacuum holes exist (see TopicRange.rows)
-        val rows = c.topics.valuesIterator.map(r =>
-          if (c.replaces.exists(_.nonEmpty)) r.rows.getOrElse(r.end - r.start)
-          else r.end - r.start).sum
+        val rows = c.topics.valuesIterator.map(_.rows).sum
         val bytes = c.topics.valuesIterator.map(_.bytes).sum
         (c.id, c.tsMillis, c.topics.size, rows, bytes, c.tag,
           c.replaces.map(_.size).getOrElse(0),
@@ -1112,8 +1106,8 @@ class WalrusLog(
     * (reference: topic_clean.rs:12-257 persists exactly these fields). */
   def cleanStateJson(topic: String): String = {
     val st = topics.getOrElse(topic, new TopicState)
-    s"""{"topic":"$topic","generation":${st.cleanGeneration},""" +
-      s""""is_clean":${st.clean}}"""
+    JsonMethods.compact(JObject("topic" -> JString(topic),
+      "generation" -> JLong(st.cleanGeneration), "is_clean" -> JBool(st.clean)))
   }
 
   /** Create-if-absent (reference: `REGISTER`/`ensure_topic`,
@@ -1149,26 +1143,31 @@ class WalrusLog(
 
   def stateJson(topic: String): String = {
     val st = topics.getOrElse(topic, new TopicState)
-    val sealedJson = st.sealedSegments.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    val leadersJson = st.segmentLeaders.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    s"""{"topic":"$topic","current_segment":${st.currentSegment},""" +
-      s""""leader_node":"${virtualNodes((st.currentSegment % virtualNodes.size).toInt)}",""" +
-      s""""last_sealed_entry_offset":${st.lastSealedEntryOffset},""" +
-      s""""sealed_segments":$sealedJson,"segment_leaders":$leadersJson,""" +
-      s""""next_offset":${st.nextOffset},"entry_count":${entryCount(topic)}}"""
+    JsonMethods.compact(JObject(
+      "topic" -> JString(topic),
+      "current_segment" -> JLong(st.currentSegment),
+      "leader_node" -> JString(virtualNodes((st.currentSegment % virtualNodes.size).toInt)),
+      "last_sealed_entry_offset" -> JLong(st.lastSealedEntryOffset),
+      "sealed_segments" -> JObject(st.sealedSegments.toList.map { case (k, v) =>
+        k.toString -> JLong(v) }),
+      "segment_leaders" -> JObject(st.segmentLeaders.toList.map { case (k, v) =>
+        k.toString -> JString(v) }),
+      "next_offset" -> JLong(st.nextOffset),
+      "entry_count" -> JLong(entryCount(topic))))
   }
 
   def metricsJson(): String = {
     val totalEntries = topics.valuesIterator.map(_.nextOffset).sum
     // publishedCount / droppedVacuumedCount keep these totals invariant
-    // under manifest-v2 shedding: "commits" counts commits EVER published,
+    // under manifest shedding: "commits" counts commits EVER published,
     // not the live working set (reference METRICS counts are monotone).
-    s"""{"namespace":"$namespace","topics":${topics.size},""" +
-      s""""commits":$publishedCount,"total_entries":$totalEntries,""" +
-      s""""consumer_groups":${cursors.keys.map(_._1).toSet.size},""" +
-      s""""vacuumed_batches":${vacuumed.size + droppedVacuumedCount}}"""
+    JsonMethods.compact(JObject(
+      "namespace" -> JString(namespace),
+      "topics" -> JLong(topics.size),
+      "commits" -> JLong(publishedCount),
+      "total_entries" -> JLong(totalEntries),
+      "consumer_groups" -> JLong(cursors.keys.map(_._1).toSet.size),
+      "vacuumed_batches" -> JLong(vacuumed.size + droppedVacuumedCount)))
   }
 
   // =========================================================================
@@ -1179,15 +1178,34 @@ class WalrusLog(
     * every consumer group (reference's file reclamation,
     * src/wal/runtime/allocator.rs:188-342). Returns reclaimed batch ids. */
   def vacuum(): Seq[Long] = synchronized {
+    val consumed = consumedByAllGroups
+    val reclaim = visibleCommits.filter(c => c.topics.nonEmpty && consumed(c))
+    reclaimAll(reclaim)
+    reclaim.map(_.id)
+  }
+
+  /** [[vacuum]]'s rule: every topic range of the commit lies below every
+    * consumer group's cursor (with no group, nothing counts as consumed). */
+  private def consumedByAllGroups: CommitRecord => Boolean = {
     val groups = cursors.keys.map(_._1).toSet
     def minCursor(topic: String): Long =
       if (groups.isEmpty) 0L
       else groups.map(g => cursors.getOrElse((g, topic), 0L)).min
-    val reclaim = visibleCommits.filter { c =>
-      c.topics.nonEmpty && c.topics.forall { case (t, r) => r.end <= minCursor(t) }
-    }
-    reclaimAll(reclaim.toSeq)
-    reclaim.map(_.id).toSeq
+    c => c.topics.forall { case (t, r) => r.end <= minCursor(t) }
+  }
+
+  /** [[vacuumToBytes]]'s rule, over the visible non-empty commits in id
+    * order: a commit is reclaimable iff for EVERY topic it carries,
+    * strictly newer visible commits hold ≥ `maxTopicBytes` of that topic's
+    * payload bytes (suffix sums per topic — metadata scale:
+    * O(commits × topics-per-commit)). */
+  private def sizeReclaimable(maxTopicBytes: Long): Seq[(CommitRecord, Boolean)] = {
+    val newer = mutable.Map.empty[String, Long]
+    visibleCommits.filter(_.topics.nonEmpty).sortBy(_.id).reverseIterator.map { c =>
+      val ok = c.topics.forall { case (t, _) => newer.getOrElse(t, 0L) >= maxTopicBytes }
+      c.topics.foreach { case (t, r) => newer(t) = newer.getOrElse(t, 0L) + r.bytes }
+      (c, ok)
+    }.toSeq.reverse
   }
 
   /** Time-based retention (Kafka-style): reclaim the storage of every
@@ -1233,18 +1251,9 @@ class WalrusLog(
     * byte sums each commit records per topic ([[TopicRange.bytes]]) —
     * pure metadata, no data-file IO at any scale. */
   def vacuumToBytes(maxTopicBytes: Long): Seq[Long] = synchronized {
-    val vis = visibleCommits.filter(_.topics.nonEmpty).toSeq.sortBy(_.id)
-    // suffix sums per topic: bytes in strictly newer batches (metadata
-    // scale: O(commits × topics-per-commit))
-    val newer = mutable.Map.empty[String, Long]
-    val reclaimable = vis.reverseIterator.map { c =>
-      val ok = c.topics.forall { case (t, _) => newer.getOrElse(t, 0L) >= maxTopicBytes }
-      c.topics.foreach { case (t, r) => newer(t) = newer.getOrElse(t, 0L) + r.bytes }
-      (c, ok)
-    }.toSeq
-    val reclaim = reclaimable.collect { case (c, true) => c }
-    reclaimAll(reclaim.toSeq)
-    reclaim.map(_.id).sorted
+    val reclaim = sizeReclaimable(maxTopicBytes).collect { case (c, true) => c }
+    reclaimAll(reclaim)
+    reclaim.map(_.id)
   }
 
   /** Reclamation DRY RUN (the `VACUUM ... DRY RUN` analogue): what the
@@ -1253,33 +1262,14 @@ class WalrusLog(
     * only — no data IO, no mutation, so operators can cost a retention
     * policy before running it. One row per visible commit in id order:
     * (id, consumptionEligible, sizeEligible(maxTopicBytes), rows,
-    * bytes). The eligibility predicates are the EXACT rules the
-    * destructive paths apply ([[vacuum]]'s all-topics-consumed and
-    * [[vacuumToBytes]]'s strictly-newer suffix-byte test); rows use the
-    * exact per-range counts where recorded, end−start otherwise (exact
-    * for ingest commits). */
+    * bytes). The eligibility predicates are the ones the destructive
+    * paths apply ([[consumedByAllGroups]] and [[sizeReclaimable]]). */
   def vacuumPlan(maxTopicBytes: Long): Seq[(Long, Boolean, Boolean, Long, Long)] =
     synchronized {
-      val groups = cursors.keys.map(_._1).toSet
-      def minCursor(topic: String): Long =
-        if (groups.isEmpty) 0L
-        else groups.map(g => cursors.getOrElse((g, topic), 0L)).min
-      val vis = visibleCommits.filter(_.topics.nonEmpty).toSeq.sortBy(_.id)
-      val newer = mutable.Map.empty[String, Long]
-      val sizeOk = vis.reverseIterator.map { c =>
-        val ok = c.topics.forall { case (t, _) =>
-          newer.getOrElse(t, 0L) >= maxTopicBytes
-        }
-        c.topics.foreach { case (t, r) =>
-          newer(t) = newer.getOrElse(t, 0L) + r.bytes
-        }
-        c.id -> ok
-      }.toMap
-      vis.map { c =>
-        val consume = c.topics.forall { case (t, r) => r.end <= minCursor(t) }
-        val rows = c.topics.values.map(r => r.rows.getOrElse(r.end - r.start)).sum
-        val bytes = c.topics.values.map(_.bytes).sum
-        (c.id, consume, sizeOk(c.id), rows, bytes)
+      val consumed = consumedByAllGroups
+      sizeReclaimable(maxTopicBytes).map { case (c, sizeOk) =>
+        (c.id, consumed(c), sizeOk, c.topics.valuesIterator.map(_.rows).sum,
+          c.topics.valuesIterator.map(_.bytes).sum)
       }
     }
 
@@ -1297,10 +1287,10 @@ class WalrusLog(
     * Keeps the newest two files so a reader that just listed the directory
     * never races a deletion.
     *
-    * v2 = snapshot-then-truncate (the Raft-snapshot semantics of the
-    * reference, distributed-walrus/src/metadata.rs:115-189, where v1 only
-    * ACCELERATED reads): the manifest carries the rolled-up topic states
-    * plus only the LIVE covered commits; fully-reclaimed commits (vacuumed
+    * Snapshot-then-truncate (the Raft-snapshot semantics of the
+    * reference, distributed-walrus/src/metadata.rs:115-189): the manifest
+    * carries the rolled-up topic states plus only the LIVE covered
+    * commits; fully-reclaimed commits (vacuumed
     * or replaced — no data directory either way) are dropped from the file
     * AND from the in-memory `commits` vector, so both manifest size and
     * driver memory are O(live batches), not O(commits ever published) —
@@ -1337,11 +1327,9 @@ class WalrusLog(
         st.cleanGeneration, st.clean)
     }.toSeq
     Files.createDirectories(manifestsDir)
-    writeAtomic(manifestsDir.resolve(f"manifest-$asOf%012d.json"),
-      Serialization.write(LogManifest(asOf, entries.toSeq,
-        state = Some(snaps), publishedCount = Some(publishedCount),
-        vacuumedCount = Some(droppedVacuumedCount),
-        droppedTags = Some(droppedTagsSnapshot))))
+    CommitCodec.writeManifest(manifestsDir.resolve(f"manifest-$asOf%012d.json"),
+      LogManifest(asOf, entries.toSeq, snaps, publishedCount,
+        droppedVacuumedCount, droppedTagsSnapshot))
     manifestFiles(manifestsDir).dropRight(2).foreach(Files.deleteIfExists(_))
     sinceManifest = 0
   }
@@ -1362,8 +1350,8 @@ class WalrusLog(
     * is gone — the crash window is "flag set but data still present"
     * (re-vacuum is idempotent), never the reverse. One rewrite per vacuum
     * CALL, not per batch: a retention pass reclaiming K batches costs one
-    * O(live) manifest write, not K of them. The commit JSONs' own rewrite
-    * keeps the no-manifest path on its existing (pre-manifest) semantics. */
+    * O(live) manifest write, not K of them. Each commit JSON is then
+    * rewritten with its vacuumed flag, for the JSON tail past the manifest. */
   private def reclaimAll(cs: Seq[CommitRecord]): Unit = {
     if (cs.isEmpty) return
     cs.foreach(c => vacuumed += c.id)
@@ -1371,8 +1359,7 @@ class WalrusLog(
     if (cs.exists(c => asOf.exists(_ >= c.id))) writeManifest()
     cs.foreach { c =>
       deleteRecursively(dataDir.resolve(s"batch=${c.id}"))
-      writeAtomic(commitsDir.resolve(f"${c.id}%012d.json"),
-        Serialization.write(c).dropRight(1) + ",\"vacuumed\":true}")
+      CommitCodec.markVacuumed(commitsDir, c)
     }
   }
 
@@ -1401,44 +1388,18 @@ class WalrusLog(
     val sources = visibleCommits.filter(_.topics.nonEmpty).take(maxSourceBatches)
     if (sources.size < 2) return None
     val ids = sources.map(_.id)
-    // Per-topic ts bounds inherit min/max over the replaced ranges. An
-    // INGEST source persisted before bounds existed contributes its exact
-    // commit ts (ingest stamps every entry with it) — but a LEGACY
-    // COMPACTION source (bounds-less `replaces` record from before the
-    // feature) holds rows with ORIGINAL timestamps unrelated to its
-    // commit instant, so its unknown-ness must PROPAGATE: inheriting
-    // tsMillis there would stamp confidently-wrong bounds that ts pruning
-    // and metadata MIN/MAX would then trust (found by the r10 trimming
-    // property test). With all-known sources the compacted log KEEPS time
-    // pruning and metadata-answered MIN/MAX(ts_us).
+    // Per-topic ts bounds are min/max over the replaced ranges and the
+    // row count is the sum of theirs: the merged offset range can span
+    // offsets vacuumed before this compaction, so its end-start is only an
+    // upper bound (see TopicRange).
     val merged: Map[String, TopicRange] = sources
-      .flatMap(c => c.topics.toSeq.map { case (t, r) => (t, c, r) })
-      .groupBy(_._1).map { case (t, rs) =>
-        val ranges = rs.map(_._3)
-        def knownBound(c: CommitRecord, r: TopicRange): Boolean =
-          r.tsUsMin.isDefined || !c.replaces.exists(_.nonEmpty)
-        val allKnown = rs.forall { case (_, c, r) => knownBound(c, r) }
-        val lo = if (allKnown) Some(rs.map { case (_, c, r) =>
-          r.tsUsMin.getOrElse(c.tsMillis * 1000L) }.min) else None
-        val hi = if (allKnown) Some(rs.map { case (_, c, r) =>
-          r.tsUsMax.getOrElse(c.tsMillis * 1000L) }.max) else None
-        // Exact row count: end-start is exact for ingest sources (offsets
-        // contiguous) but only an UPPER bound for compaction sources that
-        // merged across a vacuum hole — so sum the sources' EXACT counts,
-        // propagating unknown-ness from legacy (pre-`rows`) compactions
-        // exactly like the ts bounds above. The merged min/max range can
-        // span offsets vacuumed before this compaction; trimForLimit's
-        // covering walks rely on this field, never on end-start.
-        val exact = rs.map { case (_, c, r) =>
-          if (c.replaces.exists(_.nonEmpty)) r.rows else Some(r.end - r.start)
-        }
-        val nRows = if (exact.forall(_.isDefined)) Some(exact.flatten.sum)
-          else None
-        t -> TopicRange(ranges.map(_.start).min, ranges.map(_.end).max,
-          ranges.map(_.bytes).sum, lo, hi, nRows)
+      .flatMap(_.topics.toSeq).groupBy(_._1).map { case (t, trs) =>
+        val rs = trs.map(_._2)
+        t -> TopicRange(rs.map(_.start).min, rs.map(_.end).max, rs.map(_.bytes).sum,
+          rs.map(_.tsUsMin).min, rs.map(_.tsUsMax).max, rs.map(_.rows).sum)
       }
     val totalBytes = merged.valuesIterator.map(r =>
-      r.bytes + cfg.metaOverheadBytes.toLong * (r.end - r.start)).sum
+      r.bytes + cfg.metaOverheadBytes.toLong * r.rows).sum
     val nParts = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val id = nextBatchId
     claimBatchDir(id) { d =>
@@ -1453,7 +1414,7 @@ class WalrusLog(
     }
     val rec = CommitRecord(id, System.currentTimeMillis(), merged,
       tag = None, replaces = Some(ids))
-    writeAtomicNew(commitsDir.resolve(f"$id%012d.json"), Serialization.write(rec))
+    CommitCodec.publish(commitsDir, rec)
     nextBatchId = id + 1
     applyCommit(rec)
     maybeWriteManifest()
@@ -1537,61 +1498,38 @@ class WalrusLog(
     // parse only the JSON tail past it — O(tail) instead of O(all commits).
     val manifest = readNewestManifest(nsDir)
     manifest.foreach { m =>
-      m.state match {
-        case Some(snaps) =>
-          // v2: the snapshot IS the replayed state of every commit ≤ asOf
-          // (live AND dropped) — restore it directly, then register the
-          // live entries for the read path WITHOUT re-applying them.
-          snaps.foreach { snap =>
-            val st = state(snap.topic)
-            st.nextOffset = snap.nextOffset
-            st.bytesTotal = snap.bytesTotal
-            st.currentSegment = snap.currentSegment
-            st.lastSealedEntryOffset = snap.lastSealedEntryOffset
-            snap.segments.foreach { s =>
-              st.sealedSegments(s.seg) = s.n
-              st.segmentLeaders(s.seg) = s.leader
-            }
-            st.cleanGeneration = snap.cleanGeneration
-            st.clean = snap.clean
-          }
-          m.entries.foreach { e =>
-            if (e.vacuumed) vacuumed += e.id
-            e.replaces.foreach(replaced ++= _)
-            commits += e.record
-            e.topics.foreach { case (t, _) => state(t) }
-          }
-          maxPublishedId = m.asOf
-          publishedCount = m.publishedCount.getOrElse(m.entries.size.toLong)
-          droppedVacuumedCount = m.vacuumedCount.getOrElse(0L)
-          m.droppedTags.getOrElse(Map.empty).foreach { case (t, id) =>
-            recordDroppedTag(t, id)
-          }
-        case None =>
-          // v1: positional replay — state comes from re-applying entries.
-          m.entries.foreach { e =>
-            if (e.vacuumed) vacuumed += e.id
-            applyCommit(e.record)
-            e.topics.foreach { case (t, _) => state(t) }
-          }
+      // the snapshot IS the replayed state of every commit ≤ asOf (live
+      // AND dropped) — restore it directly, then register the live
+      // entries for the read path WITHOUT re-applying them.
+      m.state.foreach { snap =>
+        val st = state(snap.topic)
+        st.nextOffset = snap.nextOffset
+        st.bytesTotal = snap.bytesTotal
+        st.currentSegment = snap.currentSegment
+        st.lastSealedEntryOffset = snap.lastSealedEntryOffset
+        snap.segments.foreach { s =>
+          st.sealedSegments(s.seg) = s.n
+          st.segmentLeaders(s.seg) = s.leader
+        }
+        st.cleanGeneration = snap.cleanGeneration
+        st.clean = snap.clean
       }
+      m.entries.foreach { e =>
+        if (e.vacuumed) vacuumed += e.id
+        e.replaces.foreach(replaced ++= _)
+        commits += e.record
+        e.topics.foreach { case (t, _) => state(t) }
+      }
+      maxPublishedId = m.asOf
+      publishedCount = m.publishedCount
+      droppedVacuumedCount = m.vacuumedCount
+      m.droppedTags.foreach { case (t, id) => recordDroppedTag(t, id) }
     }
     val manifestAsOf = manifest.map(_.asOf).getOrElse(-1L)
     val commitFiles = listDir(commitsDir)
       .filter(_.getFileName.toString.endsWith(".json")).sorted
       .filter(p => commitIdOf(p).forall(_ > manifestAsOf))
-    commitFiles.foreach { p =>
-      val txt = new String(Files.readAllBytes(p), "UTF-8")
-      val parsed = org.json4s.jackson.JsonMethods.parse(txt)
-      val rec = parsed.extract[CommitRecord]
-      val isVac = (parsed \ "vacuumed") match {
-        case org.json4s.JBool(b) => b
-        case _ => false
-      }
-      if (isVac) vacuumed += rec.id
-      applyCommit(rec)
-      rec.topics.foreach { case (t, _) => state(t) }
-    }
+    commitFiles.foreach(p => applyCommitFile(CommitCodec.readCommit(p)))
     sinceManifest = commitFiles.size
     // clean markers + registered-but-empty topics
     if (Files.exists(cleanPath)) {
@@ -1663,7 +1601,7 @@ class WalrusLog(
           staleEnoughToSweep(p)) deleteRecursively(p)
     }
     // maxPublishedId guards against id reuse when EVERY covered commit was
-    // dropped from a v2 manifest (commits empty, data dirs reclaimed).
+    // dropped from the manifest (commits empty, data dirs reclaimed).
     val maxCommit = math.max(
       commits.map(_.id).maxOption.getOrElse(-1L), maxPublishedId)
     val maxDir = listDir(dataDir).flatMap { p =>
@@ -1671,6 +1609,14 @@ class WalrusLog(
       if (n.startsWith("batch=")) n.stripPrefix("batch=").toLongOption else None
     }.maxOption.getOrElse(-1L)
     nextBatchId = math.max(maxCommit, maxDir) + 1
+  }
+
+  /** Fold one published commit file into in-memory state. */
+  private def applyCommitFile(file: (CommitRecord, Boolean)): Unit = {
+    val (rec, isVacuumed) = file
+    if (isVacuumed) vacuumed += rec.id
+    applyCommit(rec)
+    rec.topics.foreach { case (t, _) => state(t) }
   }
 
   /** Claim `batch=<id>` atomically for this writer: `write` lands the data
@@ -1738,18 +1684,7 @@ class WalrusLog(
         .filter(p => WalrusLog.commitIdOf(p).exists(id =>
           !known(id) && !vacuumed.contains(id)))
         .sorted
-      fresh.foreach { p =>
-        val parsed = org.json4s.jackson.JsonMethods.parse(
-          new String(Files.readAllBytes(p), "UTF-8"))
-        val rec = parsed.extract[CommitRecord]
-        val isVac = (parsed \ "vacuumed") match {
-          case org.json4s.JBool(b) => b
-          case _ => false
-        }
-        if (isVac) vacuumed += rec.id
-        applyCommit(rec)
-        rec.topics.foreach { case (t, _) => state(t) }
-      }
+      fresh.foreach(p => applyCommitFile(CommitCodec.readCommit(p)))
       fresh.size
     }
     def claimedUnpublished: Seq[Long] = {
@@ -2055,7 +1990,6 @@ object WalrusLog {
     * the key instead of re-hashing or comparing entry vectors. */
   private[graft] def readNewestManifestKeyed(
       nsDir: Path): Option[(LogManifest, (String, Long, Long, Long))] = {
-    implicit val formats: Formats = DefaultFormats
     val dir = nsDir.resolve("manifests")
     val mtime =
       try { if (Files.exists(dir)) Files.getLastModifiedTime(dir) else null }
@@ -2069,8 +2003,7 @@ object WalrusLog {
         val bytes = Files.readAllBytes(p)
         val key = manifestKey(p, bytes)
         Option(manifestCache.get(key)).map(m => (m, key)).orElse {
-          val m = org.json4s.jackson.JsonMethods
-            .parse(new String(bytes, "UTF-8")).extract[LogManifest]
+          val m = CommitCodec.readManifest(p, bytes)
           if (manifestCache.size >= 64) manifestCache.clear()
           manifestCache.put(key, m)
           Some((m, key))

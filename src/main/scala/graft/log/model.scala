@@ -134,18 +134,18 @@ final case class LogConfig(
       * only the resyncing thread, never the instance's other threads. */
     claimGapWaitMs: Long = 30000L)
 
-/** One commit of the rolled-up manifest: the [[CommitRecord]] fields plus
-  * the vacuumed flag its commit JSON would carry. */
+/** One commit with its vacuumed flag: the shape of a `commits/<id>.json`
+  * file and of each entry of the rolled-up manifest (see [[CommitCodec]]). */
 final case class ManifestEntry(id: Long, tsMillis: Long,
-    topics: Map[String, TopicRange], tag: Option[String] = None,
-    replaces: Option[Seq[Long]] = None, vacuumed: Boolean = false) {
+    topics: Map[String, TopicRange], tag: Option[String],
+    replaces: Option[Seq[Long]], vacuumed: Boolean) {
   def record: CommitRecord = CommitRecord(id, tsMillis, topics, tag, replaces)
 }
 
 /** One sealed segment of a topic snapshot (ordered; LinkedHashMap parity). */
 final case class SegmentSnap(seg: Long, n: Long, leader: String)
 
-/** Serialized [[TopicState]] — what a manifest-v2 recovery restores instead
+/** Serialized [[TopicState]] — what a manifest recovery restores instead
   * of replaying per-commit `applyAppend` transitions. Carrying the STATE in
   * the snapshot (not just the log entries) is what lets the manifest drop
   * reclaimed entries entirely: the Raft snapshot-then-truncate semantics
@@ -156,12 +156,9 @@ final case class TopicSnapshot(topic: String, nextOffset: Long,
     segments: Seq[SegmentSnap], cleanGeneration: Long, clean: Boolean)
 
 /** Rolled-up commit-log manifest covering every commit with id ≤ `asOf`.
-  *
-  * v1 (all optional fields absent): `entries` holds EVERY covered commit in
-  * id order — positionally one per commit JSON file — and recovery replays
-  * them. v2: `entries` holds only the LIVE covered commits (neither
-  * vacuumed nor replaced — the ones whose data directories still exist);
-  * reclaimed commits are represented by their absence, `state` carries the
+  * `entries` holds only the LIVE covered commits (neither vacuumed nor
+  * replaced — the ones whose data directories still exist); reclaimed
+  * commits are represented by their absence, `state` carries the
   * fully-rolled-up topic states, and the scalar counters preserve the
   * metrics a replay would have produced. Readers that need positional
   * alignment (the V2 source's one-element-per-commit-file contract)
@@ -169,10 +166,8 @@ final case class TopicSnapshot(topic: String, nextOffset: Long,
   * `entries`. `droppedTags` keeps the epoch-idempotence tags of dropped
   * commits so a streaming-sink replay of a reclaimed epoch stays a no-op. */
 final case class LogManifest(asOf: Long, entries: Seq[ManifestEntry],
-    state: Option[Seq[TopicSnapshot]] = None,
-    publishedCount: Option[Long] = None,
-    vacuumedCount: Option[Long] = None,
-    droppedTags: Option[Map[String, Long]] = None)
+    state: Seq[TopicSnapshot], publishedCount: Long, vacuumedCount: Long,
+    droppedTags: Map[String, Long])
 
 /** A concurrent atomic batch append was rejected — parity with the
   * reference's `ErrorKind::WouldBlock` on its `is_batch_writing` CAS flag
@@ -193,30 +188,21 @@ final class InvalidDataException(msg: String) extends RuntimeException(msg)
 
 // ---- persisted metadata records (JSON via json4s) ----
 
-/** Per-topic offset/byte range added by one committed batch, plus the
-  * inclusive event-time bounds of its entries (`ts_us` micros). Ingest
-  * commits stamp every entry with the commit timestamp, so both bounds
-  * equal `tsMillis * 1000`; a compaction commit inherits min/max over the
-  * ranges it replaces — which is what keeps TIME pruning and MIN/MAX(ts_us)
-  * metadata answers alive on compacted logs (the reference's file-name ms
-  * timestamps never lose time addressing either, src/wal/paths.rs:47-49).
-  * Optional for wire-compat: ranges persisted before the field existed
-  * read back as None and fall back to commit-level semantics.
-  *
-  * `rows` is the EXACT delivered row count for this (commit, topic) pair.
-  * For an ingest commit it is always `end - start` (offsets are assigned
-  * contiguously), so ingest commits leave it None. A COMPACTION commit's
-  * `end - start` is only an UPPER bound: consumption-based vacuum can
-  * reclaim a mid-log commit (an earlier multi-topic commit survives
-  * because another topic is unconsumed) and a later compact() merges the
-  * topic range ACROSS that hole. compact() therefore records the exact
-  * sum of its sources' exact counts here; it stays None only when a
-  * legacy (pre-field) compaction source makes exactness unknowable —
-  * planner row-covering walks (trimForLimit) must then treat the count
-  * as 0 (a safe lower bound that keeps more commits), never end-start. */
+/** Per-topic offset/byte range added by one committed batch, the
+  * inclusive event-time bounds of its entries (`ts_us` micros) and its
+  * EXACT delivered row count. An ingest commit stamps every entry with the
+  * commit timestamp, so both bounds equal `tsMillis * 1000`, and assigns
+  * offsets contiguously, so `rows = end - start`. A compaction commit
+  * records min/max of its sources' bounds and the sum of their `rows`:
+  * consumption-based vacuum can reclaim a mid-log commit and a later
+  * compact() merges the topic range ACROSS that hole, so its
+  * `end - start` is only an upper bound. Keeping both facts exact is what
+  * lets TIME pruning, metadata MIN/MAX(ts_us) and COUNT, and row-covering
+  * LIMIT walks trust metadata on compacted logs (the reference's sealed
+  * segments record exact entry counts, distributed-walrus/src/
+  * metadata.rs:19-31). */
 final case class TopicRange(start: Long, end: Long, bytes: Long,
-    tsUsMin: Option[Long] = None, tsUsMax: Option[Long] = None,
-    rows: Option[Long] = None)
+    tsUsMin: Long, tsUsMax: Long, rows: Long)
 
 /** One entry of the atomic commit log: batch `id` became visible, adding
   * `topics` ranges. Replaces the reference's "offset published only after

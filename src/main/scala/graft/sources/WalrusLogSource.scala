@@ -201,7 +201,7 @@ class WalrusLogSink(spark: org.apache.spark.sql.SparkSession,
         name <- opt("queryName")
       } yield s"$confLoc/$name"
     }
-    .map(p => java.lang.Long.toHexString(graft.functions.Fnv1a64.hash(p.getBytes("UTF-8"))))
+    .map(WalrusLogSink.checkpointTag)
     .getOrElse(java.util.UUID.randomUUID().toString.take(8))
 
   private lazy val log = new graft.log.WalrusLog(spark, root, namespace)
@@ -226,6 +226,14 @@ class WalrusLogSink(spark: org.apache.spark.sql.SparkSession,
   }
 
   override def toString: String = s"WalrusLogSink($root/$namespace)"
+}
+
+object WalrusLogSink {
+  /** A sink query's identity in its epoch tags: a hash of its checkpoint
+    * location, stable across restarts of one query and distinct between
+    * queries appending to one namespace. */
+  private[graft] def checkpointTag(checkpointLocation: String): String =
+    java.lang.Long.toHexString(graft.functions.Fnv1a64.hash(checkpointLocation.getBytes("UTF-8")))
 }
 
 object WalrusLogSource {
@@ -271,8 +279,8 @@ object WalrusLogSource {
     * parsed. Batches superseded by a compaction commit (`replaces`) are
     * flagged consumed-equivalent so statistics never double-count them. */
   /** Commit-log listing counter — a test probe pinning the one-listing-
-    * per-scan contract: builder-side metadata decisions (tsBoundsKnown)
-    * and the built scan share ONE snapshot (VERDICT r9). */
+    * per-scan contract: the scan builder and the scan it builds share ONE
+    * snapshot (VERDICT r9). */
   private[graft] val commitListCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private[graft] def listCommits(nsDir: Path): Vector[(CommitRecord, Boolean)] = {
@@ -283,7 +291,7 @@ object WalrusLogSource {
   /** Newest-manifest prefix + parsed JSON tail, in commit-file order —
     * exactly one element per file in `commits/`, so cached readers can
     * append `names.drop(cached.size)` on refresh and stream checkpoints
-    * (commit INDEX offsets) stay stable. A v2 manifest holds only the LIVE
+    * (commit INDEX offsets) stay stable. A manifest holds only the LIVE
     * covered commits (fully-reclaimed ones are truncated away, the Raft
     * snapshot semantics — see WalrusLog.writeManifest); the positional
     * contract is kept by synthesizing a tombstone per covered commit file
@@ -440,12 +448,7 @@ object WalrusLogSource {
 
   private[graft] def parseCommit(p: Path): (CommitRecord, Boolean) = {
     commitParseCount.incrementAndGet()
-    val parsed = JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8"))
-    val vac = (parsed \ "vacuumed") match {
-      case org.json4s.JBool(b) => b
-      case _ => false
-    }
-    (parsed.extract[CommitRecord], vac)
+    graft.log.CommitCodec.readCommit(p)
   }
 
   /** Pushed-predicate bounds used to skip whole commits from metadata —
@@ -454,10 +457,7 @@ object WalrusLogSource {
     * AND ts pruning use the per-topic [[graft.log.TopicRange]] each commit
     * records (ranges carry inclusive `ts_us` bounds; a compaction commit
     * inherits min/max over the ranges it replaces, so compacted logs keep
-    * time pruning — VERDICT r8). Legacy ranges without bounds fall back to
-    * the commit timestamp, EXACT for ingest commits because every entry
-    * carries `ts_us = tsMillis * 1000` (WalrusLog.appendDF); a legacy
-    * compaction range waives the ts test. Residual evaluation stays with
+    * time pruning — VERDICT r8). Residual evaluation stays with
     * Spark's post-scan Filter (codegen'd), so pruning here is purely an
     * IO reduction, never a semantics change. */
   private[graft] final case class PruneSpec(
@@ -477,6 +477,11 @@ object WalrusLogSource {
     @transient private lazy val patternRe =
       topicPattern.map(java.util.regex.Pattern.compile)
     def isNoop: Boolean = this == PruneSpec()
+    /** No offset or ts bound pushed: those prune at commit granularity,
+      * so only then do metadata row counts match what the scan delivers. */
+    def boundsFree: Boolean =
+      offsetMin == Long.MinValue && offsetMax == Long.MaxValue &&
+        tsUsMin == Long.MinValue && tsUsMax == Long.MaxValue
     def withTopic(t: Option[String]): PruneSpec = t match {
       case Some(v) => copy(topics = Some(topics.getOrElse(Set(v)).intersect(Set(v))))
       case None => this
@@ -488,17 +493,10 @@ object WalrusLogSource {
       // commit survives iff SOME surviving topic range overlaps both
       // pushed intervals (per-range conjunction: strictly tighter than
       // testing offset and ts against the whole commit)
-      val isCompaction = c.replaces.exists(_.nonEmpty)
-      val commitUs = c.tsMillis * 1000L
       c.topics.exists { case (t, r) =>
         topicMatches(t) &&
-          r.start <= offsetMax && r.end - 1 >= offsetMin && {
-            (r.tsUsMin, r.tsUsMax) match {
-              case (Some(lo), Some(hi)) => hi >= tsUsMin && lo <= tsUsMax
-              case _ =>
-                isCompaction || (commitUs >= tsUsMin && commitUs <= tsUsMax)
-            }
-          }
+          r.start <= offsetMax && r.end - 1 >= offsetMin &&
+          r.tsUsMax >= tsUsMin && r.tsUsMin <= tsUsMax
       }
     }
     override def toString: String = {
@@ -580,36 +578,20 @@ object WalrusLogSource {
     * under ANY layout, compactions included") is property-testable
     * without building logs (PropertySpec). Semantics and the threshold
     * argument: see limitPrefix's scaladoc. */
-  /** Exact delivered rows for one (commit, topic-range) — a LOWER bound
-    * that is safe for row-covering walks. Ingest commits assign offsets
-    * contiguously, so end-start is exact. A compaction's end-start is
-    * only an UPPER bound (vacuum can reclaim a mid-log commit and a
-    * later compact() merges the topic range across the hole), so use its
-    * recorded exact count; when a legacy pre-`rows` record leaves that
-    * unknown, count 0 — the walk then conservatively keeps MORE commits
-    * instead of stopping early on an overcount (ADVICE r10). */
-  private def exactRowsLB(c: CommitRecord, r: TopicRange): Long =
-    if (c.replaces.exists(_.nonEmpty)) r.rows.getOrElse(0L)
-    else r.end - r.start
-
   private[graft] def trimForLimit(commits: Seq[(CommitRecord, Boolean)],
       spec: PruneSpec, limit: Option[Int],
       limitOrderCol: Option[String], limitFromTail: Boolean)
-      : Seq[(CommitRecord, Boolean)] =
+      : Seq[(CommitRecord, Boolean)] = {
+    def rowsOf(c: CommitRecord): Long =
+      c.topics.iterator.collect { case (t, r) if spec.topicMatches(t) => r.rows }.sum
     limit match {
       case None => commits
-      case Some(_) if spec.offsetMin != Long.MinValue ||
-          spec.offsetMax != Long.MaxValue ||
-          spec.tsUsMin != Long.MinValue ||
-          spec.tsUsMax != Long.MaxValue => commits
+      case Some(_) if !spec.boundsFree => commits
       case Some(n) if limitOrderCol.isEmpty =>
         var covered = 0L
         commits.takeWhile { case (c, flagged) =>
           val take = covered < n
-          if (take && !flagged)
-            covered += c.topics.iterator.collect {
-              case (t, r) if spec.topicMatches(t) => exactRowsLB(c, r)
-            }.sum
+          if (take && !flagged) covered += rowsOf(c)
           take
         }
       case Some(n) if limitOrderCol.contains("offset") =>
@@ -619,8 +601,7 @@ object WalrusLogSource {
         val keep = scala.collection.mutable.Set.empty[Long]
         commits.iterator.filter(!_._2)
           .flatMap { case (c, _) => c.topics.iterator.collect {
-            case (t, r) if spec.topicMatches(t) =>
-              (t, c.id, r, exactRowsLB(c, r)) } }
+            case (t, r) if spec.topicMatches(t) => (t, c.id, r, r.rows) } }
           .toSeq.groupBy(_._1).foreach { case (_, cover) =>
             val ordered =
               if (limitFromTail)
@@ -633,61 +614,32 @@ object WalrusLogSource {
           }
         commits.filter { case (c, flagged) => !flagged && keep(c.id) }
       case Some(n) => // limitOrderCol = Some("ts_us")
-        // per-commit guaranteed ts bounds over the spec-matching topics
-        def bounds(c: CommitRecord): (Long, Long) = {
-          val rs = c.topics.iterator.collect {
-            case (t, r) if spec.topicMatches(t) => r }.toSeq
-          if (rs.isEmpty) (Long.MinValue, Long.MaxValue) // 0 rows: filtered below
-          else if (c.replaces.exists(_.nonEmpty)) {
-            // compaction: rows keep ORIGINAL timestamps — recorded range
-            // bounds or nothing (legacy: unbounded, never counted)
-            (if (rs.forall(_.tsUsMin.isDefined)) rs.flatMap(_.tsUsMin).min
-             else Long.MinValue,
-             if (rs.forall(_.tsUsMax.isDefined)) rs.flatMap(_.tsUsMax).max
-             else Long.MaxValue)
-          } else {
-            // ingest: every entry carries ts_us = tsMillis·1000, so the
-            // commit instant is exact even for pre-bounds records
-            (rs.flatMap(_.tsUsMin).minOption.getOrElse(c.tsMillis * 1000L),
-             rs.flatMap(_.tsUsMax).maxOption.getOrElse(c.tsMillis * 1000L))
-          }
-        }
-        // candidacy by the UPPER bound (end-start ≥ actual, so a commit
-        // with any live rows stays a candidate); the covering walk by the
-        // exact/LOWER bound (overcounting would stop the walk early and
-        // drop commits holding true top-n rows — the vacuum-then-compact
-        // hole, ADVICE r10)
-        val cand = commits.collect { case (c, false) =>
-          val ub = c.topics.iterator.collect {
-            case (t, r) if spec.topicMatches(t) => r.end - r.start }.sum
-          val lb = c.topics.iterator.collect {
-            case (t, r) if spec.topicMatches(t) => exactRowsLB(c, r) }.sum
-          val (lo, hi) = bounds(c)
-          (c, lo, hi, lb, ub)
-        }.filter(_._5 > 0L)
-        // NOTE: descending via Ordering.reverse, NEVER -lo — a legacy
-        // commit's Long.MinValue bound negates to ITSELF and would sort
-        // first, silently corrupting the threshold walk (caught by the
-        // trimming property test)
+        // per-commit ts bounds and rows over the spec-matching topics
+        val cand = commits
+          .collect { case (c, false) =>
+            (c, c.topics.collect { case (t, r) if spec.topicMatches(t) => r }) }
+          .collect { case (c, rs) if rs.nonEmpty =>
+            (c, rs.map(_.tsUsMin).min, rs.map(_.tsUsMax).max, rs.map(_.rows).sum) }
         val ordered =
           if (limitFromTail)
-            cand.sortBy { case (_, lo, _, _, _) => lo }(Ordering[Long].reverse)
-          else cand.sortBy { case (_, _, hi, _, _) => hi }
+            cand.sortBy { case (_, lo, _, _) => lo }(Ordering[Long].reverse)
+          else cand.sortBy { case (_, _, hi, _) => hi }
         var covered = 0L
         var threshold = if (limitFromTail) Long.MinValue else Long.MaxValue
         val it = ordered.iterator
         while (covered < n && it.hasNext) {
-          val (_, lo, hi, lb, _) = it.next()
-          covered += lb
+          val (_, lo, hi, rows) = it.next()
+          covered += rows
           threshold = if (limitFromTail) lo else hi
         }
         val keep =
           if (covered < n) cand.map(_._1.id).toSet // < n rows total: all live
-          else cand.collect { case (c, lo, hi, _, _)
+          else cand.collect { case (c, lo, hi, _)
             if (if (limitFromTail) hi >= threshold else lo <= threshold) =>
               c.id }.toSet
         commits.filter { case (c, flagged) => !flagged && keep(c.id) }
     }
+  }
 
   /** Partition-planning invocation counter — a test probe pinning the
     * one-listing-per-scan contract of [[WalrusLogScan.plannedPartitions]]
@@ -927,12 +879,8 @@ class WalrusLogTable(options: CaseInsensitiveStringMap)
         * IO at any log size: counting a 100 TB namespace costs one
         * manifest read. Only legal when no offset/ts bound was pushed
         * (those prune at commit granularity, so metadata totals would
-        * overcount). ts aggregates additionally require every live
-        * compaction commit to carry range ts bounds (legacy compactions
-        * rewrote rows with original timestamps but recorded none — see
-        * [[tsBoundsKnown]]); ingest commits are exact without stored
-        * bounds (every entry carries the commit ts). Engine columns are
-        * never null, so COUNT(col) ≡ COUNT(*). */
+        * overcount). Engine columns are never null, so
+        * COUNT(col) ≡ COUNT(*). */
       private def aggSpec(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
           : Option[(Boolean, Seq[String])] = {
         import org.apache.spark.sql.connector.expressions.NamedReference
@@ -942,63 +890,30 @@ class WalrusLogTable(options: CaseInsensitiveStringMap)
             case r: NamedReference if r.fieldNames.length == 1 => Some(r.fieldNames()(0))
             case _ => None
           }
-        val boundsFree =
-          prune.offsetMin == Long.MinValue && prune.offsetMax == Long.MaxValue &&
-            prune.tsUsMin == Long.MinValue && prune.tsUsMax == Long.MaxValue
-        if (!boundsFree) return None
+        if (!prune.boundsFree) return None
         val byTopic = agg.groupByExpressions.toSeq match {
           case Seq() => Some(false)
           case Seq(g) if name(g).contains("topic") => Some(true)
           case _ => None
         }
         val cols = agg.aggregateExpressions.toSeq.map {
-          case _: CountStar if rowsKnown => Some("count")
-          case c: Count if !c.isDistinct && rowsKnown && name(c.column).exists(
+          case _: CountStar => Some("count")
+          case c: Count if !c.isDistinct && name(c.column).exists(
             Set("topic", "offset", "ts_us", "value", "checksum")) => Some("count")
           case m: Min if name(m.column).contains("offset") => Some("min_offset")
           case m: Max if name(m.column).contains("offset") => Some("max_offset")
-          case m: Min if name(m.column).contains("ts_us") && tsBoundsKnown => Some("min_ts")
-          case m: Max if name(m.column).contains("ts_us") && tsBoundsKnown => Some("max_ts")
+          case m: Min if name(m.column).contains("ts_us") => Some("min_ts")
+          case m: Max if name(m.column).contains("ts_us") => Some("max_ts")
           case _ => None
         }
         for (bt <- byTopic; cs <- Some(cols) if cs.forall(_.isDefined))
           yield (bt, cs.map(_.get))
       }
 
-      /** ONE commit listing per built scan: builder-side metadata
-        * decisions (tsBoundsKnown) and the scan this builder builds share
-        * this snapshot — evaluated lazily on first use by either side
-        * (VERDICT r9: tsBoundsKnown used to run its own listing). */
+      /** ONE commit listing per built scan, shared by whichever scan
+        * this builder builds — evaluated lazily on first use. */
       private lazy val builderCommits: Vector[(CommitRecord, Boolean)] =
         WalrusLogSource.listCommits(nsDir)
-
-      /** Metadata ts bounds cover the whole log exactly: true unless some
-        * LIVE compaction commit predates the per-range ts bounds (its
-        * rewritten rows keep original timestamps, so without recorded
-        * bounds a metadata MIN/MAX(ts_us) would answer wrongly — refuse
-        * the push instead). Evaluated lazily only when a ts aggregate is
-        * actually offered, over the shared [[builderCommits]] snapshot. */
-      private def tsBoundsKnown: Boolean =
-        builderCommits.forall { case (c, flagged) =>
-          flagged || !c.replaces.exists(_.nonEmpty) ||
-            c.topics.valuesIterator.forall(r =>
-              r.tsUsMin.isDefined && r.tsUsMax.isDefined)
-        }
-
-      /** COUNT may be answered from metadata only when every live
-        * compaction commit carries its exact row count — a compaction's
-        * end-start is only an UPPER bound (a consumption vacuum can
-        * reclaim a mid-log commit and compact() merges across the hole),
-        * so a legacy pre-`rows` compaction makes the metadata COUNT
-        * unknowable and the aggregate must fall back to a real scan
-        * (same gate pattern as [[tsBoundsKnown]]). MIN/MAX need no gate:
-        * a compaction's range endpoints are attained by real rows (its
-        * sources were live when merged). */
-      private def rowsKnown: Boolean =
-        builderCommits.forall { case (c, flagged) =>
-          flagged || !c.replaces.exists(_.nonEmpty) ||
-            c.topics.valuesIterator.forall(_.rows.isDefined)
-        }
 
       override def supportCompletePushDown(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -1020,10 +935,7 @@ class WalrusLogTable(options: CaseInsensitiveStringMap)
         * no offset/ts bound is pushed — those filter rows WITHIN
         * surviving commits, so a row-count prefix could under-deliver. */
       override def pushLimit(limit: Int): Boolean = {
-        val boundsFree =
-          prune.offsetMin == Long.MinValue && prune.offsetMax == Long.MaxValue &&
-            prune.tsUsMin == Long.MinValue && prune.tsUsMax == Long.MaxValue
-        if (boundsFree && limit > 0) { limitPushed = Some(limit); true }
+        if (prune.boundsFree && limit > 0) { limitPushed = Some(limit); true }
         else false
       }
       override def isPartiallyPushed(): Boolean = true
@@ -1048,16 +960,13 @@ class WalrusLogTable(options: CaseInsensitiveStringMap)
       override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
           limit: Int): Boolean = {
         import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-        val boundsFree =
-          prune.offsetMin == Long.MinValue && prune.offsetMax == Long.MaxValue &&
-            prune.tsUsMin == Long.MinValue && prune.tsUsMax == Long.MaxValue
         val orderCol = if (orders.length != 1) None
         else orders(0).expression() match {
           case r: NamedReference if r.fieldNames.length == 1 &&
               Set("offset", "ts_us")(r.fieldNames()(0)) => Some(r.fieldNames()(0))
           case _ => None
         }
-        if (boundsFree && orderCol.isDefined && limit > 0) {
+        if (prune.boundsFree && orderCol.isDefined && limit > 0) {
           limitPushed = Some(limit)
           limitOrderCol = orderCol
           limitFromTail = orders(0).direction() == SortDirection.DESCENDING
@@ -1224,14 +1133,8 @@ class WalrusLogScan(nsDir: Path, options: CaseInsensitiveStringMap,
       case (c, vacuumed) if !vacuumed && spec.commitMatches(c) =>
         c.topics.foreach { case (t, r) =>
           if (spec.topicMatches(t)) {
-            // exact when recorded; a legacy compaction falls back to the
-            // end-start UPPER bound — for statistics an overcount only
-            // makes broadcast decisions more conservative, never wrong
-            val n =
-              if (c.replaces.exists(_.nonEmpty)) r.rows.getOrElse(r.end - r.start)
-              else r.end - r.start
-            rows += n
-            bytes += r.bytes + meta * n
+            rows += r.rows
+            bytes += r.bytes + meta * r.rows
           }
         }
       case _ => ()
@@ -1310,10 +1213,9 @@ class WalrusLogScan(nsDir: Path, options: CaseInsensitiveStringMap,
     * surviving row counts reach n yields a threshold T with ≥ n rows of
     * ts ≥ T — so every true top-n row has ts ≥ T and lives in a commit
     * whose hi ≥ T; keeping exactly those is a sound superset. For pure
-    * ingest logs (lo = hi) this degenerates to the point walk. A legacy
-    * compaction with no recorded bounds is never counted toward the
-    * threshold and always kept (graceful wholesale-yield ONLY for those
-    * commits, not the whole list).
+    * ingest logs (lo = hi) this degenerates to the point walk. Row counts
+    * are each range's exact `rows`, never end - start: a compaction
+    * merged across a vacuum hole would overcount and stop the walk early.
     *
     * Safety bail-out (return the full list — pure IO give-up, Spark
     * applies the LIMIT/TopN either way): offset/ts bounds arriving via
@@ -1460,8 +1362,7 @@ class WalrusMicroBatchStream(
         val probeUs = ms * 1000L
         val all = commits
         val i = all.indexWhere { case (c, flagged) =>
-          !flagged && c.topics.nonEmpty && c.topics.valuesIterator.map(r =>
-            r.tsUsMax.getOrElse(c.tsMillis * 1000L)).max >= probeUs
+          !flagged && c.topics.valuesIterator.exists(_.tsUsMax >= probeUs)
         }
         if (i < 0) all.size.toLong else i.toLong
     })
@@ -1502,7 +1403,7 @@ class WalrusMicroBatchStream(
   /** Rows a commit delivers to THIS stream (its topic/prune view). */
   private def commitRows(c: CommitRecord): Long =
     c.topics.iterator.collect {
-      case (t, r) if streamSpec.topicMatches(t) => r.end - r.start
+      case (t, r) if streamSpec.topicMatches(t) => r.rows
     }.sum
 
   /** Decoded bytes a commit delivers to this stream — payload plus the
@@ -1513,8 +1414,7 @@ class WalrusMicroBatchStream(
   private def commitBytes(c: CommitRecord): Long = {
     val meta = metaOverhead
     c.topics.iterator.collect {
-      case (t, r) if streamSpec.topicMatches(t) =>
-        r.bytes + meta * (r.end - r.start)
+      case (t, r) if streamSpec.topicMatches(t) => r.bytes + meta * r.rows
     }.sum
   }
 
@@ -1661,11 +1561,7 @@ class WalrusMicroBatchStream(
           (p \ "p").extract[Int] ->
             ((p \ "commitIdx").extract[Long], (p \ "row").extract[Long])
         }.toMap
-        val n = (parsed \ "n") match {
-          case org.json4s.JInt(v) => v.toInt
-          case _ => parts.size // pre-"n" checkpoint: the count IS parts.size
-        }
-        WalrusRealTimeOffset(parts, n)
+        WalrusRealTimeOffset(parts, (parsed \ "n").extract[Int])
       case _ => CommitIndexOffset((parsed \ "commitIndex").extract[Long])
     }
   }
@@ -1775,19 +1671,8 @@ object WalrusAggRowsScan {
         if (spec.topicMatches(t)) {
           val (n, lo, hi, tlo, thi) = perTopic.getOrElse(t,
             (0L, Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue))
-          // legacy ranges without bounds: exact for ingest commits (every
-          // entry carries the commit ts); compaction commits without
-          // bounds never reach here (the builder's tsBoundsKnown gate)
-          val rlo = r.tsUsMin.getOrElse(c.tsMillis * 1000L)
-          val rhi = r.tsUsMax.getOrElse(c.tsMillis * 1000L)
-          // exact rows: a compaction's end-start is only an UPPER bound
-          // (merged across vacuum holes); the builder's rowsKnown gate
-          // guarantees `rows` is recorded whenever COUNT reaches here
-          val exact =
-            if (c.replaces.exists(_.nonEmpty)) r.rows.getOrElse(r.end - r.start)
-            else r.end - r.start
-          perTopic(t) = (n + exact, math.min(lo, r.start),
-            math.max(hi, r.end - 1), math.min(tlo, rlo), math.max(thi, rhi))
+          perTopic(t) = (n + r.rows, math.min(lo, r.start),
+            math.max(hi, r.end - 1), math.min(tlo, r.tsUsMin), math.max(thi, r.tsUsMax))
         }
       }
     }
@@ -1975,7 +1860,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   /** Rows commit `c` would deliver to THIS stream's topic/prune view. */
   private def lossViewRows(c: CommitRecord): Long =
     c.topics.iterator.collect {
-      case (t, r) if lossSpec.topicMatches(t) => r.end - r.start
+      case (t, r) if lossSpec.topicMatches(t) => r.rows
     }.sum
 
   /** failOnDataLoss for the real-time tail (the micro-batch source's

@@ -83,17 +83,20 @@ object WalrusStreams {
   }
 
   /** Streaming writer into a log: rows need `topic` + `value` columns.
-    * Epoch-tagged appendDF makes retried epochs no-ops (exactly-once).
+    * Epoch-tagged appendDF makes retried epochs no-ops (exactly-once); the
+    * tag carries the checkpoint dir's identity, so another sink query into
+    * the same log (or a fresh checkpoint) never collides with these tags.
     * Installs the checkpoint manager on `df`'s session as [[readStream]]
     * does, unless the session already names one. */
   def sink(df: DataFrame, log: WalrusLog, checkpointDir: String,
       triggerMs: Long = DefaultTriggerMs): DataStreamWriter[org.apache.spark.sql.Row] = {
     graft.io.LocalCheckpointFileManager.installIfUnset(df.sparkSession)
+    val tagBase = s"stream-epoch-${graft.sources.WalrusLogSink.checkpointTag(checkpointDir)}"
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        log.appendDF(batch, tag = Some(s"stream-epoch-$epochId"))
+        log.appendDF(batch, tag = Some(s"$tagBase-$epochId"))
         ()
       }
   }

@@ -3,10 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
 
-import graft.log.{CommitRecord, LogManifest, ManifestEntry, TopicRange}
+import graft.log.{CommitCodec, CommitRecord, LogManifest, ManifestEntry, SegmentSnap,
+  TopicRange, TopicSnapshot}
 
 /** Driver-side planner scaling probe (VERDICT r9 item 3): the 100 TB
   * posture's driver risk is COMMIT COUNT, not row count — a namespace
@@ -20,15 +19,13 @@ import graft.log.{CommitRecord, LogManifest, ManifestEntry, TopicRange}
   *   - plain LIMIT prefix trimming
   *   - offset-TopN per-topic trimming
   *   - ts-TopN threshold trimming (the r10 sort-by-bounds walk)
-  *   - MIN/MAX(ts_us) metadata aggregate (tsBoundsKnown + fromMetadata)
+  *   - MIN/MAX(ts_us) metadata aggregate (fromMetadata)
   *   - COUNT(*) metadata aggregate
   *
   * Usage: runMain graft.tools.CommitScaleProbe [counts...] (default
   * 10000 100000). Prints one line per (mode, count, path) with wall ms;
   * results recorded in BASELINE.md. */
 object CommitScaleProbe {
-  private implicit val formats: Formats = DefaultFormats
-
   private val T0 = 1704067200000L
   private val Topics = 4
 
@@ -44,23 +41,22 @@ object CommitScaleProbe {
     while (i < n) {
       val ts = T0 + i * 1000L
       val topics = (0 until Topics).map { t =>
-        s"t$t" -> TopicRange(i * 100L, (i + 1) * 100L, 5000L,
-          Some(ts * 1000L), Some(ts * 1000L))
+        s"t$t" -> TopicRange(i * 100L, (i + 1) * 100L, 5000L, ts * 1000L, ts * 1000L, 100L)
       }.toMap
       val rec = CommitRecord(i.toLong, ts, topics)
       records += rec
-      Files.write(commitsDir.resolve(f"$i%012d.json"),
-        Serialization.write(rec).getBytes("UTF-8"))
+      CommitCodec.publish(commitsDir, rec)
       i += 1
     }
     if (withManifest) {
       val manifestsDir = ns.resolve("manifests")
       Files.createDirectories(manifestsDir)
       val entries = records.map(r =>
-        ManifestEntry(r.id, r.tsMillis, r.topics, r.tag, r.replaces)).toSeq
-      Files.write(manifestsDir.resolve(f"manifest-${n - 1}%012d.json"),
-        Serialization.write(LogManifest((n - 1).toLong, entries))
-          .getBytes("UTF-8"))
+        ManifestEntry(r.id, r.tsMillis, r.topics, r.tag, r.replaces, vacuumed = false)).toSeq
+      val state = (0 until Topics).map(t => TopicSnapshot(s"t$t", n * 100L,
+        n * 5000L, 0L, 0L, Seq.empty[SegmentSnap], n.toLong, clean = false))
+      CommitCodec.writeManifest(manifestsDir.resolve(f"manifest-${n - 1}%012d.json"),
+        LogManifest((n - 1).toLong, entries, state, n.toLong, 0L, Map.empty))
     }
     root
   }

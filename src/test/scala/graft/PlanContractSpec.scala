@@ -1178,7 +1178,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"a data scan survived next to the metadata answer:\n$plan")
   }
 
-  test("legacy compaction commit without ts bounds refuses the ts agg push, stays correct") {
+  test("a compaction commit stripped of its ts bounds fails the scan and the log open, naming the file") {
     val root = TestDirs.create("plan-tslegacy-").toString
     val log = new graft.log.WalrusLog(spark, root)
     val t0 = 1704067200000L
@@ -1187,26 +1187,19 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       ingestTs = new java.sql.Timestamp(tsMs))
     one("a", t0); one("b", t0 + 3600000L)
     val cid = log.compact().get
-    // simulate a compaction commit persisted BEFORE ts bounds existed
+    // the shape of a compaction commit persisted before ts bounds existed
     val cPath = java.nio.file.Paths.get(root, "default", "commits", f"$cid%012d.json")
     val stripped = new String(Files.readAllBytes(cPath), "UTF-8")
       .replaceAll(",\"tsUsMin\":-?\\d+", "").replaceAll(",\"tsUsMax\":-?\\d+", "")
     assert(!stripped.contains("tsUsMin"))
     Files.write(cPath, stripped.getBytes("UTF-8"))
-    val df = spark.read.format("walruslog").option("path", root).load()
-      .groupBy("topic").agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
-    val plan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(!plan.contains("WalrusAggRowsScan"),
-      s"boundless compaction must refuse the metadata ts answer:\n$plan")
-    val r = df.collect().head
-    assert(r.getLong(1) == t0 * 1000L && r.getLong(2) == (t0 + 3600000L) * 1000L,
-      r.toString) // data-scan answer keeps the original timestamps
-    // ...and a ts predicate on the boundless compaction WAIVES pruning
-    // rather than wrongly skipping it (rows still come back)
-    val n = spark.read.format("walruslog").option("path", root).load()
-      .where(col("ts_us") >= (t0 + 3600000L) * 1000L).count()
-    assert(n == 1L, s"legacy waiver lost rows: $n")
+    def failure(body: => Any): String =
+      intercept[IllegalStateException](body).getMessage
+    val scan = failure(spark.read.format("walruslog").option("path", root).load()
+      .groupBy("topic").agg(min("ts_us"), max("ts_us")).collect())
+    assert(scan.contains(cPath.toString) && scan.contains("tsUsMin"), scan)
+    val open = failure(new graft.log.WalrusLog(spark, root))
+    assert(open.contains(cPath.toString) && open.contains("tsUsMin"), open)
   }
 
   test("SPJ partition planning is memoized: one dir walk per scan, however often Spark re-plans") {

@@ -294,12 +294,12 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("LIMIT/TopN trimming is sound on random logs with compactions and legacy bounds") {
+  test("LIMIT/TopN trimming is sound on random logs with compactions and vacuum holes") {
     // the r10 invariant behind WalrusLogScan's pushed-limit planning: for
     // ANY commit layout — multi-topic ingests, repeated partial
-    // compactions (old offsets and ts RANGES at new ids), legacy records
-    // without stored ts bounds — the kept commits contain the true top-n
-    // rows. Rows are simulated from the same metadata the planner sees,
+    // compactions (old offsets and ts RANGES at new ids), compactions
+    // merged across vacuumed commits — the kept commits contain the true
+    // top-n rows. Rows are simulated from the same metadata the planner sees,
     // with compactions carrying their sources' EXACT rows (what
     // WalrusLog.compact does).
     import graft.log.{CommitRecord, TopicRange}
@@ -327,31 +327,12 @@ class PropertySpec extends AnyFunSuite {
           // compact a prefix of the live commits (maxSourceBatches shape)
           val live = commits.filter(e => !e._2 && e._1.topics.nonEmpty).map(_._1)
           val srcs = live.take(2 + r.nextInt(live.size - 1))
-          // `legacy` simulates a pre-bounds-era compaction record; a
-          // MODERN compaction over such a source must propagate the
-          // unknown-ness per topic (WalrusLog.compact's knownBound rule)
-          val legacy = r.nextInt(4) == 0
-          val merged = srcs.flatMap(c => c.topics.toSeq.map { case (t, tr) =>
-            (t, c, tr) }).groupBy(_._1).map { case (t, rs) =>
-            val allKnown = rs.forall { case (_, c, tr) =>
-              tr.tsUsMin.isDefined || !c.replaces.exists(_.nonEmpty) }
-            val lo = rs.map { case (_, c, tr) =>
-              tr.tsUsMin.getOrElse(c.tsMillis * 1000L) }.min
-            val hi = rs.map { case (_, c, tr) =>
-              tr.tsUsMax.getOrElse(c.tsMillis * 1000L) }.max
-            // exact rows mirror WalrusLog.compact: sum of sources' exact
-            // counts (ingest = end-start; compaction = its recorded
-            // rows), unknown-ness propagating; a `legacy` record predates
-            // the field entirely
-            val exact = rs.map { case (_, c, tr) =>
-              if (c.replaces.exists(_.nonEmpty)) tr.rows
-              else Some(tr.end - tr.start) }
-            val nRows = if (exact.forall(_.isDefined)) Some(exact.flatten.sum)
-              else None
-            t -> TopicRange(rs.map(_._3.start).min, rs.map(_._3.end).max, 0L,
-              if (legacy || !allKnown) None else Some(lo),
-              if (legacy || !allKnown) None else Some(hi),
-              if (legacy) None else nRows)
+          // bounds and exact rows mirror WalrusLog.compact: min/max and
+          // sum over the sources (end-start overcounts across a hole)
+          val merged = srcs.flatMap(_.topics.toSeq).groupBy(_._1).map { case (t, trs) =>
+            val rs = trs.map(_._2)
+            t -> TopicRange(rs.map(_.start).min, rs.map(_.end).max, 0L,
+              rs.map(_.tsUsMin).min, rs.map(_.tsUsMax).max, rs.map(_.rows).sum)
           }
           tsMs += 1000L
           val rec = CommitRecord(id, tsMs, merged, None, Some(srcs.map(_.id)))
@@ -363,7 +344,6 @@ class PropertySpec extends AnyFunSuite {
         } else {
           // ingest commit: random topic subset, random counts
           tsMs += 1000L
-          val legacy = r.nextInt(5) == 0
           val mine = topics.filter(_ => r.nextInt(2) == 0) match {
             case Seq() => Seq(topics(r.nextInt(topics.size)))
             case s => s
@@ -372,9 +352,7 @@ class PropertySpec extends AnyFunSuite {
             val start = nextOffset.getOrElse(t, 0L)
             val n = 1 + r.nextInt(5)
             nextOffset(t) = start + n
-            t -> TopicRange(start, start + n, 0L,
-              if (legacy) None else Some(tsMs * 1000L),
-              if (legacy) None else Some(tsMs * 1000L))
+            t -> TopicRange(start, start + n, 0L, tsMs * 1000L, tsMs * 1000L, n.toLong)
           }.toMap
           rowsOf(id) = ranges.toSeq.flatMap { case (t, tr) =>
             (tr.start until tr.end).map(o => (t, o, tsMs * 1000L)) }

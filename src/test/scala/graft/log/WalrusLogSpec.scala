@@ -675,8 +675,7 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, "b", (0L, 2L, 8L)),
       (3L, "a", (3L, 5L, 4L))))
     // ingest ranges carry exact ts bounds (lo == hi == commit instant)
-    assert(log.snapshotManifest().forall { case (_, _, r) =>
-      r.tsUsMin.isDefined && r.tsUsMin == r.tsUsMax })
+    assert(log.snapshotManifest().forall { case (_, _, r) => r.tsUsMin == r.tsUsMax })
     // storage reclamation drops reclaimed batches from the manifest
     // (a snapshot ships only data that still exists)
     assert(log.vacuumOlderThan(System.currentTimeMillis() + 1000).size == 3)
@@ -1190,9 +1189,9 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nsDir = java.nio.file.Paths.get(root, "default")
     val m = WalrusLog.readNewestManifest(nsDir).get
     assert(m.entries.map(_.id) == Seq(2L, 3L))
-    assert(m.state.exists(_.exists(s => s.topic == "t" && s.nextOffset == 4L)))
-    assert(m.publishedCount.contains(4L))
-    assert(m.vacuumedCount.contains(2L))
+    assert(m.state.exists(s => s.topic == "t" && s.nextOffset == 4L))
+    assert(m.publishedCount == 4L)
+    assert(m.vacuumedCount == 2L)
     // METRICS totals stay monotone across the shed
     assert(log.metricsJson().contains("\"commits\":4"))
     assert(log.metricsJson().contains("\"vacuumed_batches\":2"))
@@ -1260,7 +1259,7 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.totalAppended("t") == 4L)
     // sink families still collapse to one entry (boundedness preserved)
     val nsDir = java.nio.file.Paths.get(root, "default")
-    val dropped = WalrusLog.readNewestManifest(nsDir).get.droppedTags.get
+    val dropped = WalrusLog.readNewestManifest(nsDir).get.droppedTags
     assert(dropped.contains("job-1") && dropped.contains("job-2"), dropped.toString)
     assert(dropped.contains("v1sink-q-1") && !dropped.contains("v1sink-q-0"),
       s"sink family must keep only the newest epoch: $dropped")
@@ -1282,7 +1281,7 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     log.append("t", bytes("e1")) // manifest written here, snapshotting 'gone'
     val nsDir = java.nio.file.Paths.get(root, "default")
     assert(WalrusLog.readNewestManifest(nsDir).exists(
-      _.state.exists(_.exists(_.topic == "gone"))))
+      _.state.exists(_.topic == "gone")))
     assert(log.unregisterTopic("gone")) // tombstone lands AFTER the snapshot
     val re = new WalrusLog(spark, root, cfg = cfg)
     assert(!re.topicNames.contains("gone"),

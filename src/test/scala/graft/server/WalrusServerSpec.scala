@@ -42,6 +42,25 @@ class WalrusServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.close()
   }
 
+  test("STATE and METRICS replies are valid JSON for names holding quotes and backslashes") {
+    import org.json4s.{JInt, JString}
+    import org.json4s.jackson.JsonMethods.parse
+    val root = graft.TestDirs.create("wserver-").toString
+    val log = new WalrusLog(spark, root, namespace = "n\"s\\")
+    val server = new WalrusServer(log)
+    try {
+      val p = server.boundPort
+      val topic = "a\"b\\c"
+      assert(WalrusClient.call(p, s"PUT $topic x") == "OK")
+      val state = parse(WalrusClient.call(p, s"STATE $topic").stripPrefix("OK "))
+      assert((state \ "topic") == JString(topic))
+      assert((state \ "next_offset") == JInt(1))
+      val metrics = parse(WalrusClient.call(p, "METRICS").stripPrefix("OK "))
+      assert((metrics \ "namespace") == JString("n\"s\\"))
+      assert((metrics \ "total_entries") == JInt(1))
+    } finally server.close()
+  }
+
   test("replies leave without a Nagle/delayed-ACK stall: 20 STATE round trips on one connection") {
     val root = graft.TestDirs.create("wserver-").toString
     val log = new WalrusLog(spark, root)

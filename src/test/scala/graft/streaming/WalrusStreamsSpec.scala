@@ -222,6 +222,27 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == (0 until 8).map(i => s"m$i").toSet)
   }
 
+  test("two sink queries into one log keep apart by checkpoint; a restart lands only the delta") {
+    val rootA = tempRoot(); val rootB = tempRoot(); val dstRoot = tempRoot()
+    val a = new WalrusLog(spark, rootA)
+    val b = new WalrusLog(spark, rootB)
+    val dst = new WalrusLog(spark, dstRoot)
+    a.batchAppend("t", (0 until 3).map(i => bytes(s"a$i")))
+    b.batchAppend("t", (0 until 4).map(i => bytes(s"b$i")))
+    val ckA = tempRoot(); val ckB = tempRoot()
+    def drain(root: String, ck: String): Unit = WalrusStreams.drainOnce(
+      WalrusStreams.sink(WalrusStreams.readStream(spark, root)
+        .select(col("topic"), col("value")), dst, ck))
+    def landed = dst.batchRead("t", 1 << 20, checkpoint = false)
+      .map(e => new String(e.value, "UTF-8")).sorted
+    // both queries commit their first epoch as epoch 0
+    drain(rootA, ckA); drain(rootB, ckB)
+    assert(landed == Seq("a0", "a1", "a2", "b0", "b1", "b2", "b3"), landed.toString)
+    a.batchAppend("t", Seq(bytes("a3")))
+    drain(rootA, ckA)
+    assert(landed == Seq("a0", "a1", "a2", "a3", "b0", "b1", "b2", "b3"), landed.toString)
+  }
+
   test("writeStream.format(walruslog): V1 sink fallback appends epoch-tagged commits") {
     val srcRoot = tempRoot(); val dstRoot = tempRoot()
     val src = new WalrusLog(spark, srcRoot)
@@ -373,9 +394,6 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stream = new WalrusMicroBatchStream(Paths.get("/tmp/none"), None, None,
       WalrusLogSource.Schema)
     assert(stream.deserializeOffset(o.json()) == o)
-    // pre-"n" checkpoint json: the partition count defaults to parts.size
-    val legacy = """{"parts":[{"p":0,"commitIdx":2,"row":0},{"p":1,"commitIdx":3,"row":7}]}"""
-    assert(stream.deserializeOffset(legacy) == o)
     assert(stream.deserializeOffset(CommitIndexOffset(5L).json()) == CommitIndexOffset(5L))
     val merged = stream.mergeOffsets(Array(
       WalrusRealTimePartitionOffset(0, 2, 0), WalrusRealTimePartitionOffset(1, 3, 7)))
@@ -635,7 +653,7 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(log.vacuum().size == 4)
     val m = graft.log.WalrusLog.readNewestManifest(
       java.nio.file.Paths.get(root, "default")).get
-    assert(m.entries.isEmpty && m.state.isDefined, "expected a truncated v2 manifest")
+    assert(m.entries.isEmpty && m.state.nonEmpty, "expected a truncated v2 manifest")
     log.batchAppend("t", Seq(bytes("fresh")))
     // restart on the SAME checkpoint: exactly the new commit, no dup/loss
     drain()
