@@ -86,6 +86,16 @@ if [ -n "$CONFS$PATHINIT" ]; then
   echo "$CONFS"; echo "$PATHINIT"; echo "GATE: per-file Hadoop conf hits"; FAIL=1
 else echo "clean"; fi
 
+note "vectorized reader construction grep (batch capacity comes from graft.io.LogParquet)"
+# a vectorized reader's column vectors are allocated for its batch
+# capacity; LogParquet.openColumnar takes that capacity from the caller
+# (a file's row count from commit metadata) and has no default, so every
+# other main file must open log files through it
+READERS=$( { grep -rn "new VectorizedParquetRecordReader(" src/main 2>/dev/null || true; } \
+    | grep -v "^src/main/scala/graft/io/LogParquet\.scala:" | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)" )
+if [ -n "$READERS" ]; then echo "$READERS"; echo "GATE: vectorized reader hits"; FAIL=1
+else echo "clean"; fi
+
 note "commit metadata codec grep (commit JSON goes through graft.log.CommitCodec)"
 # one module reads and writes commits/<id>.json and the manifests: no other
 # main file extracts a commit record or manifest, or spells the vacuumed

@@ -5846,7 +5846,7 @@ object SparkEntry {
       // dedicated bounded log keeps the group set deterministic (mainLog's
       // groups vary with query execution order): g_cap consumes an exact
       // 100-entry capped batch per topic, g_all drains fully.
-      val root = Files.createTempDirectory("graft-tvf-groups-").toString
+      val root = Files.createTempDirectory(scratchParent, "graft-tvf-groups-").toString
       val log = new WalrusLog(s, root)
       log.appendDF(events(s, dir).where(col("event_id") < 600)
         .select(col("event_type").as("topic"),
@@ -5882,7 +5882,7 @@ object SparkEntry {
       // without leaving SQL. Deterministic: 2 ingest commits → compaction
       // id 2; a far-future cutoff reclaims exactly the compaction batch;
       // reads then see zero rows (storage-only reclamation).
-      val root = Files.createTempDirectory("graft-proc-").toString
+      val root = Files.createTempDirectory(scratchParent, "graft-proc-").toString
       val log = new WalrusLog(s, root)
       val ev = events(s, dir).where(col("event_id") < 300)
       (0 until 2).foreach { i =>
@@ -5918,7 +5918,7 @@ object SparkEntry {
       // committed/end/lag — Kafka's member table with topics in the
       // partition role. Same bounded fixture discipline as log_tvf_groups
       // (a dedicated log keeps the group set deterministic).
-      val root = Files.createTempDirectory("graft-tvf-members-").toString
+      val root = Files.createTempDirectory(scratchParent, "graft-tvf-members-").toString
       val log = new WalrusLog(s, root)
       log.appendDF(events(s, dir).where(col("event_id") < 600)
         .select(col("event_type").as("topic"),

@@ -49,12 +49,23 @@ object LogParquet {
       new TaskAttemptContextImpl(c, new TaskAttemptID())
     })
 
-  /** A vectorized reader over `columns` of `file`, ready for `initBatch`.
+  /** Spark's own vectorized batch size (`spark.sql.parquet.columnarReaderBatchSize`
+    * default): the most rows a log file's column vectors are sized for. */
+  val MaxBatchRows: Int = 4096
+
+  /** The batch capacity for a file of at most `rows` rows: column vectors
+    * are allocated for `capacity` rows when the batch is initialised, so a
+    * one-row file gets one-row vectors instead of 4096-row ones. */
+  def capacityFor(rows: Long): Int = math.max(1L, math.min(MaxBatchRows.toLong, rows)).toInt
+
+  /** A vectorized reader over `columns` of `file`, ready for `initBatch`,
+    * whose batches hold at most `capacity` rows (see [[capacityFor]]).
     * Every column must be in the file. */
-  def openColumnar(file: String, columns: StructType): VectorizedParquetRecordReader = {
+  def openColumnar(file: String, columns: StructType,
+      capacity: Int): VectorizedParquetRecordReader = {
     val path = new Path(file)
     val length = path.getFileSystem(conf).getFileStatus(path).getLen
-    val reader = new VectorizedParquetRecordReader(false, 4096)
+    val reader = new VectorizedParquetRecordReader(false, capacity)
     var ok = false
     try {
       reader.initialize(new FileSplit(path, 0L, length, Array.empty[String]), context(columns))

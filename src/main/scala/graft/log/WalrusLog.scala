@@ -90,6 +90,31 @@ class WalrusLog(
   private val commits = mutable.ArrayBuffer.empty[CommitRecord]
   private val vacuumed = mutable.Set.empty[Long]
   private val replaced = mutable.Set.empty[Long] // batches rewritten by compaction
+  /** Every visible commit's range of each topic, keyed by the range's
+    * start offset. A topic's live ranges are disjoint (a compaction hides
+    * its sources the moment it lands), so the reads that follow a cursor
+    * find their covering commits with a floor lookup, not a pass over
+    * `commits`. Kept in step with `commits`, `vacuumed` and `replaced` by
+    * [[applyCommit]], [[recover]] and [[reclaimAll]]; the manifest's
+    * truncation only drops commits that are no longer visible. */
+  private val liveRanges =
+    mutable.Map.empty[String, java.util.TreeMap[java.lang.Long, CommitRecord]]
+
+  private def isVisible(c: CommitRecord): Boolean =
+    c.id >= 0 && !vacuumed.contains(c.id) && !replaced.contains(c.id)
+
+  private def indexLive(c: CommitRecord): Unit =
+    c.topics.foreach { case (t, r) =>
+      if (r.end > r.start)
+        liveRanges.getOrElseUpdate(t, new java.util.TreeMap).put(r.start, c)
+    }
+
+  private def unindexLive(c: CommitRecord): Unit =
+    c.topics.foreach { case (t, r) => liveRanges.get(t).foreach(_.remove(r.start, c)) }
+
+  /** The visible commits holding `topic`, in offset order. */
+  private def liveCommitsOf(topic: String): Iterator[CommitRecord] =
+    liveRanges.get(topic).iterator.flatMap(_.values.iterator.asScala)
   // Dropped-commit accounting (the manifest is the Raft snapshot-truncates-
   // the-log analogue, reference: distributed-walrus/src/metadata.rs:
   // 115-189): fully-reclaimed commits leave `commits` at manifest-write
@@ -746,7 +771,10 @@ class WalrusLog(
     sinceManifest += 1 // recover() recomputes after replay; commit sites roll up
     rec.replaces match {
       case Some(ids) =>
-        // Compaction: same rows, same offsets — no topic-state change.
+        // Compaction: same rows, same offsets — no topic-state change; the
+        // sources leave the read index as the compaction enters it.
+        val sources = ids.toSet
+        commits.iterator.filter(c => sources(c.id) && isVisible(c)).foreach(unindexLive)
         replaced ++= ids
       case None =>
         // Segment rollover (reference: distributed-walrus/src/monitor.rs:
@@ -760,6 +788,7 @@ class WalrusLog(
             seg => virtualNodes((seg % virtualNodes.size).toInt))
         }
     }
+    if (isVisible(rec)) indexLive(rec)
   }
 
   // =========================================================================
@@ -820,11 +849,12 @@ class WalrusLog(
     * metadata — `from` itself when its batch is still visible, the next
     * retained batch's start when retention reclaimed the range at `from`,
     * `from` unchanged when nothing newer exists (read returns empty). */
-  private def firstVisibleOffsetAtOrAfter(topic: String, from: Long): Long = {
-    val ranges = visibleCommits.flatMap(_.topics.get(topic)).filter(_.end > from)
-    if (ranges.isEmpty) from
-    else math.max(from, ranges.map(_.start).min)
-  }
+  private def firstVisibleOffsetAtOrAfter(topic: String, from: Long): Long =
+    liveRanges.get(topic).fold(from) { m =>
+      val below = m.floorEntry(from)
+      if (below != null && below.getValue.topics(topic).end > from) from
+      else Option(m.higherKey(from)).fold(from)(_.longValue)
+    }
 
   private def visibleCommits: Seq[CommitRecord] =
     commits.iterator
@@ -844,8 +874,10 @@ class WalrusLog(
     * the DSv2 source's own planner and vectorized reader; `ts` is built
     * from `ts_us` exactly as [[toDF]]'s collected `timestamp_micros` is. */
   private def readRange(topic: String, lo: Long, hi: Long): Seq[WalrusEntry] = {
-    val covering = visibleCommits.filter(
-      _.topics.get(topic).exists(r => r.start < hi && r.end > lo))
+    val covering = liveRanges.get(topic).filter(_ => lo < hi).fold(Seq.empty[CommitRecord]) { m =>
+      val from = Option(m.floorKey(lo)).fold(lo)(_.longValue)
+      m.subMap(from, true, hi, false).values.asScala.filter(_.topics(topic).end > lo).toSeq
+    }
     // WalrusLogSource.Schema: offset, ts_us, value, checksum, then the
     // `topic` partition column last (unused here — it is `topic`)
     val factory = new WalrusReaderFactory(WalrusLogSource.Schema)
@@ -940,7 +972,7 @@ class WalrusLog(
     // compaction reshuffles commit-log positions.
     var cum = 0L
     var located: Option[(Long, Long, Long)] = None
-    visibleCommits.flatMap(_.topics.get(topic)).sortBy(_.start).foreach { r =>
+    liveCommitsOf(topic).map(_.topics(topic)).foreach { r =>
       val streamBytes = r.bytes + meta * (r.end - r.start)
       if (located.isEmpty && startByte < cum + streamBytes)
         located = Some((r.start, r.end - r.start, cum))
@@ -1354,7 +1386,7 @@ class WalrusLog(
     * rewritten with its vacuumed flag, for the JSON tail past the manifest. */
   private def reclaimAll(cs: Seq[CommitRecord]): Unit = {
     if (cs.isEmpty) return
-    cs.foreach(c => vacuumed += c.id)
+    cs.foreach { c => unindexLive(c); vacuumed += c.id }
     val asOf = newestManifestAsOf
     if (cs.exists(c => asOf.exists(_ >= c.id))) writeManifest()
     cs.foreach { c =>
@@ -1520,6 +1552,7 @@ class WalrusLog(
         commits += e.record
         e.topics.foreach { case (t, _) => state(t) }
       }
+      commits.iterator.filter(isVisible).foreach(indexLive)
       maxPublishedId = m.asOf
       publishedCount = m.publishedCount
       droppedVacuumedCount = m.vacuumedCount

@@ -30,8 +30,9 @@ import graft.log.{CommitRecord, TopicRange}
   * each micro-batch is a contiguous range of committed atomic batches, so
   * exactly-once replay falls out of checkpointed (start, end] commit ranges.
   *
-  * Scans are **columnar**: each partition (one data file of one topic) is
-  * read with Spark's vectorized parquet reader — the file layout is pure
+  * Scans are **columnar**: each partition (data files of one topic, packed
+  * by Spark's file-split rule) is read file by file with Spark's
+  * vectorized parquet reader — the file layout is pure
   * int64/binary (ts stored as epoch-micros long precisely so the custom
   * reader never meets INT96), and `topic` is appended as a constant
   * partition column. Column pruning is pushed into the reader, so a
@@ -417,8 +418,15 @@ object WalrusLogSource {
     String, (java.nio.file.attribute.FileTime, Seq[Path])]
   private val MtimeEpsilonMs = 1000L
 
+  /** Real `commits/` directory listings (the listing cache's misses) — a
+    * test probe pinning the one-listing-per-trigger contract of
+    * [[WalrusMicroBatchStream]]. */
+  private[graft] val commitDirListCount = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Sorted commit-JSON paths — the cheap "has anything new landed?"
-    * probe the real-time tail polls (names only; no parsing). */
+    * probe the real-time tail polls (names only; no parsing). Commit
+    * files are named `%012d.json`, so name order is id order; each name
+    * is taken once and the sort compares those strings. */
   private[graft] def commitFiles(nsDir: Path): Seq[Path] = {
     val dir = nsDir.resolve("commits")
     if (!Files.exists(dir)) return Seq.empty
@@ -429,10 +437,13 @@ object WalrusLogSource {
       val hit = listingCache.get(dir.toString)
       if (hit != null && hit._1 == mtime) return hit._2
     }
+    commitDirListCount.incrementAndGet()
     val s = Files.list(dir)
-    val files = try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json")).toSeq
+    val names = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".json")).toArray
       finally s.close()
-    val sorted = files.sortBy(_.getFileName.toString)
+    java.util.Arrays.sort(names, java.util.Comparator.naturalOrder[String]())
+    val sorted: Seq[Path] = names.iterator.map(dir.resolve).toVector
     if (mtime != null &&
         System.currentTimeMillis() - mtime.toMillis >= MtimeEpsilonMs) {
       val after =
@@ -444,6 +455,29 @@ object WalrusLogSource {
       }
     }
     sorted
+  }
+
+  /** The commit files past the first `known` of a `commits/` listing
+    * that holds every commit up to its newest name. Directory order is not
+    * creation order, so a listing taken while commits land can miss one
+    * created during it yet return a later one; appended by position, the
+    * later commit would take the earlier one's slot (one commit never
+    * delivered, the next delivered twice). A commit id missing between
+    * `afterId` (the newest known id) and the newest listed one whose file
+    * exists marks such a listing, and the directory is listed again. Ids
+    * that never published (a claim abandoned mid-commit) have no file and
+    * stay gaps. */
+  private[graft] def newCommitFiles(nsDir: Path, known: Int, afterId: Long): Seq[Path] = {
+    val dir = nsDir.resolve("commits")
+    def racy(names: Seq[Path]): Boolean = {
+      val ids = names.iterator.drop(known).flatMap(graft.log.WalrusLog.commitIdOf).toSet
+      ids.nonEmpty && (afterId + 1 until ids.max).exists(id =>
+        !ids(id) && Files.exists(dir.resolve(f"$id%012d.json")))
+    }
+    var names = commitFiles(nsDir)
+    var relists = 0
+    while (relists < 3 && racy(names)) { names = commitFiles(nsDir); relists += 1 }
+    names.drop(known)
   }
 
   private[graft] def parseCommit(p: Path): (CommitRecord, Boolean) = {
@@ -646,22 +680,101 @@ object WalrusLogSource {
     * (outputPartitioning × N plans + execution share ONE dir walk). */
   private[graft] val partitionPlanCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The one read planner, behind batch scans, micro-batches and the
+    * log's driver-side reads: the live, unpruned commits' files of each
+    * topic, in commit order, packed into multi-file partitions by
+    * [[pack]]. Each file carries its commit id (the `_commit` constant)
+    * and a batch capacity sized to its covering range's exact row count. */
   private[graft] def partitionsFor(
       nsDir: Path, commits: Seq[(CommitRecord, Boolean)],
       topic: Option[String],
       prune: PruneSpec = PruneSpec()): Array[InputPartition] = {
     partitionPlanCount.incrementAndGet()
     val spec = prune.withTopic(topic)
-    commits.flatMap {
-      case (_, true) => Seq.empty // vacuumed: data reclaimed, skip
-      case (c, _) if !spec.commitMatches(c) => Seq.empty // pruned by pushdown
+    val byTopic = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[(WalrusFile, Long)]]
+    commits.foreach {
+      case (_, true) => () // vacuumed: data reclaimed, skip
+      case (c, _) if !spec.commitMatches(c) => () // pruned by pushdown
       case (c, _) =>
         val batchDir = nsDir.resolve("data").resolve(s"batch=${c.id}")
-        topicDirs(batchDir, spec).flatMap { td =>
+        topicDirs(batchDir, spec).foreach { td =>
           val t = decodeTopic(td.getFileName.toString.stripPrefix("topic="))
-          parquetFiles(td).map(f => WalrusFilePartition(t, f.toString, c.id))
+          val files = parquetFiles(td).map(_.toString).sorted
+          // the range's bytes are spread evenly over its files; each file
+          // holds at most the range's rows
+          val (rows, bytes) = c.topics.get(t)
+            .fold((graft.io.LogParquet.MaxBatchRows.toLong, 0L))(r => (r.rows, r.bytes))
+          val capacity = graft.io.LogParquet.capacityFor(rows)
+          val out = byTopic.getOrElseUpdate(t, scala.collection.mutable.ArrayBuffer.empty)
+          files.foreach(f => out += ((WalrusFile(f, c.id, capacity), bytes / files.size)))
         }
-    }.toArray
+    }
+    pack(byTopic.toSeq.map { case (t, files) => (t, files.toSeq) }, SplitRule.current())
+  }
+
+  /** Spark's file-split settings: `spark.sql.files.maxPartitionBytes`,
+    * `spark.sql.files.openCostInBytes`, and the read slots
+    * (`spark.sql.files.minPartitionNum`, else the leaf-node default
+    * parallelism) — the inputs of `FilePartition.maxSplitBytes`. */
+  private[graft] final case class SplitRule(
+      maxPartitionBytes: Long, openCostInBytes: Long, slots: Int)
+
+  private[graft] object SplitRule {
+    /** The active session's rule (Spark's defaults when none is active). */
+    def current(): SplitRule = {
+      import org.apache.spark.sql.internal.SQLConf
+      val conf = SQLConf.get
+      val slots = conf.filesMinPartitionNum
+        .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+        .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
+          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+          .map(_.sparkContext.defaultParallelism).getOrElse(1))
+      SplitRule(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes, math.max(1, slots))
+    }
+  }
+
+  /** Packs each topic's `(file, bytes)` list, in order, into
+    * [[WalrusFilePartition]]s of that topic alone. Spark's split rule with
+    * the topic boundary kept: the `slots` read slots are shared among the
+    * topics, one each and the rest in proportion to their cost (bytes plus
+    * `openCostInBytes` per file, largest remainder first), and a topic's
+    * files are cut into at most that many runs of near-equal cost. As in
+    * `FilePartition.getFilePartitions`, a file that would take a run past
+    * `maxPartitionBytes` starts a new partition, so a partition of several
+    * files holds at most `maxPartitionBytes` plus an open cost per extra
+    * file. Plans at most max(topics, slots) partitions unless that size
+    * splits them. */
+  private[graft] def pack(topics: Seq[(String, Seq[(WalrusFile, Long)])],
+      rule: SplitRule): Array[InputPartition] = {
+    val open = rule.openCostInBytes
+    val costs = topics.map { case (_, files) => files.iterator.map(_._2 + open).sum }
+    val total = costs.sum
+    val extra = math.max(0, rule.slots - topics.size)
+    val exact = costs.map(c => if (total > 0) c.toDouble * extra / total else 0.0)
+    val bonus = exact.zipWithIndex.sortBy { case (e, i) => (e.floor - e, i) }
+      .take(extra - exact.map(_.toInt).sum).map(_._2).toSet
+    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    topics.zip(costs).zipWithIndex.foreach { case (((t, files), cost), i) =>
+      val runs = math.min(files.size, 1 + exact(i).toInt + (if (bonus(i)) 1 else 0))
+      val cur = scala.collection.mutable.ArrayBuffer.empty[WalrusFile]
+      var size = 0L   // cost of the open partition
+      var before = 0L // cost of the topic's files before this one
+      var run = 0
+      def close(): Unit = if (cur.nonEmpty) {
+        out += WalrusFilePartition(t, cur.toVector); cur.clear(); size = 0L
+      }
+      files.foreach { case (f, bytes) =>
+        val r = if (cost > 0) math.min(runs - 1, (before.toDouble * runs / cost).toInt) else 0
+        if (r != run || size + bytes > rule.maxPartitionBytes) close()
+        run = r
+        size += bytes + open
+        before += bytes + open
+        cur += f
+      }
+      close()
+    }
+    out.toArray
   }
 
   private def topicDirs(batchDir: Path, spec: PruneSpec): Seq[Path] = {
@@ -691,13 +804,13 @@ object WalrusLogSource {
   private[sources] def rtPartitionOf(topic: String, numPartitions: Int): Int =
     ((topic.hashCode % numPartitions) + numPartitions) % numPartitions
 
-  /** The (topic, file) slice of one commit owned by one real-time reader
-    * partition, in a DETERMINISTIC order (topic dir name, then file name) —
-    * row-granular offsets within a commit are only replayable because this
-    * order is stable across listings and JVMs. */
+  /** The (topic, file, batch capacity) slice of one commit owned by one
+    * real-time reader partition, in a DETERMINISTIC order (topic dir name,
+    * then file name) — row-granular offsets within a commit are only
+    * replayable because this order is stable across listings and JVMs. */
   private[sources] def sliceFiles(nsDir: Path, c: CommitRecord,
       topic: Option[String], prune: PruneSpec,
-      partitionId: Int, numPartitions: Int): Seq[(String, String)] = {
+      partitionId: Int, numPartitions: Int): Seq[(String, String, Int)] = {
     val spec = prune.withTopic(topic)
     if (!spec.commitMatches(c)) return Seq.empty
     val batchDir = nsDir.resolve("data").resolve(s"batch=${c.id}")
@@ -706,8 +819,12 @@ object WalrusLogSource {
       .flatMap { td =>
         val t = decodeTopic(td.getFileName.toString.stripPrefix("topic="))
         if (rtPartitionOf(t, numPartitions) != partitionId) Seq.empty
-        else parquetFiles(td).sortBy(_.getFileName.toString)
-          .map(f => (t, f.toString))
+        else {
+          val capacity = graft.io.LogParquet.capacityFor(
+            c.topics.get(t).fold(graft.io.LogParquet.MaxBatchRows.toLong)(_.rows))
+          parquetFiles(td).sortBy(_.getFileName.toString)
+            .map(f => (t, f.toString, capacity))
+        }
       }
   }
 }
@@ -1316,21 +1433,32 @@ class WalrusMicroBatchStream(
     * Staleness exposure (same as the RTM reader's, documented there): a
     * vacuum that lands after an entry was cached leaves its flag `false`;
     * planning then finds the reclaimed batch's dir empty and emits zero
-    * partitions — an IO-level no-op, never wrong rows. */
+    * partitions — an IO-level no-op, never wrong rows.
+    *
+    * One `commits/` listing per trigger: only [[latestOffset]] (and the
+    * AvailableNow fence) look for new commits; the planning and reporting
+    * calls of the same trigger read the prefix it refreshed, which covers
+    * the end offset they are given. */
   private var cachedCommits: Vector[(CommitRecord, Boolean)] = Vector.empty
   private var coldLoaded = false
 
+  /** The commit log with every commit published so far: one listing. */
   private def commits: Vector[(CommitRecord, Boolean)] = synchronized {
     if (!coldLoaded) {
       cachedCommits = WalrusLogSource.assembleCommits(nsDir)
       coldLoaded = true
     } else {
-      val names = WalrusLogSource.commitFiles(nsDir)
-      if (names.size > cachedCommits.size)
-        cachedCommits = cachedCommits ++
-          names.drop(cachedCommits.size).map(WalrusLogSource.parseCommit)
+      cachedCommits = cachedCommits ++ WalrusLogSource.newCommitFiles(nsDir,
+        cachedCommits.size, cachedCommits.lastOption.fold(-1L)(_._1.id))
+        .map(WalrusLogSource.parseCommit)
     }
     cachedCommits
+  }
+
+  /** A prefix of the commit log holding at least `end` commits (0: any
+    * loaded prefix): the cached one when it does, else a refreshed one. */
+  private def commitsThrough(end: Long): Vector[(CommitRecord, Boolean)] = synchronized {
+    if (coldLoaded && cachedCommits.size >= end) cachedCommits else commits
   }
 
   /** `Trigger.AvailableNow` end-of-stream fence: the commit-log size is
@@ -1360,7 +1488,7 @@ class WalrusMicroBatchStream(
       case None => 0L
       case Some(ms) =>
         val probeUs = ms * 1000L
-        val all = commits
+        val all = commitsThrough(0L)
         val i = all.indexWhere { case (c, flagged) =>
           !flagged && c.topics.valuesIterator.exists(_.tsUsMax >= probeUs)
         }
@@ -1502,14 +1630,16 @@ class WalrusMicroBatchStream(
     case other => throw new IllegalArgumentException(s"unexpected $other")
   }
 
-  override def reportLatestOffset(): Offset = CommitIndexOffset(commits.size.toLong)
+  /** What this trigger's [[latestOffset]] saw (metrics only). */
+  override def reportLatestOffset(): Offset =
+    CommitIndexOffset(commitsThrough(0L).size.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CommitIndexOffset].commitIndex.toInt
     val e = end.asInstanceOf[CommitIndexOffset].commitIndex.toInt
     // note: the offset RANGE (s, e] still advances over pruned commits —
     // pruning empties their partition list, it never skews the cursor
-    val all = commits
+    val all = commitsThrough(e)
     // A compaction commit rewrites rows this stream may have ALREADY
     // consumed as the source batches (same (topic, offset) rows — see
     // WalrusLog.compact). When every `replaces` id resolves to a commit
@@ -1728,10 +1858,14 @@ class WalrusAggRowsReaderFactory(schema: StructType) extends PartitionReaderFact
   }
 }
 
-case class WalrusFilePartition(topic: String, file: String,
-    commitId: Long = -1L) extends InputPartition
+/** One data file of a [[WalrusFilePartition]]: the commit that published
+  * it (its `_commit` constant) and the batch capacity it opens with. */
+case class WalrusFile(path: String, commitId: Long, capacity: Int)
+
+/** Data files of one topic, read in order (see [[WalrusLogSource.pack]]). */
+case class WalrusFilePartition(topic: String, files: Seq[WalrusFile]) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
-  /** Storage-partitioned execution: every file of a topic carries the
+  /** Storage-partitioned execution: every partition of a topic carries the
     * topic as its partition key, so Spark (with
     * `spark.sql.sources.v2.bucketing.enabled`) groups splits per topic
     * and per-topic aggregations/joins run WITHOUT a shuffle — the log's
@@ -1748,10 +1882,11 @@ case class WalrusRealTimePartition(
     startCommitIdx: Long, startRowInCommit: Long,
     failOnDataLoss: Boolean = false) extends InputPartition
 
-/** Reads one data file of one topic. File columns are a subset of
-  * (offset, ts_us, value, checksum, len); `topic` comes from the dir name
-  * and is appended as a constant partition column by the vectorized
-  * reader. Pruned column sets stream straight from parquet pages into
+/** Reads the data files of one topic partition, in order. File columns
+  * are a subset of (offset, ts_us, value, checksum, len); `topic` comes
+  * from the dir name and `_commit` from the file's commit, both appended
+  * per file as constant partition columns by the vectorized reader.
+  * Pruned column sets stream straight from parquet pages into
   * `ColumnarBatch`es; only a topic-only/empty projection (e.g. count(*))
   * falls back to a row reader driven by footer row counts. */
 class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
@@ -1762,10 +1897,10 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
   private val constCols = schema.fields.filter(f => ConstNames(f.name))
   private val fileSchema = StructType(schema.fields.filterNot(f => ConstNames(f.name)))
 
-  private def constRow(p: WalrusFilePartition): InternalRow =
+  private def constRow(topic: String, f: WalrusFile): InternalRow =
     new GenericInternalRow(constCols.map {
-      case f if f.name == "topic" => UTF8String.fromString(p.topic)
-      case _ => java.lang.Long.valueOf(p.commitId)
+      case c if c.name == "topic" => UTF8String.fromString(topic)
+      case _ => java.lang.Long.valueOf(f.commitId)
     }.toArray[Any])
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
@@ -1773,23 +1908,35 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[WalrusFilePartition]
-    val reader = graft.io.LogParquet.openColumnar(p.file, fileSchema)
-    var ok = false
-    try {
-      reader.initBatch(StructType(constCols.toSeq), constRow(p))
-      reader.enableReturningBatches()
-      ok = true
-    } finally if (!ok) reader.close()
     new PartitionReader[ColumnarBatch] {
-      override def next(): Boolean = reader.nextKeyValue()
+      private val files = p.files.iterator
+      private var reader: VectorizedParquetRecordReader = null
+      private def open(f: WalrusFile): VectorizedParquetRecordReader = {
+        val r = graft.io.LogParquet.openColumnar(f.path, fileSchema, f.capacity)
+        var ok = false
+        try {
+          r.initBatch(StructType(constCols.toSeq), constRow(p.topic, f))
+          r.enableReturningBatches()
+          ok = true
+        } finally if (!ok) r.close()
+        r
+      }
+      override def next(): Boolean = {
+        while (reader == null || !reader.nextKeyValue()) {
+          close()
+          if (!files.hasNext) return false
+          reader = open(files.next())
+        }
+        true
+      }
       override def get(): ColumnarBatch =
         reader.getCurrentValue.asInstanceOf[ColumnarBatch]
-      override def close(): Unit = reader.close()
+      override def close(): Unit = if (reader != null) { reader.close(); reader = null }
     }
   }
 
-  /** Row fallback for projections with no file columns: emit `rowCount`
-    * constant rows (topic or empty), count from the parquet footer.
+  /** Row fallback for projections with no file columns: emit each file's
+    * footer row count of constant rows (topic, `_commit`, or empty).
     * Real-time partitions get the tailing reader instead. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
     case rt: WalrusRealTimePartition => new WalrusRealTimeReader(rt, schema)
@@ -1798,11 +1945,20 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
   private def createCountingReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WalrusFilePartition]
-    val rowCount = graft.io.LogParquet.rowCount(p.file)
-    val row: InternalRow = constRow(p)
     new PartitionReader[InternalRow] {
-      private var remaining = rowCount
-      override def next(): Boolean = { remaining -= 1; remaining >= 0 }
+      private val files = p.files.iterator
+      private var remaining = 0L
+      private var row: InternalRow = null
+      override def next(): Boolean = {
+        while (remaining <= 0) {
+          if (!files.hasNext) return false
+          val f = files.next()
+          remaining = graft.io.LogParquet.rowCount(f.path)
+          row = constRow(p.topic, f)
+        }
+        remaining -= 1
+        true
+      }
       override def get(): InternalRow = row
       override def close(): Unit = ()
     }
@@ -1837,7 +1993,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   private var commitIdx: Long = p.startCommitIdx // position in the ordered commit log
   private var rowInCommit: Long = 0L             // slice rows consumed (emitted + skipped)
   private var toSkip: Long = p.startRowInCommit  // resume skip within the first commit
-  private var files: List[(String, String)] = Nil
+  private var files: List[(String, String, Int)] = Nil
   private var sliceLoaded = false
   private var reader: VectorizedParquetRecordReader = null
   private var constRowsLeft: Long = 0L           // topic-only/empty projection mode
@@ -1849,11 +2005,9 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
     * prefix never changes order. (A concurrent vacuum rewrites an OLD
     * commit's flag in place; the tail reader is past it by definition —
     * the same listing-race exposure as the batch planner.) */
-  private def refreshCommits(): Unit = {
-    val names = WalrusLogSource.commitFiles(nsDir)
-    if (names.size > commits.size)
-      commits = commits ++ names.drop(commits.size).map(WalrusLogSource.parseCommit)
-  }
+  private def refreshCommits(): Unit =
+    commits = commits ++ WalrusLogSource.newCommitFiles(nsDir, commits.size,
+      commits.lastOption.fold(-1L)(_._1.id)).map(WalrusLogSource.parseCommit)
 
   private lazy val lossSpec = p.prune.withTopic(p.topic)
 
@@ -1883,6 +2037,15 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
           "at least as long as the slowest consumer")
   }
 
+  /** Stops a killed task: after `q.stop()` its reader must not tail on and
+    * hand a later commit's rows to the sink. Throws `TaskKilledException`
+    * once the task is marked interrupted. */
+  private def stopIfKilled(): Unit = {
+    val tc = org.apache.spark.TaskContext.get()
+    if (tc != null && tc.isInterrupted())
+      throw new org.apache.spark.TaskKilledException("walruslog real-time reader: task killed")
+  }
+
   /** Load the file slice of commit `commitIdx`, refreshing the commit log
     * when the index is past the cached view. False = commit not yet
     * published. */
@@ -1892,6 +2055,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
       refreshCommits()
       if (commitIdx >= commits.size) return false
     }
+    stopIfKilled()
     val (c, vacuumed) = commits(commitIdx.toInt)
     if (vacuumed) {
       if (p.failOnDataLoss) raiseIfLost(c)
@@ -1917,10 +2081,10 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   private def openNextFile(): Boolean = {
     closeReader()
     files match {
-      case (t, f) :: rest =>
+      case (t, f, capacity) :: rest =>
         files = rest
         if (fileSchema.nonEmpty) {
-          val r = graft.io.LogParquet.openColumnar(f, fileSchema)
+          val r = graft.io.LogParquet.openColumnar(f, fileSchema, capacity)
           var ok = false
           try {
             if (hasTopic)
@@ -1962,6 +2126,7 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
 
   override def nextWithTimeout(deadlineMs: java.lang.Long): RecordStatus = {
     while (true) {
+      stopIfKilled()
       if (ensureSlice()) {
         var produced = advance()
         while (produced && toSkip > 0) { // exactly-once resume mid-commit

@@ -51,12 +51,51 @@ object GraftSqlInternal {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** A writer conf whose iteration yields only its `parquet.` entries,
+    * collected once per change, while lookups see every entry. Parquet's
+    * `getRecordWriter` iterates the whole conf for per-column settings
+    * (`ColumnConfigParser.parseConfig`, `parquet.<key>#<column>`) on every
+    * file it opens; a session conf holds every SQL conf besides the Hadoop
+    * defaults, so without this each small file paid a copy of all of them.
+    * A `JobConf`, so `TaskAttemptContextImpl` keeps it instead of copying
+    * it into a plain one. */
+  private final class ParquetKeysJobConf(conf: org.apache.hadoop.conf.Configuration)
+      extends org.apache.hadoop.mapred.JobConf(conf) {
+    @volatile private var parquetEntries: java.util.List[java.util.Map.Entry[String, String]] = _
+
+    override def iterator(): java.util.Iterator[java.util.Map.Entry[String, String]] = {
+      var entries = parquetEntries
+      if (entries == null) {
+        entries = new java.util.ArrayList[java.util.Map.Entry[String, String]]()
+        val it = super.iterator()
+        while (it.hasNext) {
+          val e = it.next()
+          if (e.getKey.startsWith("parquet.")) entries.add(e)
+        }
+        parquetEntries = entries
+      }
+      entries.iterator()
+    }
+
+    override def set(name: String, value: String, source: String): Unit = {
+      super.set(name, value, source)
+      parquetEntries = null
+    }
+
+    override def unset(name: String): Unit = {
+      super.unset(name)
+      parquetEntries = null
+    }
+  }
+
   /** Spark's own Parquet writer for one data schema and option set,
     * prepared once: [[write]] then produces the footer, codec and
     * encodings a DataFrame write with the same `options` would, on the
     * calling thread and with no Spark job. The session's SQL and hadoop
-    * confs are read when the writer is built, not per write. Not
-    * thread-safe: one writer serves one caller at a time. */
+    * confs are read when the writer is built, not per write, and a file's
+    * writer setup iterates only the `parquet.` entries of that conf (see
+    * [[ParquetKeysJobConf]]). Not thread-safe: one writer serves one
+    * caller at a time. */
   final class ParquetFilesWriter(spark: SparkSession, dataSchema: StructType,
       options: Map[String, String]) {
     import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
@@ -65,7 +104,7 @@ object GraftSqlInternal {
     private val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     private val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
     private val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
-    private val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+    private val ctx = new TaskAttemptContextImpl(new ParquetKeysJobConf(job.getConfiguration),
       new TaskAttemptID(new TaskID("", 0, TaskType.MAP, 0), 0))
     private val extension = factory.getFileExtension(ctx)
 

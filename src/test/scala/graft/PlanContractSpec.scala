@@ -228,17 +228,22 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 10).foreach(i =>
       log.batchAppend("t", (0 until 5).map(j => s"c$i-$j".getBytes("UTF-8"))))
     val df = spark.read.format("walruslog").option("path", root).load()
+    // data files the executed scan plans to open (a partition packs
+    // several files of one topic)
     def partsOf(d: org.apache.spark.sql.DataFrame): Int = {
       d.collect() // force execution so AQE finalizes the scan
       d.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.inputPartitions.size
+          b.inputPartitions.map {
+            case p: graft.sources.WalrusFilePartition => p.files.size
+            case _ => 1
+          }.sum
       }.sum
     }
     // limit 7 needs two 5-row commits; the other eight are never opened
     val lim = df.limit(7)
     assert(lim.count() == 7)
-    assert(partsOf(lim) == 2, s"expected 2 file partitions, got ${partsOf(lim)}")
+    assert(partsOf(lim) == 2, s"expected 2 planned files, got ${partsOf(lim)}")
     // an offset bound blocks the push (residual filtering could starve it)
     val bounded = df.where(col("offset") >= 48L).limit(2)
     assert(bounded.count() == 2, "offset-bounded limit must still deliver")
@@ -249,7 +254,7 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tail = df.orderBy(col("offset").desc).limit(7)
     val tailRows = tail.collect().map(_.getAs[Long]("offset")).toSeq
     assert(tailRows == (49L to 43L by -1L), tailRows.toString)
-    assert(partsOf(tail) == 2, s"expected 2 tail partitions, got ${partsOf(tail)}")
+    assert(partsOf(tail) == 2, s"expected 2 tail files, got ${partsOf(tail)}")
     // TopN ASC mirrors the plain limit prefix
     val head7 = df.orderBy(col("offset").asc).limit(7)
     assert(head7.collect().map(_.getAs[Long]("offset")).toSeq == (0L to 6L))

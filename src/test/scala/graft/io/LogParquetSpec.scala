@@ -157,6 +157,31 @@ class LogParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(commits < n * conf, detail)
   }
 
+  test("a commit's writer setup does not grow with the session conf it was built over") {
+    val n = 50
+    def newLog(prefix: String) = new WalrusLog(spark, graft.TestDirs.create(prefix).toString,
+      cfg = LogConfig(compression = "uncompressed"))
+    def commits(log: WalrusLog): Long = allocatedBy {
+      (0 until n).foreach(i => log.batchAppend("t", Seq(bytes(s"a$i"), bytes(s"b$i"))))
+    }
+    // the plain log's writer is built before the session grows, the padded
+    // log's after: each file's writer setup reads the conf it was built over
+    val plain = newLog("lparq-plain-")
+    plain.batchAppend("t", Seq(bytes("warm-0"), bytes("warm-1")))
+    val pad = (0 until 10000).map(i => s"graft.test.pad.$i")
+    pad.foreach(k => spark.conf.set(k, "x"))
+    val (plainBytes, paddedBytes) =
+      try {
+        val padded = newLog("lparq-padded-")
+        padded.batchAppend("t", Seq(bytes("warm-0"), bytes("warm-1")))
+        commits(plain); commits(padded)
+        (commits(plain), commits(padded))
+      } finally pad.foreach(spark.conf.unset)
+    val detail = s"$n batchAppends: plain log $plainBytes B, padded log $paddedBytes B"
+    info(detail)
+    assert(paddedBytes <= plainBytes * 5 / 4, detail)
+  }
+
   test("each log writes its own codec when two logs share a session") {
     val codecs = Seq("zstd", "gzip")
     val logs = codecs.map(c => new WalrusLog(spark, graft.TestDirs.create(s"lparq-$c-").toString,

@@ -195,7 +195,10 @@ class LongRunningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fresh = new WalrusLog(spark, root, cfg = cfg)
     assert(fresh.entryCount("t") == total,
       s"entry count ${fresh.entryCount("t")} != appended $total")
-    val got = fresh.batchRead("t", 1 << 30, checkpoint = false)
+    // one read returns at most maxBatchEntries (2000) entries: page
+    // through the topic with a group of its own
+    val got = Iterator.continually(fresh.batchRead("t", 1 << 30, group = "marathon-check"))
+      .takeWhile(_.nonEmpty).flatten.toVector
     assert(got.map(_.offset) == (0L until total), "offsets dense from 0")
     val values = got.map(e => new String(e.value, "UTF-8"))
     assert(values.distinct.size == values.size, "no duplicate payloads")

@@ -450,6 +450,12 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val settled = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
       await(Option(q.lastProgress).exists(_.batchId >= settled + 2), 15000)
     } finally q.stop()
+    // stop() cancels the batch's job without waiting for its task: the
+    // kill reaches the tailing reader a moment later, and until it does
+    // the reader may still hand a new commit's first row to the
+    // non-transactional foreach sink. Publish only once no task runs.
+    await(spark.sparkContext.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum == 0,
+      15000)
     val afterStop = RtmCollector.seen.size
     log.batchAppend("beta", (0 until 3).map(i => bytes(s"post-$i")))
     val q2 = start()
@@ -540,6 +546,55 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the pre-cache behavior re-parsed ~6×6×3 = 100+ files; the cached
     // prefix parses each commit file exactly once per stream lifetime.
     assert(parses <= 6L, s"expected ≤ 6 commit-JSON parses, got $parses")
+  }
+
+  test("one commits/ listing per micro-batch trigger") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    val n = 8
+    (0 until n).foreach(i => log.batchAppend("t", Seq(bytes(s"e$i"))))
+    // the names cache serves a commits/ dir only once it has been quiet
+    // for a second; a future mtime keeps every look a real listing, as on
+    // a log that is being written to
+    val commitsDir = java.nio.file.Paths.get(root, "default", "commits")
+    java.nio.file.Files.setLastModifiedTime(commitsDir,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 3600000L))
+    val before = graft.sources.WalrusLogSource.commitDirListCount.get()
+    val q = spark.readStream.format("walruslog").option("path", root)
+      .option("maxBatchesPerTrigger", "1").load()
+      .writeStream.format("memory").queryName("mlistings")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000)) finally q.stop()
+    val listings = graft.sources.WalrusLogSource.commitDirListCount.get() - before
+    assert(spark.sql("SELECT count(*) FROM mlistings").head().getLong(0) == n)
+    assert(q.recentProgress.count(_.numInputRows > 0) == n)
+    // one per trigger, plus the AvailableNow fence and the last look that
+    // finds nothing new
+    assert(listings <= n + 2L, s"$n one-commit triggers made $listings commits/ listings")
+  }
+
+  test("real-time reader of a killed task yields none of a later commit's rows") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    log.batchAppend("t", Seq(bytes("before")))
+    val nsDir = java.nio.file.Paths.get(root, "default").toString
+    val reader = new graft.sources.WalrusRealTimeReader(
+      graft.sources.WalrusRealTimePartition(0, 1, nsDir, Some("t"),
+        graft.sources.WalrusLogSource.PruneSpec(), 1L, 0L),
+      graft.sources.WalrusLogSource.Schema)
+    try {
+      val got = org.apache.spark.graft.TaskContexts.killed {
+        log.batchAppend("t", Seq(bytes("after-stop")))
+        try {
+          val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+          val deadline = System.currentTimeMillis() + 300L
+          while (reader.nextWithTimeout(deadline).hasRecord)
+            rows += new String(reader.get().getBinary(2), "UTF-8")
+          rows.toSeq
+        } catch { case _: org.apache.spark.TaskKilledException => Seq.empty }
+      }
+      assert(got.isEmpty, s"a killed task's reader delivered $got")
+    } finally reader.close()
   }
 
   test("manifest checkpoint: a cold scan parses one manifest + the JSON tail") {
