@@ -58,6 +58,11 @@ object LogParquet {
     * one-row file gets one-row vectors instead of 4096-row ones. */
   def capacityFor(rows: Long): Int = math.max(1L, math.min(MaxBatchRows.toLong, rows)).toInt
 
+  /** The batch capacity for a file of `topic` in commit `c`: its range
+    * holds the exact row count (a full batch when `c` records no range). */
+  def capacityFor(c: graft.log.CommitRecord, topic: String): Int =
+    capacityFor(c.topics.get(topic).fold(MaxBatchRows.toLong)(_.rows))
+
   /** A vectorized reader over `columns` of `file`, ready for `initBatch`,
     * whose batches hold at most `capacity` rows (see [[capacityFor]]).
     * Every column must be in the file. */

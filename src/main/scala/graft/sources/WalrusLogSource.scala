@@ -457,27 +457,34 @@ object WalrusLogSource {
     sorted
   }
 
-  /** The commit files past the first `known` of a `commits/` listing
-    * that holds every commit up to its newest name. Directory order is not
-    * creation order, so a listing taken while commits land can miss one
-    * created during it yet return a later one; appended by position, the
-    * later commit would take the earlier one's slot (one commit never
-    * delivered, the next delivered twice). A commit id missing between
-    * `afterId` (the newest known id) and the newest listed one whose file
-    * exists marks such a listing, and the directory is listed again. Ids
-    * that never published (a claim abandoned mid-commit) have no file and
-    * stay gaps. */
+  /** The commit files past the first `known` of a `commits/` listing,
+    * up to the first one a racy listing may have misplaced (see
+    * [[publishedPrefix]]). `afterId` is the newest known commit id. */
   private[graft] def newCommitFiles(nsDir: Path, known: Int, afterId: Long): Seq[Path] = {
     val dir = nsDir.resolve("commits")
-    def racy(names: Seq[Path]): Boolean = {
-      val ids = names.iterator.drop(known).flatMap(graft.log.WalrusLog.commitIdOf).toSet
-      ids.nonEmpty && (afterId + 1 until ids.max).exists(id =>
-        !ids(id) && Files.exists(dir.resolve(f"$id%012d.json")))
+    publishedPrefix(commitFiles(nsDir).drop(known), afterId,
+      id => Files.exists(dir.resolve(f"$id%012d.json")))
+  }
+
+  /** The leading `names` (new commit files past commit `afterId`, in id
+    * order) that no missing published commit precedes. Directory order is
+    * not creation order, so a listing taken while commits land can miss
+    * one created during it yet return a later one; appended by position,
+    * the later commit would take the earlier one's slot (one commit never
+    * delivered, the next delivered twice). The names from the first
+    * missing id whose file `exists` on are dropped; the next listing
+    * returns them. Ids that never published (a claim abandoned
+    * mid-commit) have no file and stay gaps. */
+  private[graft] def publishedPrefix(names: Seq[Path], afterId: Long,
+      exists: Long => Boolean): Seq[Path] = {
+    var prev = afterId
+    names.takeWhile { n =>
+      graft.log.WalrusLog.commitIdOf(n).forall { id =>
+        val whole = (prev + 1 until id).forall(gap => !exists(gap))
+        prev = id
+        whole
+      }
     }
-    var names = commitFiles(nsDir)
-    var relists = 0
-    while (relists < 3 && racy(names)) { names = commitFiles(nsDir); relists += 1 }
-    names.drop(known)
   }
 
   private[graft] def parseCommit(p: Path): (CommitRecord, Boolean) = {
@@ -703,42 +710,30 @@ object WalrusLogSource {
           val files = parquetFiles(td).map(_.toString).sorted
           // the range's bytes are spread evenly over its files; each file
           // holds at most the range's rows
-          val (rows, bytes) = c.topics.get(t)
-            .fold((graft.io.LogParquet.MaxBatchRows.toLong, 0L))(r => (r.rows, r.bytes))
-          val capacity = graft.io.LogParquet.capacityFor(rows)
+          val bytes = c.topics.get(t).fold(0L)(_.bytes)
+          val capacity = graft.io.LogParquet.capacityFor(c, t)
           val out = byTopic.getOrElseUpdate(t, scala.collection.mutable.ArrayBuffer.empty)
           files.foreach(f => out += ((WalrusFile(f, c.id, capacity), bytes / files.size)))
         }
     }
-    pack(byTopic.toSeq.map { case (t, files) => (t, files.toSeq) }, SplitRule.current())
-  }
-
-  /** Spark's file-split settings: `spark.sql.files.maxPartitionBytes`,
-    * `spark.sql.files.openCostInBytes`, and the read slots
-    * (`spark.sql.files.minPartitionNum`, else the leaf-node default
-    * parallelism) — the inputs of `FilePartition.maxSplitBytes`. */
-  private[graft] final case class SplitRule(
-      maxPartitionBytes: Long, openCostInBytes: Long, slots: Int)
-
-  private[graft] object SplitRule {
-    /** The active session's rule (Spark's defaults when none is active). */
-    def current(): SplitRule = {
-      import org.apache.spark.sql.internal.SQLConf
-      val conf = SQLConf.get
-      val slots = conf.filesMinPartitionNum
-        .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
-        .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .map(_.sparkContext.defaultParallelism).getOrElse(1))
-      SplitRule(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes, math.max(1, slots))
-    }
+    // Spark's file-split settings, the inputs of `FilePartition.maxSplitBytes`
+    // (Spark's defaults when no session is active)
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = SQLConf.get
+    val slots = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
+        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+        .map(_.sparkContext.defaultParallelism).getOrElse(1))
+    pack(byTopic.toSeq.map { case (t, files) => (t, files.toSeq) },
+      conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes, math.max(1, slots))
   }
 
   /** Packs each topic's `(file, bytes)` list, in order, into
     * [[WalrusFilePartition]]s of that topic alone. Spark's split rule with
     * the topic boundary kept: the `slots` read slots are shared among the
     * topics, one each and the rest in proportion to their cost (bytes plus
-    * `openCostInBytes` per file, largest remainder first), and a topic's
+    * the `open` cost per file, largest remainder first), and a topic's
     * files are cut into at most that many runs of near-equal cost. As in
     * `FilePartition.getFilePartitions`, a file that would take a run past
     * `maxPartitionBytes` starts a new partition, so a partition of several
@@ -746,11 +741,10 @@ object WalrusLogSource {
     * file. Plans at most max(topics, slots) partitions unless that size
     * splits them. */
   private[graft] def pack(topics: Seq[(String, Seq[(WalrusFile, Long)])],
-      rule: SplitRule): Array[InputPartition] = {
-    val open = rule.openCostInBytes
+      maxPartitionBytes: Long, open: Long, slots: Int): Array[InputPartition] = {
     val costs = topics.map { case (_, files) => files.iterator.map(_._2 + open).sum }
     val total = costs.sum
-    val extra = math.max(0, rule.slots - topics.size)
+    val extra = math.max(0, slots - topics.size)
     val exact = costs.map(c => if (total > 0) c.toDouble * extra / total else 0.0)
     val bonus = exact.zipWithIndex.sortBy { case (e, i) => (e.floor - e, i) }
       .take(extra - exact.map(_.toInt).sum).map(_._2).toSet
@@ -766,7 +760,7 @@ object WalrusLogSource {
       }
       files.foreach { case (f, bytes) =>
         val r = if (cost > 0) math.min(runs - 1, (before.toDouble * runs / cost).toInt) else 0
-        if (r != run || size + bytes > rule.maxPartitionBytes) close()
+        if (r != run || size + bytes > maxPartitionBytes) close()
         run = r
         size += bytes + open
         before += bytes + open
@@ -820,8 +814,7 @@ object WalrusLogSource {
         val t = decodeTopic(td.getFileName.toString.stripPrefix("topic="))
         if (rtPartitionOf(t, numPartitions) != partitionId) Seq.empty
         else {
-          val capacity = graft.io.LogParquet.capacityFor(
-            c.topics.get(t).fold(graft.io.LogParquet.MaxBatchRows.toLong)(_.rows))
+          val capacity = graft.io.LogParquet.capacityFor(c, t)
           parquetFiles(td).sortBy(_.getFileName.toString)
             .map(f => (t, f.toString, capacity))
         }
@@ -1697,7 +1690,17 @@ class WalrusMicroBatchStream(
   }
 
   override def commit(end: Offset): Unit = () // checkpoint log owns progress
-  override def stop(): Unit = ()
+
+  /** Names this stream's real-time partitions, so that its readers can
+    * see that it was stopped. */
+  private val streamId = java.util.UUID.randomUUID().toString
+  @volatile private var tailing = false
+
+  /** The query calls this before `StreamingQuery.stop()` returns, while
+    * the kill of a tailing task is still on its way: readers in this JVM
+    * load no commit after it (see [[WalrusRealTimeReader]]). */
+  override def stop(): Unit =
+    if (tailing) WalrusRealTimeReader.stoppedStreams.add(streamId)
 
   // ------------------------------------------------------ real-time mode
   // Trigger.RealTime (Spark 4.1): a batch runs for a fixed TIME budget
@@ -1732,10 +1735,11 @@ class WalrusMicroBatchStream(
         i => m.getOrElse(i, (0L, 0L))
       case other => throw new IllegalArgumentException(s"unexpected $other")
     }
+    tailing = true
     Array.tabulate[InputPartition](rtPartitions) { i =>
       val (c, r) = startOf(i)
       WalrusRealTimePartition(i, rtPartitions, nsDir.toString, topic, prune,
-        c, r, failOnDataLoss)
+        c, r, failOnDataLoss, streamId)
     }
   }
 }
@@ -1880,7 +1884,7 @@ case class WalrusRealTimePartition(
     partitionId: Int, numPartitions: Int, nsDirStr: String,
     topic: Option[String], prune: WalrusLogSource.PruneSpec,
     startCommitIdx: Long, startRowInCommit: Long,
-    failOnDataLoss: Boolean = false) extends InputPartition
+    failOnDataLoss: Boolean = false, streamId: String = "") extends InputPartition
 
 /** Reads the data files of one topic partition, in order. File columns
   * are a subset of (offset, ts_us, value, checksum, len); `topic` comes
@@ -2037,13 +2041,17 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
           "at least as long as the slowest consumer")
   }
 
-  /** Stops a killed task: after `q.stop()` its reader must not tail on and
-    * hand a later commit's rows to the sink. Throws `TaskKilledException`
-    * once the task is marked interrupted. */
+  /** Stops the reader of a killed task or of a stopped stream: after
+    * `q.stop()` it must not tail on and hand a later commit's rows to the
+    * sink. `stop()` returns before the kill reaches the task, so the
+    * stream's own stop flag covers that window in the driver's JVM.
+    * Throws `TaskKilledException`. */
   private def stopIfKilled(): Unit = {
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null && tc.isInterrupted())
       throw new org.apache.spark.TaskKilledException("walruslog real-time reader: task killed")
+    if (WalrusRealTimeReader.stoppedStreams.contains(p.streamId))
+      throw new org.apache.spark.TaskKilledException("walruslog real-time reader: stream stopped")
   }
 
   /** Load the file slice of commit `commitIdx`, refreshing the commit log
@@ -2159,4 +2167,10 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
       "real-time reader is driven via nextWithTimeout")
   override def get(): InternalRow = current
   override def close(): Unit = closeReader()
+}
+
+object WalrusRealTimeReader {
+  /** Ids of stopped real-time streams, one short string per stopped
+    * query that tailed. */
+  private[sources] val stoppedStreams = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

@@ -450,12 +450,6 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val settled = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
       await(Option(q.lastProgress).exists(_.batchId >= settled + 2), 15000)
     } finally q.stop()
-    // stop() cancels the batch's job without waiting for its task: the
-    // kill reaches the tailing reader a moment later, and until it does
-    // the reader may still hand a new commit's first row to the
-    // non-transactional foreach sink. Publish only once no task runs.
-    await(spark.sparkContext.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum == 0,
-      15000)
     val afterStop = RtmCollector.seen.size
     log.batchAppend("beta", (0 until 3).map(i => bytes(s"post-$i")))
     val q2 = start()
@@ -595,6 +589,48 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(got.isEmpty, s"a killed task's reader delivered $got")
     } finally reader.close()
+  }
+
+  test("real-time reader of a stopped stream yields none of a later commit's rows") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    log.batchAppend("t", Seq(bytes("before")))
+    val stream = new graft.sources.WalrusMicroBatchStream(
+      java.nio.file.Paths.get(root, "default"), Some("t"), None,
+      graft.sources.WalrusLogSource.Schema, rtPartitions = 1)
+    val part = stream.planInputPartitions(graft.sources.CommitIndexOffset(1L)).head
+      .asInstanceOf[graft.sources.WalrusRealTimePartition]
+    val reader = new graft.sources.WalrusRealTimeReader(part, graft.sources.WalrusLogSource.Schema)
+    try {
+      // the task is not killed yet: stop() returned before the kill arrived
+      stream.stop()
+      log.batchAppend("t", Seq(bytes("after-stop")))
+      val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+      val stopped =
+        try {
+          val deadline = System.currentTimeMillis() + 300L
+          while (reader.nextWithTimeout(deadline).hasRecord)
+            rows += new String(reader.get().getBinary(2), "UTF-8")
+          false
+        } catch { case _: org.apache.spark.TaskKilledException => true }
+      assert(rows.isEmpty, s"a stopped stream's reader delivered $rows")
+      assert(stopped)
+    } finally reader.close()
+  }
+
+  test("an incremental commit listing stops before a commit it missed") {
+    val dir = java.nio.file.Paths.get("commits")
+    def names(ids: Long*) = ids.map(id => dir.resolve(f"$id%012d.json"))
+    val published = Set(5L, 6L, 7L, 9L, 10L) // 8 was claimed, never published
+    val prefix = graft.sources.WalrusLogSource.publishedPrefix(_: Seq[java.nio.file.Path],
+      4L, published)
+    // a listing that raced commit 6 and missed it: 7 must not take its slot
+    assert(prefix(names(5, 7, 9)) == names(5))
+    // a commit before the first listed one was missed
+    assert(prefix(names(6, 7)).isEmpty)
+    // an id that never published is a gap, not a miss
+    assert(prefix(names(5, 6, 7, 9, 10)) == names(5, 6, 7, 9, 10))
+    assert(prefix(Nil).isEmpty)
   }
 
   test("manifest checkpoint: a cold scan parses one manifest + the JSON tail") {
