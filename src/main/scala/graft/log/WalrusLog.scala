@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.collection.immutable.TreeMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -90,31 +91,24 @@ class WalrusLog(
   private val commits = mutable.ArrayBuffer.empty[CommitRecord]
   private val vacuumed = mutable.Set.empty[Long]
   private val replaced = mutable.Set.empty[Long] // batches rewritten by compaction
-  /** Every visible commit's range of each topic, keyed by the range's
-    * start offset. A topic's live ranges are disjoint (a compaction hides
-    * its sources the moment it lands), so the reads that follow a cursor
-    * find their covering commits with a floor lookup, not a pass over
-    * `commits`. Kept in step with `commits`, `vacuumed` and `replaced` by
-    * [[applyCommit]], [[recover]] and [[reclaimAll]]; the manifest's
-    * truncation only drops commits that are no longer visible. */
-  private val liveRanges =
-    mutable.Map.empty[String, java.util.TreeMap[java.lang.Long, CommitRecord]]
+  /** The catalog as reads see it: every change to the visible commits or
+    * to a topic's next offset, made under the monitor, publishes a new
+    * immutable [[CatalogView]] here in one write, so a read resolves its
+    * window from one consistent view and never takes the monitor (the
+    * reference's reads snapshot the writer's state the same way,
+    * walrus_read.rs:391-405). The mutable catalog above stays the
+    * monitor's working state. */
+  @volatile private var view: CatalogView = CatalogView.Empty
 
   private def isVisible(c: CommitRecord): Boolean =
     c.id >= 0 && !vacuumed.contains(c.id) && !replaced.contains(c.id)
 
-  private def indexLive(c: CommitRecord): Unit =
-    c.topics.foreach { case (t, r) =>
-      if (r.end > r.start)
-        liveRanges.getOrElseUpdate(t, new java.util.TreeMap).put(r.start, c)
-    }
+  /** Visible commits in commit order (the monitor's and [[toDF]]'s view). */
+  private def visibleCommits: Vector[CommitRecord] = view.visible
 
-  private def unindexLive(c: CommitRecord): Unit =
-    c.topics.foreach { case (t, r) => liveRanges.get(t).foreach(_.remove(r.start, c)) }
-
-  /** The visible commits holding `topic`, in offset order. */
-  private def liveCommitsOf(topic: String): Iterator[CommitRecord] =
-    liveRanges.get(topic).iterator.flatMap(_.values.iterator.asScala)
+  /** Retried reads: a read whose covering commit left the view while it
+    * read (see [[readRange]]). */
+  private[log] val readRetries = new java.util.concurrent.atomic.AtomicLong
   // Dropped-commit accounting (the manifest is the Raft snapshot-truncates-
   // the-log analogue, reference: distributed-walrus/src/metadata.rs:
   // 115-189): fully-reclaimed commits leave `commits` at manifest-write
@@ -193,8 +187,14 @@ class WalrusLog(
     droppedTagFamilies.map { case (base, (n, id)) => s"$base-$n" -> id }.toMap ++
       droppedIrregularTags
   private var nextBatchId: Long = 0L
-  private val cursors = mutable.Map.empty[(String, String), Long]
-  private val unpersistedReads = mutable.Map.empty[(String, String), Long]
+  /** Serializes cursor moves. Taken BEFORE the monitor, never inside it: a
+    * StrictlyAtOnce read holds it across read, verify and cursor persist;
+    * [[seek]] (the only backward move) holds it and the monitor. */
+  private val cursorLock = new Object
+  /** `(group, topic) -> next offset`, republished whole on every move, so
+    * unlocked readers (and [[vacuum]] under the monitor) read a snapshot. */
+  @volatile private var cursors = Map.empty[(String, String), Long]
+  private val unpersistedReads = mutable.Map.empty[(String, String), Long] // under cursorLock
   private val producerSeq = mutable.Map.empty[String, Long]
   private val isBatchWriting = new AtomicBoolean(false)
   private var sinceManifest: Int = 0 // commits applied since the last manifest
@@ -769,13 +769,14 @@ class WalrusLog(
     commits += rec
     if (rec.id >= 0) { maxPublishedId = math.max(maxPublishedId, rec.id); publishedCount += 1 }
     sinceManifest += 1 // recover() recomputes after replay; commit sites roll up
-    rec.replaces match {
+    val afterSources = rec.replaces match {
       case Some(ids) =>
         // Compaction: same rows, same offsets — no topic-state change; the
-        // sources leave the read index as the compaction enters it.
+        // sources leave the view in the same publish the compaction enters
+        // it, so no read ever sees the range uncovered.
         val sources = ids.toSet
-        commits.iterator.filter(c => sources(c.id) && isVisible(c)).foreach(unindexLive)
         replaced ++= ids
+        view.withoutLive(sources)
       case None =>
         // Segment rollover (reference: distributed-walrus/src/monitor.rs:
         // 15-145, metadata.rs:144-166) happens inside the shared
@@ -787,8 +788,9 @@ class WalrusLog(
             cfg.maxSegmentEntries,
             seg => virtualNodes((seg % virtualNodes.size).toInt))
         }
+        view.withNextOffsets(rec.topics.iterator.map { case (t, r) => t -> r.end })
     }
-    if (isVisible(rec)) indexLive(rec)
+    view = if (isVisible(rec)) afterSources.withLive(rec) else afterSources
   }
 
   // =========================================================================
@@ -845,44 +847,63 @@ class WalrusLog(
     toDF().createOrReplaceTempView(name)
   }
 
-  /** Smallest retained offset >= `from` for the topic, per commit
-    * metadata — `from` itself when its batch is still visible, the next
-    * retained batch's start when retention reclaimed the range at `from`,
-    * `from` unchanged when nothing newer exists (read returns empty). */
-  private def firstVisibleOffsetAtOrAfter(topic: String, from: Long): Long =
-    liveRanges.get(topic).fold(from) { m =>
-      val below = m.floorEntry(from)
-      if (below != null && below.getValue.topics(topic).end > from) from
-      else Option(m.higherKey(from)).fold(from)(_.longValue)
+  /** Smallest retained offset >= `from` for the topic in `v` — `from`
+    * itself when its batch is still visible, the next retained batch's
+    * start when retention reclaimed the range at `from`, `from` unchanged
+    * when nothing newer exists (read returns empty). */
+  private def firstVisibleOffsetAtOrAfter(v: CatalogView, topic: String, from: Long): Long =
+    v.live.get(topic).fold(from) { m =>
+      m.maxBefore(from + 1) match {
+        case Some((_, c)) if c.topics(topic).end > from => from
+        case _ => m.minAfter(from + 1).fold(from)(_._1)
+      }
     }
-
-  private def visibleCommits: Seq[CommitRecord] =
-    commits.iterator
-      .filter(c => c.id >= 0 && !vacuumed.contains(c.id) && !replaced.contains(c.id))
-      .toSeq
 
   private def visibleBatchDirs: Seq[String] =
     visibleCommits.map(c => dataDir.resolve(s"batch=${c.id}").toString)
 
-  /** Entries of `topic` with `lo <= offset < hi`, in offset order, read on
-    * the driver — the analogue of the reference's cursor read over the
-    * topic's own blocks (`read_one_for_topic_shared`,
+  /** Runs `read` over the current [[CatalogView]], and again over a fresh
+    * one each time [[readRange]] finds that a commit it read left the view
+    * before the read finished: compaction deletes its sources, retention
+    * deletes what it reclaims, and a file listed or opened mid-delete can
+    * fail or come back short. Any other failure propagates. */
+  private def onStableView[T](read: CatalogView => T): T = {
+    while (true) {
+      try return read(view)
+      catch { case ViewMoved => readRetries.incrementAndGet() }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Entries of `topic` with `lo <= offset < hi` in `v`, in offset order,
+    * read on the driver — the analogue of the reference's cursor read over
+    * the topic's own blocks (`read_one_for_topic_shared`,
     * distributed-walrus/src/controller/mod.rs:199-276). The covering
-    * commits come from the in-memory catalog, so nothing lists the data
-    * dir and no Spark job runs: cost follows the few files of the covering
-    * batches, not the length of the log. Files are expanded and decoded by
-    * the DSv2 source's own planner and vectorized reader; `ts` is built
-    * from `ts_us` exactly as [[toDF]]'s collected `timestamp_micros` is. */
-  private def readRange(topic: String, lo: Long, hi: Long): Seq[WalrusEntry] = {
-    val covering = liveRanges.get(topic).filter(_ => lo < hi).fold(Seq.empty[CommitRecord]) { m =>
-      val from = Option(m.floorKey(lo)).fold(lo)(_.longValue)
-      m.subMap(from, true, hi, false).values.asScala.filter(_.topics(topic).end > lo).toSeq
+    * commits come from the view, so nothing lists the data dir, no Spark
+    * job runs and no lock is held: cost follows the few files of the
+    * covering batches, not the length of the log. Files are expanded and
+    * decoded by the DSv2 source's own planner and vectorized reader; `ts`
+    * is built from `ts_us` exactly as [[toDF]]'s collected
+    * `timestamp_micros` is. Throws [[ViewMoved]] (see [[onStableView]])
+    * when a covering commit is no longer in the current view once the read
+    * ends or fails: catalog changes publish the view before they delete
+    * any file, so a read that saw a delete always sees the change. */
+  private def readRange(v: CatalogView, topic: String, lo: Long, hi: Long): Seq[WalrusEntry] = {
+    val covering = v.live.get(topic).filter(_ => lo < hi).fold(Seq.empty[CommitRecord]) { m =>
+      val from = m.maxBefore(lo + 1).fold(lo)(_._1)
+      m.valuesIteratorFrom(from).takeWhile(_.topics(topic).start < hi)
+        .filter(_.topics(topic).end > lo).toSeq
+    }
+    if (covering.isEmpty) return Seq.empty
+    def moved: Boolean = {
+      val now = view.live.get(topic)
+      covering.exists(c => !now.exists(_.get(c.topics(topic).start).exists(_.id == c.id)))
     }
     // WalrusLogSource.Schema: offset, ts_us, value, checksum, then the
     // `topic` partition column last (unused here — it is `topic`)
     val factory = new WalrusReaderFactory(WalrusLogSource.Schema)
     val out = mutable.ArrayBuffer.empty[WalrusEntry]
-    WalrusLogSource.partitionsFor(nsDir, covering.map(_ -> false), Some(topic))
+    try WalrusLogSource.partitionsFor(nsDir, covering.map(_ -> false), Some(topic))
       .foreach { p =>
         val reader = factory.createColumnarReader(p)
         try while (reader.next()) {
@@ -900,6 +921,8 @@ class WalrusLog(
           }
         } finally reader.close()
       }
+    catch { case scala.util.control.NonFatal(_) if moved => throw ViewMoved }
+    if (moved) throw ViewMoved
     out.sortBy(_.offset).toSeq
   }
 
@@ -910,6 +933,14 @@ class WalrusLog(
     * (reference: walrus_read.rs:147-176). The window is served by
     * [[readRange]]: a driver-side read of the commits covering it, no
     * Spark job.
+    *
+    * Locks: none of them waits for a commit. The cursor and the covering
+    * commits come from the published [[CatalogView]], never the log
+    * monitor, so a read does not queue behind an append, an `appendDF`
+    * job or a `compact()`. A StrictlyAtOnce consume holds the cursor lock
+    * across read, checksum verify and cursor persist, so each entry goes
+    * to exactly one caller (reference: walrus_read.rs:861-869); peeks and
+    * AtLeastOnce reads take the cursor lock only to move the cursor.
     */
   def batchRead(
       topic: String,
@@ -918,14 +949,15 @@ class WalrusLog(
       group: String = SharedGroup,
       entriesCap: Int = cfg.maxBatchEntries): Seq[WalrusEntry] = {
     def doRead(): Seq[WalrusEntry] = {
-      val cursor = cursors.getOrElse((group, topic), 0L)
       val cap = math.min(entriesCap, cfg.maxBatchEntries)
-      // Time-based retention can reclaim a range ABOVE the cursor; jump
-      // the window start to the first retained offset (from commit
-      // metadata) so the window covers retained commits instead of
-      // stalling in a gap.
-      val from = firstVisibleOffsetAtOrAfter(topic, cursor)
-      val window = readRange(topic, from, from + cap)
+      val window = onStableView { v =>
+        // Time-based retention can reclaim a range ABOVE the cursor; jump
+        // the window start to the first retained offset (from commit
+        // metadata) so the window covers retained commits instead of
+        // stalling in a gap.
+        val from = firstVisibleOffsetAtOrAfter(v, topic, cursors.getOrElse((group, topic), 0L))
+        readRange(v, topic, from, from + cap)
+      }
       // Byte admission: the longest prefix within `maxBytes`, ≥ 1 entry.
       val fits = window.iterator.scanLeft(0L)(_ + _.value.length).drop(1)
         .takeWhile(_ <= maxBytes).size
@@ -938,9 +970,7 @@ class WalrusLog(
       out
     }
     consistency match {
-      // StrictlyAtOnce holds the engine lock across read+commit so an entry
-      // is delivered once (reference: walrus_read.rs:861-869).
-      case ReadConsistency.StrictlyAtOnce if checkpoint => synchronized(doRead())
+      case ReadConsistency.StrictlyAtOnce if checkpoint => cursorLock.synchronized(doRead())
       case _ => doRead()
     }
   }
@@ -966,26 +996,31 @@ class WalrusLog(
       maxBytes: Long,
       startByte: Long): Seq[WalrusEntry] = {
     val meta = cfg.metaOverheadBytes.toLong
-    // (batchStartOffset, batchEntryCount, cumulative stream bytes before
-    // batch). Ranges sorted by start offset — offsets are dense and
-    // non-overlapping, so this is the true stream order even after
-    // compaction reshuffles commit-log positions.
-    var cum = 0L
-    var located: Option[(Long, Long, Long)] = None
-    liveCommitsOf(topic).map(_.topics(topic)).foreach { r =>
-      val streamBytes = r.bytes + meta * (r.end - r.start)
-      if (located.isEmpty && startByte < cum + streamBytes)
-        located = Some((r.start, r.end - r.start, cum))
-      cum += streamBytes
+    val located = onStableView { v =>
+      // (batchStartOffset, batchEntryCount, cumulative stream bytes before
+      // batch). Ranges sorted by start offset — offsets are dense and
+      // non-overlapping, so this is the true stream order even after
+      // compaction reshuffles commit-log positions.
+      var cum = 0L
+      var at: Option[(Long, Long, Long)] = None
+      v.live.get(topic).iterator.flatMap(_.valuesIterator).map(_.topics(topic)).foreach { r =>
+        val streamBytes = r.bytes + meta * (r.end - r.start)
+        if (at.isEmpty && startByte < cum + streamBytes)
+          at = Some((r.start, r.end - r.start, cum))
+        cum += streamBytes
+      }
+      at.map { case (batchStart, batchEntries, bytesBefore) =>
+        (readRange(v, topic, batchStart, batchStart + batchEntries + cfg.maxBatchEntries),
+          bytesBefore)
+      }
     }
     located match {
       case None => Seq.empty
-      case Some((batchStart, batchEntries, bytesBefore)) =>
+      case Some((window, bytesBefore)) =>
         // (entry, stream position just past it): a running sum from the
         // batch's start, kept from the first entry that ends after startByte
         var cumEnd = bytesBefore
-        val rows = readRange(topic, batchStart,
-            batchStart + batchEntries + cfg.maxBatchEntries)
+        val rows = window
           .map { e => cumEnd += e.value.length + meta; (e, cumEnd) }
           .dropWhile(_._2 <= startByte)
           .take(cfg.maxBatchEntries)
@@ -999,7 +1034,7 @@ class WalrusLog(
         // the skip applies only when entry 0 has been sealed by rollover
         // AND, like the reference's scan (bounded by blk.used), never past
         // the sealed boundary into the open segment.
-        val sealedBelow = state(topic).lastSealedEntryOffset
+        val sealedBelow = segmentState(topic)._2
         val aligned =
           if (startByte == 0L && sealedBelow > 0)
             rows.dropWhile { case (e, _) =>
@@ -1046,20 +1081,25 @@ class WalrusLog(
     * reference's cursors only move forward via consumption
     * (walrus_read.rs:347-366); seek is the admin surface a consumer-group
     * model additionally needs (replay / skip-ahead). */
-  def seek(group: String, topic: String, offset: Long): Unit = synchronized {
-    // reject unknown topics: a silent no-op cursor for a typo'd name would
-    // inflate consumer_groups and hide the mistake from the caller
-    require(topics.contains(topic), s"unknown topic '$topic'")
-    cursors((group, topic)) =
-      math.max(0L, math.min(offset, totalAppended(topic)))
-    unpersistedReads.remove((group, topic))
-    persistCursors()
-  }
+  def seek(group: String, topic: String, offset: Long): Unit =
+    // The only backward move, so it also takes the monitor: a vacuum()
+    // (which reads cursors under the monitor) never reclaims at or above
+    // a cursor some read is still serving from.
+    cursorLock.synchronized(synchronized {
+      // reject unknown topics: a silent no-op cursor for a typo'd name would
+      // inflate consumer_groups and hide the mistake from the caller
+      require(topics.contains(topic), s"unknown topic '$topic'")
+      cursors = cursors.updated((group, topic),
+        math.max(0L, math.min(offset, totalAppended(topic))))
+      unpersistedReads.remove((group, topic))
+      persistCursors()
+    })
 
+  /** Forward-only cursor move, under the cursor lock alone. */
   private def advanceCursorTo(group: String, topic: String, newOffset: Long,
-      delivered: Long): Unit = synchronized {
+      delivered: Long): Unit = cursorLock.synchronized {
     val k = (group, topic)
-    cursors(k) = math.max(cursors.getOrElse(k, 0L), newOffset)
+    cursors = cursors.updated(k, math.max(cursors.getOrElse(k, 0L), newOffset))
     consistency match {
       case ReadConsistency.StrictlyAtOnce => persistCursors()
       case ReadConsistency.AtLeastOnce(every) =>
@@ -1085,13 +1125,13 @@ class WalrusLog(
   /** Unconsumed entries for the shared cursor (reference:
     * `get_topic_entry_count`, src/wal/runtime/walrus.rs:129-142). */
   def entryCount(topic: String): Long =
-    topics.get(topic).map(st =>
-      math.max(st.nextOffset - committedOffset(SharedGroup, topic), 0L)).getOrElse(0L)
+    view.nextOffsets.get(topic).fold(0L)(n =>
+      math.max(n - committedOffset(SharedGroup, topic), 0L))
 
-  def entryCounts: Map[String, Long] = topics.keys.map(t => t -> entryCount(t)).toMap
+  def entryCounts: Map[String, Long] = view.nextOffsets.keys.map(t => t -> entryCount(t)).toMap
 
   /** Total appended entries regardless of consumption. */
-  def totalAppended(topic: String): Long = topics.get(topic).map(_.nextOffset).getOrElse(0L)
+  def totalAppended(topic: String): Long = view.nextOffsets.getOrElse(topic, 0L)
 
   /** Byte size of the topic's logical stream, headers included (reference:
     * `get_topic_size`, src/wal/runtime/walrus.rs:144-178). */
@@ -1105,9 +1145,8 @@ class WalrusLog(
 
   /** Snapshot of the persisted consumer-cursor store as sorted
     * (group, topic, committed) rows — the DESCRIBE GROUPS surface. */
-  def consumerCursors: Seq[(String, String, Long)] = synchronized {
+  def consumerCursors: Seq[(String, String, Long)] =
     cursors.toSeq.map { case ((g, t), o) => (g, t, o) }.sortBy(x => (x._1, x._2))
-  }
 
   /** DESCRIBE HISTORY surface: every commit the working set still tracks,
     * in id order, with its aggregate row/byte footprint, tag, and
@@ -1160,6 +1199,7 @@ class WalrusLog(
           "entries are immutable — vacuum/retention are the deletion surface")
       val tombGen = topics(topic).cleanGeneration + 1
       topics.remove(topic)
+      view = view.copy(nextOffsets = view.nextOffsets - topic)
       unregistered(topic) = tombGen
       persistClean()
       true
@@ -1189,16 +1229,16 @@ class WalrusLog(
   }
 
   def metricsJson(): String = {
-    val totalEntries = topics.valuesIterator.map(_.nextOffset).sum
+    val nextOffsets = view.nextOffsets
     // publishedCount / droppedVacuumedCount keep these totals invariant
     // under manifest shedding: "commits" counts commits EVER published,
     // not the live working set (reference METRICS counts are monotone).
     JsonMethods.compact(JObject(
       "namespace" -> JString(namespace),
-      "topics" -> JLong(topics.size),
+      "topics" -> JLong(nextOffsets.size),
       "commits" -> JLong(publishedCount),
-      "total_entries" -> JLong(totalEntries),
-      "consumer_groups" -> JLong(cursors.keys.map(_._1).toSet.size),
+      "total_entries" -> JLong(nextOffsets.valuesIterator.sum),
+      "consumer_groups" -> JLong(cursors.keysIterator.map(_._1).toSet.size),
       "vacuumed_batches" -> JLong(vacuumed.size + droppedVacuumedCount)))
   }
 
@@ -1208,7 +1248,11 @@ class WalrusLog(
 
   /** Delete batch directories whose every topic range is fully consumed by
     * every consumer group (reference's file reclamation,
-    * src/wal/runtime/allocator.rs:188-342). Returns reclaimed batch ids. */
+    * src/wal/runtime/allocator.rs:188-342). Returns reclaimed batch ids.
+    * Runs under the monitor but not the cursor lock, on the cursors as
+    * last published: cursors only move forward outside the monitor, so a
+    * snapshot can only under-reclaim, never reach a range a running read
+    * started from. */
   def vacuum(): Seq[Long] = synchronized {
     val consumed = consumedByAllGroups
     val reclaim = visibleCommits.filter(c => c.topics.nonEmpty && consumed(c))
@@ -1219,10 +1263,11 @@ class WalrusLog(
   /** [[vacuum]]'s rule: every topic range of the commit lies below every
     * consumer group's cursor (with no group, nothing counts as consumed). */
   private def consumedByAllGroups: CommitRecord => Boolean = {
-    val groups = cursors.keys.map(_._1).toSet
+    val cs = cursors
+    val groups = cs.keys.map(_._1).toSet
     def minCursor(topic: String): Long =
       if (groups.isEmpty) 0L
-      else groups.map(g => cursors.getOrElse((g, topic), 0L)).min
+      else groups.map(g => cs.getOrElse((g, topic), 0L)).min
     c => c.topics.forall { case (t, r) => r.end <= minCursor(t) }
   }
 
@@ -1386,7 +1431,8 @@ class WalrusLog(
     * rewritten with its vacuumed flag, for the JSON tail past the manifest. */
   private def reclaimAll(cs: Seq[CommitRecord]): Unit = {
     if (cs.isEmpty) return
-    cs.foreach { c => unindexLive(c); vacuumed += c.id }
+    cs.foreach(c => vacuumed += c.id)
+    view = view.withoutLive(cs.map(_.id).toSet) // before any delete
     val asOf = newestManifestAsOf
     if (cs.exists(c => asOf.exists(_ >= c.id))) writeManifest()
     cs.foreach { c =>
@@ -1409,7 +1455,11 @@ class WalrusLog(
     * some not) receives the compaction batch whole and re-sees the consumed
     * subset — dedupe downstream on (topic, offset) there, or compact data
     * already consumed by all streams. Returns the new batch id, or None if
-    * < 2 batches. */
+    * < 2 batches.
+    *
+    * Cursor reads do not wait for it: they serve from the sources until
+    * the compaction commit publishes, and a read still opening a source's
+    * files when they are deleted starts over on the compaction commit. */
   def compact(targetFileBytes: Long = 1L << 30,
       maxSourceBatches: Int = Int.MaxValue): Option[Long] = synchronized {
     withCollisionRetry(compactAttempt(targetFileBytes, maxSourceBatches))
@@ -1440,8 +1490,7 @@ class WalrusLog(
           col("value"), col("checksum"), col("len"))
         .repartitionByRange(nParts, col("topic"), col("offset"))
         .sortWithinPartitions("topic", "offset")
-        .write.mode(SaveMode.ErrorIfExists)
-        .option("compression", cfg.compression)
+        .write.mode(SaveMode.ErrorIfExists).options(entryWriteOptions)
         .partitionBy("topic").parquet(d.toString)
     }
     val rec = CommitRecord(id, System.currentTimeMillis(), merged,
@@ -1552,7 +1601,6 @@ class WalrusLog(
         commits += e.record
         e.topics.foreach { case (t, _) => state(t) }
       }
-      commits.iterator.filter(isVisible).foreach(indexLive)
       maxPublishedId = m.asOf
       publishedCount = m.publishedCount
       droppedVacuumedCount = m.vacuumedCount
@@ -1592,15 +1640,19 @@ class WalrusLog(
         .parse(new String(Files.readAllBytes(producersPath), "UTF-8")).extract[ProducerFile]
       producerSeq ++= pf.producers
     }
+    // the replay above published partial views; publish the recovered
+    // catalog whole
+    view = CatalogView.Empty.withNextOffsets(topics.iterator.map { case (t, st) =>
+      t -> st.nextOffset }).withLive(commits.filter(isVisible).toSeq: _*)
     if (Files.exists(cursorsPath)) {
       val cur = org.json4s.jackson.JsonMethods
         .parse(new String(Files.readAllBytes(cursorsPath), "UTF-8")).extract[CursorFile]
-      cur.groups.foreach { case (g, m) =>
-        m.foreach { case (t, o) =>
+      cursors = cur.groups.iterator.flatMap { case (g, m) =>
+        m.iterator.map { case (t, o) =>
           val hi = topics.get(t).map(_.nextOffset).getOrElse(0L)
-          cursors((g, t)) = math.min(math.max(o, 0L), hi) // clamp (walrus.rs:429-550)
+          (g, t) -> math.min(math.max(o, 0L), hi) // clamp (walrus.rs:429-550)
         }
-      }
+      }.toMap
     }
     // Orphaned-storage sweep (ADVICE r8): reclamation orders manifest
     // rewrite → dir delete, so a crash in between leaves `batch=N` dirs
@@ -1794,10 +1846,10 @@ class WalrusLog(
     throw new IllegalStateException("unreachable")
   }
 
-  def close(): Unit = synchronized {
+  def close(): Unit = cursorLock.synchronized(synchronized {
     persistCursors()
     persistClean()
-  }
+  })
 
   // ---- helpers ----
 
@@ -1814,6 +1866,7 @@ class WalrusLog(
       val diskTomb = diskCleanTopics.get(topic)
         .collect { case cs if cs.dropped => cs.generation }.getOrElse(0L)
       st.cleanGeneration = math.max(localTomb, diskTomb)
+      view = view.withNextOffsets(Iterator.single(topic -> 0L))
       st
     })
 
@@ -1880,6 +1933,53 @@ object WalrusLog {
     * treated as internal metadata by stateless offset-0 reads
     * (reference: walrus_read.rs:536-545, `data_size < 128`). */
   val MetadataEntrySkipBytes = 128
+
+  /** One published state of a log's catalog, immutable.
+    * @param live        every visible commit's range of each topic, keyed
+    *                    by the range's start offset. A topic's live ranges
+    *                    are disjoint (a compaction hides its sources in the
+    *                    publish that adds it), so the reads that follow a
+    *                    cursor find their covering commits with a floor
+    *                    lookup, not a pass over the catalog.
+    * @param visible     the visible commits in commit order.
+    * @param nextOffsets every registered topic's next offset. */
+  private final case class CatalogView(
+      live: Map[String, TreeMap[Long, CommitRecord]],
+      visible: Vector[CommitRecord],
+      nextOffsets: Map[String, Long]) {
+
+    def withLive(cs: CommitRecord*): CatalogView =
+      copy(live = cs.foldLeft(live) { (acc, c) =>
+        c.topics.foldLeft(acc) { case (m, (t, r)) =>
+          if (r.end > r.start)
+            m.updated(t, m.getOrElse(t, TreeMap.empty[Long, CommitRecord]).updated(r.start, c))
+          else m
+        }
+      }, visible = visible ++ cs)
+
+    def withoutLive(ids: Set[Long]): CatalogView = {
+      val (gone, kept) = visible.partition(c => ids(c.id))
+      copy(live = gone.foldLeft(live) { (acc, c) =>
+        c.topics.foldLeft(acc) { case (m, (t, r)) =>
+          m.get(t).filter(_.get(r.start).exists(_.id == c.id)).fold(m) { ranges =>
+            val rest = ranges - r.start
+            if (rest.isEmpty) m - t else m.updated(t, rest)
+          }
+        }
+      }, visible = kept)
+    }
+
+    def withNextOffsets(kvs: IterableOnce[(String, Long)]): CatalogView =
+      copy(nextOffsets = nextOffsets ++ kvs)
+  }
+
+  private object CatalogView {
+    val Empty = CatalogView(Map.empty, Vector.empty, Map.empty)
+  }
+
+  /** A read's covering commit left the catalog view mid-read; the read
+    * starts over on the new view (see `WalrusLog.onStableView`). */
+  private object ViewMoved extends scala.util.control.ControlThrowable
 
   /** Builder parity with the reference's `WalrusBuilder`
     * (reference: src/wal/builder.rs:26-105): `dataDir`/`key`/`consistency`

@@ -17,12 +17,17 @@ case class WalrusEntry(
   * (reference: src/wal/runtime/walrus.rs:20-24).
   *
   *  - [[ReadConsistency.StrictlyAtOnce]]: the cursor is persisted after every
-  *    consumed read and the engine lock is held across read+commit, so each
-  *    entry is delivered to exactly one caller
-  *    (reference: src/wal/runtime/walrus_read.rs:861-869).
+  *    consumed read and the log's cursor lock is held across read, verify
+  *    and cursor persist, so each entry is delivered to exactly one caller
+  *    (reference: src/wal/runtime/walrus_read.rs:861-869). The cursor lock
+  *    is not the commit monitor: a consume reads the published catalog
+  *    view and does not wait for an append, an `appendDF` job or a
+  *    `compact()`.
   *  - [[ReadConsistency.AtLeastOnce]]: the cursor is persisted every
   *    `persistEvery` consumed entries; a crash replays at most that many
-  *    (reference: src/wal/runtime/walrus_read.rs:347-366).
+  *    (reference: src/wal/runtime/walrus_read.rs:347-366). Reads hold no
+  *    lock across their IO, so concurrent consumers of one group may
+  *    receive the same entry.
   */
 sealed trait ReadConsistency
 object ReadConsistency {

@@ -89,6 +89,7 @@ class LocalFileIOSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckpt = tempDir("lfio-ckpt-").resolve("q").toString
     val log = new WalrusLog(spark, root)
     var batches = 0L
+    var compacted = Option.empty[Long]
     val spawned = spawnsDuring {
       log.append("t", bytes("a0"))
       log.batchAppend("t", (1 to 4).map(i => bytes(s"a$i")))
@@ -108,8 +109,11 @@ class LocalFileIOSpec extends AnyFunSuite with BeforeAndAfterAll {
         q.processAllAvailable()
         batches = q.lastProgress.batchId + 1
       } finally q.stop()
+      compacted = log.compact()
     }
     assert(batches == 3)
+    assert(compacted.isDefined)
+    assert(log.batchRead("t", Long.MaxValue, checkpoint = false).size == 7)
     assert(spark.table("lfio_tail").collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("t" -> 7L, "u" -> 3L))
     assert(spawned.isEmpty, s"${spawned.size} processes started: ${spawned.distinct.take(5)}")

@@ -1747,4 +1747,162 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(_.offset) == (0L until 3L))
     assert(got.map(e => str(e.value)) == Seq("e0", "e1", "e2"))
   }
+
+  test("a strictly-at-once GET returns while another thread holds the log monitor") {
+    val log = new WalrusLog(spark, tempRoot(), consistency = ReadConsistency.StrictlyAtOnce)
+    log.append("t", bytes("e0"))
+    val got = new java.util.concurrent.CompletableFuture[Option[WalrusEntry]]()
+    // the monitor is what a commit, an appendDF job or a compact() holds
+    log.synchronized {
+      new Thread(() => got.complete(log.readNext("t"))).start()
+      val e = got.get(5, java.util.concurrent.TimeUnit.SECONDS)
+      assert(e.map(x => str(x.value)).contains("e0"))
+    }
+    assert(log.committedOffset(WalrusLog.SharedGroup, "t") == 1L)
+  }
+
+  test("strictly-at-once GETs race appends, compaction and retention: exactly once, in order") {
+    val log = new WalrusLog(spark, tempRoot(), consistency = ReadConsistency.StrictlyAtOnce)
+    val topics = Seq("r0", "r1", "r2")
+    val rand = new scala.util.Random(20261020L)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def worker(body: => Unit): Thread = {
+      val th = new Thread(() => try body catch { case e: Throwable => errors.add(e) })
+      th.start(); th
+    }
+    // producers: value "<producer>:<seq>"; each producer's seqs grow per topic
+    val appended = new java.util.concurrent.ConcurrentHashMap[String, String]() // value -> topic
+    def producer(name: String, seed: Long, batched: Boolean): Thread = {
+      val r = new scala.util.Random(seed)
+      worker {
+        var seq = 0
+        while (!stop.get()) {
+          val t = topics(r.nextInt(topics.size))
+          val vs = (0 until (if (batched) 1 + r.nextInt(8) else 1)).map { _ =>
+            seq += 1; s"$name:$seq" }
+          if (batched) log.batchAppend(t, vs.map(bytes)) else log.append(t, bytes(vs.head))
+          vs.foreach(appended.put(_, t))
+        }
+      }
+    }
+    // consumers: (topic, offset, value) in the order each one received them
+    val received = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[(String, Long, String)]]
+    def consumer(): Thread = {
+      val got = mutable.ArrayBuffer.empty[(String, Long, String)]
+      received += got
+      worker {
+        var i = 0
+        while (!stop.get()) {
+          val t = topics(i % topics.size); i += 1
+          log.readNext(t) match {
+            case Some(e) => got += ((t, e.offset, str(e.value)))
+            case None => Thread.sleep(1)
+          }
+          val (c, n) = (log.committedOffset(WalrusLog.SharedGroup, t), log.totalAppended(t))
+          if (c > n) throw new AssertionError(s"$t: cursor $c past next offset $n")
+        }
+      }
+    }
+    val threads = Seq(producer("a1", rand.nextLong(), batched = false),
+      producer("a2", rand.nextLong(), batched = false),
+      producer("b", rand.nextLong(), batched = true), consumer(), consumer())
+    // (topic, start, end) of every range time-based retention reclaimed
+    val reclaimed = mutable.Set.empty[(String, Long, Long)]
+    def ranges = log.snapshotManifest().map { case (_, t, r) => (t, r.start, r.end) }.toSet
+    var compactNs = 0L; var rounds = 0
+    val t0 = System.nanoTime()
+    def elapsedS = (System.nanoTime() - t0) / 1e9
+    try {
+      // at least 3 s, and until reads met a moved view three times (bounded)
+      while (errors.isEmpty && elapsedS < 60 && (elapsedS < 3 || log.readRetries.get < 3)) {
+        // pauses between the monitor-holding steps let the producers in
+        val c0 = System.nanoTime()
+        log.compact()
+        compactNs += System.nanoTime() - c0; rounds += 1
+        Thread.sleep(20 + rand.nextInt(100))
+        log.synchronized {
+          val before = ranges
+          log.vacuumOlderThan(System.currentTimeMillis() - 20 - rand.nextInt(200))
+          reclaimed ++= before -- ranges
+        }
+        log.vacuum()
+        Thread.sleep(20 + rand.nextInt(100))
+      }
+    } finally { stop.set(true); threads.foreach(_.join()) }
+    assert(errors.isEmpty, s"a worker failed: ${errors.asScala.headOption}")
+    val drained = topics.flatMap(t => Iterator.continually(log.readNext(t)).takeWhile(_.isDefined)
+      .map(o => (t, o.get.offset, str(o.get.value))))
+    assert(log.readRetries.get > 0, "no read met a commit that left the view mid-read")
+    for (t <- topics) {
+      val mine = appended.asScala.collect { case (v, `t`) => v }.toSet
+      assert(log.totalAppended(t) == mine.size.toLong, s"$t: acknowledged appends lost")
+      // a cursor stops short of the next offset only in a reclaimed gap
+      assert(log.committedOffset(WalrusLog.SharedGroup, t) <= log.totalAppended(t))
+      val got = (received.flatten ++ drained).filter(_._1 == t)
+      assert(got.map(_._2).distinct.size == got.size, s"$t: an offset was delivered twice")
+      assert(got.map(_._3).distinct.size == got.size, s"$t: an entry was delivered twice")
+      assert(got.forall(g => mine(g._3)), s"$t: delivered an entry of another topic")
+      // in order: every consumer saw rising offsets, and offsets follow
+      // each producer's append order
+      (received :+ drained).foreach { seen =>
+        val os = seen.filter(_._1 == t).map(_._2)
+        assert(os == os.sorted && os.distinct == os, s"$t: a consumer went backwards")
+      }
+      got.sortBy(_._2).groupBy(_._3.takeWhile(_ != ':')).foreach { case (p, es) =>
+        val seqs = es.map(_._3.dropWhile(_ != ':').tail.toInt)
+        assert(seqs == seqs.sorted, s"$t: producer $p's entries out of order")
+      }
+      // what was never delivered, retention reclaimed
+      val lost = (0L until log.totalAppended(t)).toSet -- got.map(_._2)
+      val unaccounted = lost.filterNot(o =>
+        reclaimed.exists { case (rt, lo, hi) => rt == t && lo <= o && o < hi })
+      assert(unaccounted.isEmpty, s"$t: undelivered and not reclaimed: ${unaccounted.toSeq.sorted.take(10)}")
+    }
+    info(f"${elapsedS}%.1f s, ${appended.size} entries, ${log.readRetries.get} retried " +
+      s"reads, ${reclaimed.size} ranges reclaimed by retention, $rounds rounds, ${compactNs / 1000000} ms compacting")
+  }
+
+  test("append/GET mix over 8 Zipf topics: no loss, no duplicate, per-topic order") {
+    val log = new WalrusLog(spark, tempRoot(), consistency = ReadConsistency.StrictlyAtOnce)
+    val topics = (0 until 8).map(i => s"z$i")
+    // Zipf(s = 1.1) topic pick, z0 the hottest
+    val rand = new scala.util.Random(7L)
+    val cum = (1 to topics.size).map(k => 1.0 / math.pow(k, 1.1)).scanLeft(0.0)(_ + _).tail
+    def pick(): Int = { val x = rand.nextDouble() * cum.last; cum.indexWhere(_ >= x) }
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sent = topics.map(_ -> mutable.ArrayBuffer.empty[String]).toMap
+    val got = topics.map(_ -> mutable.ArrayBuffer.empty[(Long, String)]).toMap
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val putter = new Thread(() => try {
+      var i = 0
+      while (!stop.get()) {
+        val t = topics(pick()); val v = s"v$i"; i += 1
+        log.append(t, bytes(v))
+        sent(t) += v
+      }
+    } catch { case e: Throwable => errors.add(e) })
+    val getter = new Thread(() => try {
+      var i = 0
+      while (!stop.get()) {
+        val t = topics(i % topics.size); i += 1
+        log.readNext(t).foreach(e => got(t) += ((e.offset, str(e.value))))
+      }
+    } catch { case e: Throwable => errors.add(e) })
+    val runS = 15
+    putter.start(); getter.start()
+    Thread.sleep(runS * 1000L)
+    stop.set(true); putter.join(); getter.join()
+    val appends = sent.valuesIterator.map(_.size).sum
+    val backlog = appends - got.valuesIterator.map(_.size).sum
+    topics.foreach(t => Iterator.continually(log.readNext(t)).takeWhile(_.isDefined)
+      .foreach(e => got(t) += ((e.get.offset, str(e.get.value)))))
+    assert(errors.isEmpty, s"a client failed: ${errors.asScala.headOption}")
+    for (t <- topics) {
+      assert(got(t).map(_._2) == sent(t), s"$t: lost, duplicated or reordered entries")
+      assert(got(t).map(_._1) == sent(t).indices.map(_.toLong), s"$t: offsets not dense")
+    }
+    info(f"append/GET mix: ${appends.toDouble / runS}%.0f appends/s, " +
+      s"$appends appends, backlog $backlog entries at stop")
+  }
 }
