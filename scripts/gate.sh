@@ -107,6 +107,18 @@ CODEC=$( { grep -rnE 'extract\[(CommitRecord|ManifestEntry|LogManifest)\]|"vacuu
 if [ -n "$CODEC" ]; then echo "$CODEC"; echo "GATE: commit codec hits"; FAIL=1
 else echo "clean"; fi
 
+note "commit listing grep (stream readers probe new commit ids, they do not list)"
+# a commits/ listing costs O(live commits); a trigger or a real-time poll
+# must cost what it finds. Listing is left to the cold load
+# (assembleCommits), the probe fallback (CommitTail, through
+# newCommitFiles) and the catalog's VERSION AS OF check
+LISTS=$( { grep -rnE "(^|[^A-Za-z])(commitFiles|newCommitFiles)\(" src/main/scala 2>/dev/null || true; } \
+    | grep -v "^src/main/scala/graft/sources/WalrusCatalog\.scala:" \
+    | grep -vE "^src/main/scala/graft/sources/WalrusLogSource\.scala:[0-9]+:\s*(private\[graft\] def (commitFiles|newCommitFiles)\(|val names = commitFiles\(nsDir\)|publishedPrefix\(commitFiles\(nsDir\)\.drop\(known\)|loaded = loaded \+\+ newCommitFiles\()" \
+    | grep -vE "^[^:]+:[0-9]+:\s*(//|\*)" )
+if [ -n "$LISTS" ]; then echo "$LISTS"; echo "GATE: commit listing hits"; FAIL=1
+else echo "clean"; fi
+
 note "padding greps (no stubs in main)"
 PADS=$( { grep -rn '???' src/main/scala 2>/dev/null || true; } | grep -v MediaCodecStub )
 TODOS=$(grep -rnE "TODO|FIXME" src/main/scala 2>/dev/null || true)

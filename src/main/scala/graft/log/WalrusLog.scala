@@ -187,6 +187,13 @@ class WalrusLog(
     droppedTagFamilies.map { case (base, (n, id)) => s"$base-$n" -> id }.toMap ++
       droppedIrregularTags
   private var nextBatchId: Long = 0L
+  /** Set by [[recover]] when another writer's claim may be in its
+    * claim → publish gap; cleared by the first commit's resync. */
+  private var claimGapPending = false
+  /** Claims found at open that stayed unpublished through that first
+    * resync's wait: their writer crashed mid-commit (this writer's own
+    * earlier run, say), so no later resync waits for them again. */
+  private val abandonedClaims = mutable.Set.empty[Long]
   /** Serializes cursor moves. Taken BEFORE the monitor, never inside it: a
     * StrictlyAtOnce read holds it across read, verify and cursor persist;
     * [[seek]] (the only backward move) holds it and the monitor. */
@@ -903,7 +910,8 @@ class WalrusLog(
     // `topic` partition column last (unused here — it is `topic`)
     val factory = new WalrusReaderFactory(WalrusLogSource.Schema)
     val out = mutable.ArrayBuffer.empty[WalrusEntry]
-    try WalrusLogSource.partitionsFor(nsDir, covering.map(_ -> false), Some(topic))
+    try WalrusLogSource.partitionsFor(nsDir, covering.map(_ -> false), Some(topic),
+        WalrusLogSource.Schema)
       .foreach { p =>
         val reader = factory.createColumnarReader(p)
         try while (reader.next()) {
@@ -1694,6 +1702,26 @@ class WalrusLog(
       if (n.startsWith("batch=")) n.stripPrefix("batch=").toLongOption else None
     }.maxOption.getOrElse(-1L)
     nextBatchId = math.max(maxCommit, maxDir) + 1
+    // A claim past the watermark with no commit file may be another
+    // writer's claim → publish gap: its ranges are unknown until it
+    // publishes, so the first commit from here waits it out (see
+    // withCollisionRetry) instead of reusing its offsets.
+    claimGapPending = claimedUnpublished.nonEmpty
+  }
+
+  /** Batch dirs claimed by a writer whose commit is not applied here.
+    * A claim untouched for [[LogConfig.staleStageSweepMs]] is abandoned
+    * (its writer crashed mid-commit), the same age rule as the stage
+    * sweep: nothing waits for it, and its id stays a gap. */
+  private def claimedUnpublished: Seq[Long] = {
+    val known = commits.iterator.map(_.id).toSet
+    WalrusLog.listDir(dataDir).flatMap { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith("batch=") && !n.contains(".stage-"))
+        n.stripPrefix("batch=").toLongOption.filterNot(id =>
+          known(id) || abandonedClaims(id) || staleEnoughToSweep(p))
+      else None
+    }
   }
 
   /** Fold one published commit file into in-memory state. */
@@ -1772,15 +1800,6 @@ class WalrusLog(
       fresh.foreach(p => applyCommitFile(CommitCodec.readCommit(p)))
       fresh.size
     }
-    def claimedUnpublished: Seq[Long] = {
-      val known = commits.iterator.map(_.id).toSet
-      WalrusLog.listDir(dataDir).flatMap { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("batch=") && !n.contains(".stage-"))
-          n.stripPrefix("batch=").toLongOption.filterNot(known)
-        else None
-      }
-    }
     var applied = applyFresh()
     // A batch dir claimed by a writer whose commit file is not yet
     // visible: the claimant sits in the (tiny, driver-side) claim →
@@ -1790,7 +1809,8 @@ class WalrusLog(
     // (bounded by LogConfig.claimGapWaitMs; the reference's equivalent
     // timeouts are configurable, controller/mod.rs:321-371); a claimant
     // that never publishes (crashed mid-gap) fails the resync and the
-    // caller fail-stops exactly as the pre-retry code did. `wait(10)`
+    // caller fail-stops exactly as the pre-retry code did, until the
+    // claim is old enough to count as abandoned. `wait(10)`
     // rather than Thread.sleep: wait RELEASES the instance monitor (even
     // the caller's reentrant hold) each tick, so a crashed claimant
     // stalls only this resyncing thread — other threads on the instance
@@ -1801,11 +1821,15 @@ class WalrusLog(
       applied += applyFresh()
     }
     val orphans = claimedUnpublished
-    if (orphans.nonEmpty)
+    // an open's first commit waits once: what is still unpublished then
+    // is abandoned
+    if (claimGapPending) abandonedClaims ++= orphans
+    else if (orphans.nonEmpty)
       throw new CommitCollisionException(
         s"commit collision: batch dir(s) ${orphans.mkString(", ")} were " +
           "claimed by another writer that never published their commits " +
-          "(crashed mid-publish?); re-open the log to recover")
+          "(crashed mid-publish?); re-open the log to recover, or wait until " +
+          "the claim is staleStageSweepMs old")
     // Producer watermarks too: the winner may have advanced a shared
     // idempotent producer's high-water mark — fold it in (max-merge, so a
     // replay that raced the other writer still dedups correctly).
@@ -1829,10 +1853,16 @@ class WalrusLog(
   /** Run `op` (a commit-publishing operation whose visibility point is the
     * commit file — everything before it is invisible and re-runnable),
     * resyncing and retrying on [[CommitCollisionException]] up to
-    * [[LogConfig.commitCollisionRetries]] times. Collisions can only be
+    * [[LogConfig.commitCollisionRetries]] times. The first commit after
+    * an open that found an unpublished claim resyncs before its attempt,
+    * waiting that claim out once: a claim still unpublished after
+    * [[LogConfig.claimGapWaitMs]] is abandoned, and its id stays a gap.
+    * Collisions can only be
     * thrown BEFORE the commit publishes ([[claimBatchDir]] /
     * [[WalrusLog.writeAtomicNew]]), so a retry never double-commits. */
   private def withCollisionRetry[T](op: => T): T = {
+    if (claimGapPending)
+      try resyncFromDisk() finally claimGapPending = false
     var attempt = 0
     while (true) {
       try return op

@@ -30,13 +30,14 @@ import graft.log.{CommitRecord, TopicRange}
   * each micro-batch is a contiguous range of committed atomic batches, so
   * exactly-once replay falls out of checkpointed (start, end] commit ranges.
   *
-  * Scans are **columnar**: each partition (data files of one topic, packed
-  * by Spark's file-split rule) is read file by file with Spark's
-  * vectorized parquet reader — the file layout is pure
-  * int64/binary (ts stored as epoch-micros long precisely so the custom
-  * reader never meets INT96), and `topic` is appended as a constant
-  * partition column. Column pruning is pushed into the reader, so a
-  * streaming aggregate over one column reads only that column's pages.
+  * Scans are **columnar**: each partition (data files packed by Spark's
+  * file-split rule, of one topic only when the scan reports key-grouped
+  * partitioning) is read file by file with Spark's vectorized parquet
+  * reader — the file layout is pure int64/binary (ts stored as
+  * epoch-micros long precisely so the custom reader never meets INT96),
+  * and `topic` is appended as a per-file constant partition column.
+  * Column pruning is pushed into the reader, so a streaming aggregate
+  * over one column reads only that column's pages.
   * The raw schema mirrors the file layout (`ts_us`, topic last);
   * [[graft.streaming.WalrusStreams]] projects the friendly shape.
   *
@@ -412,27 +413,24 @@ object WalrusLogSource {
     * fresher than the epsilon, i.e. exactly when new data is landing)
     * always pay the real listing; staleness is only risked where nothing
     * has changed for a second. At 10⁵ commits the listing+sort is
-    * ~250 ms of every warm plan (ListingProfile) — this takes it to one
+    * ~250 ms of every warm plan (BASELINE.md) — this takes it to one
     * stat. */
   private val listingCache = new java.util.concurrent.ConcurrentHashMap[
     String, (java.nio.file.attribute.FileTime, Seq[Path])]
   private val MtimeEpsilonMs = 1000L
 
   /** Real `commits/` directory listings (the listing cache's misses) — a
-    * test probe pinning the one-listing-per-trigger contract of
-    * [[WalrusMicroBatchStream]]. */
+    * test probe pinning the listing contract of [[CommitTail]]: a cold
+    * load and a fallback listing each make at most one. */
   private[graft] val commitDirListCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Sorted commit-JSON paths — the cheap "has anything new landed?"
-    * probe the real-time tail polls (names only; no parsing). Commit
-    * files are named `%012d.json`, so name order is id order; each name
-    * is taken once and the sort compares those strings. */
+  /** Sorted commit-JSON paths (names only; no parsing). Commit files are
+    * named `%012d.json`, so name order is id order; each name is taken
+    * once and the sort compares those strings. */
   private[graft] def commitFiles(nsDir: Path): Seq[Path] = {
     val dir = nsDir.resolve("commits")
     if (!Files.exists(dir)) return Seq.empty
-    val mtime =
-      try Files.getLastModifiedTime(dir)
-      catch { case _: java.io.IOException => null }
+    val mtime = mtimeOf(dir)
     if (mtime != null) {
       val hit = listingCache.get(dir.toString)
       if (hit != null && hit._1 == mtime) return hit._2
@@ -446,10 +444,7 @@ object WalrusLogSource {
     val sorted: Seq[Path] = names.iterator.map(dir.resolve).toVector
     if (mtime != null &&
         System.currentTimeMillis() - mtime.toMillis >= MtimeEpsilonMs) {
-      val after =
-        try Files.getLastModifiedTime(dir)
-        catch { case _: java.io.IOException => null }
-      if (after == mtime) {
+      if (mtimeOf(dir) == mtime) {
         if (listingCache.size >= 64) listingCache.clear()
         listingCache.put(dir.toString, (mtime, sorted))
       }
@@ -488,8 +483,85 @@ object WalrusLogSource {
   }
 
   private[graft] def parseCommit(p: Path): (CommitRecord, Boolean) = {
+    val c = graft.log.CommitCodec.readCommit(p)
     commitParseCount.incrementAndGet()
-    graft.log.CommitCodec.readCommit(p)
+    c
+  }
+
+  private def mtimeOf(dir: Path): java.nio.file.attribute.FileTime =
+    try Files.getLastModifiedTime(dir)
+    catch { case _: java.io.IOException => null }
+
+  /** The commit log one reader has loaded, grown as commits publish, with
+    * one element per commit file in id order, so stream offsets stay
+    * positions in it. The cold load lists `commits/` once (`cold`);
+    * a refresh then probes `commits/<lastId+1>.json` onward and costs
+    * what it finds, as a walrus reader looks only past its cursor.
+    *
+    * Ids can skip: a claim abandoned mid-commit leaves an id with no
+    * commit file, and a later open sweeps its batch dir. A commit past
+    * such a gap is found by one fallback listing ([[newCommitFiles]]),
+    * made only when the probe finds nothing and the `commits/` mtime moved
+    * since the last listing. As in [[commitFiles]], a listing is trusted
+    * only if the mtime it was taken at was [[MtimeEpsilonMs]] old: a
+    * commit created in the same clock tick could hide behind a younger
+    * one, so the first empty probe after that mtime ages lists once more.
+    * Not thread-safe; callers serialize. */
+  private[graft] final class CommitTail(nsDir: Path,
+      cold: Path => Vector[(CommitRecord, Boolean)]) {
+    private val dir = nsDir.resolve("commits")
+    private var loaded: Vector[(CommitRecord, Boolean)] = Vector.empty
+    private var coldLoaded = false
+    private var listedMtime: java.nio.file.attribute.FileTime = null
+    private var listedTrusted = false
+
+    /** The commits loaded so far; None before the cold load. */
+    def current: Option[Vector[(CommitRecord, Boolean)]] =
+      if (coldLoaded) Some(loaded) else None
+
+    /** The commit log with every commit published so far. */
+    def refresh(): Vector[(CommitRecord, Boolean)] = {
+      if (!coldLoaded) {
+        listedAt(mtimeOf(dir))
+        loaded = cold(nsDir)
+        coldLoaded = true
+      } else {
+        val lastId = loaded.lastOption.fold(-1L)(_._1.id)
+        val found = probe(lastId)
+        if (found.nonEmpty) loaded = loaded ++ found
+        else {
+          val m = mtimeOf(dir)
+          if (m != listedMtime || (!listedTrusted && aged(m))) {
+            listedAt(m)
+            loaded = loaded ++ newCommitFiles(nsDir, loaded.size, lastId).map(parseCommit)
+          }
+        }
+      }
+      loaded
+    }
+
+    private def aged(m: java.nio.file.attribute.FileTime): Boolean =
+      m != null && System.currentTimeMillis() - m.toMillis >= MtimeEpsilonMs
+
+    /** Records the mtime read just before a listing. */
+    private def listedAt(m: java.nio.file.attribute.FileTime): Unit = {
+      listedMtime = m
+      listedTrusted = aged(m)
+    }
+
+    /** The commits published at `lastId + 1` onward, up to the first id
+      * with no commit file. */
+    private def probe(lastId: Long): Vector[(CommitRecord, Boolean)] = {
+      val out = Vector.newBuilder[(CommitRecord, Boolean)]
+      var id = lastId + 1
+      var more = true
+      while (more) {
+        val p = dir.resolve(f"$id%012d.json")
+        try { out += parseCommit(p); id += 1 }
+        catch { case _: java.nio.file.NoSuchFileException => more = false }
+      }
+      out.result()
+    }
   }
 
   /** Pushed-predicate bounds used to skip whole commits from metadata —
@@ -690,11 +762,17 @@ object WalrusLogSource {
   /** The one read planner, behind batch scans, micro-batches and the
     * log's driver-side reads: the live, unpruned commits' files of each
     * topic, in commit order, packed into multi-file partitions by
-    * [[pack]]. Each file carries its commit id (the `_commit` constant)
-    * and a batch capacity sized to its covering range's exact row count. */
+    * [[pack]]. Each file carries its topic, its commit id (the `_commit`
+    * constant) and a batch capacity sized to its covering range's exact
+    * row count. Topic dirs come from the topics each commit records, so
+    * planning lists only the dirs it reads. A partition may hold several
+    * topics' files (each topic's still in commit order), unless a scan
+    * reading `required` reports key-grouped partitioning
+    * ([[keyGroupedOnTopic]]), which needs one topic per partition. */
   private[graft] def partitionsFor(
       nsDir: Path, commits: Seq[(CommitRecord, Boolean)],
       topic: Option[String],
+      required: StructType,
       prune: PruneSpec = PruneSpec()): Array[InputPartition] = {
     partitionPlanCount.incrementAndGet()
     val spec = prune.withTopic(topic)
@@ -704,16 +782,14 @@ object WalrusLogSource {
       case (_, true) => () // vacuumed: data reclaimed, skip
       case (c, _) if !spec.commitMatches(c) => () // pruned by pushdown
       case (c, _) =>
-        val batchDir = nsDir.resolve("data").resolve(s"batch=${c.id}")
-        topicDirs(batchDir, spec).foreach { td =>
-          val t = decodeTopic(td.getFileName.toString.stripPrefix("topic="))
+        topicDirsOf(nsDir, c, spec).foreach { case (t, td) =>
           val files = parquetFiles(td).map(_.toString).sorted
           // the range's bytes are spread evenly over its files; each file
           // holds at most the range's rows
-          val bytes = c.topics.get(t).fold(0L)(_.bytes)
+          val bytes = c.topics(t).bytes
           val capacity = graft.io.LogParquet.capacityFor(c, t)
           val out = byTopic.getOrElseUpdate(t, scala.collection.mutable.ArrayBuffer.empty)
-          files.foreach(f => out += ((WalrusFile(f, c.id, capacity), bytes / files.size)))
+          files.foreach(f => out += ((WalrusFile(f, t, c.id, capacity), bytes / files.size)))
         }
     }
     // Spark's file-split settings, the inputs of `FilePartition.maxSplitBytes`
@@ -725,38 +801,39 @@ object WalrusLogSource {
       .getOrElse(org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         .map(_.sparkContext.defaultParallelism).getOrElse(1))
-    pack(byTopic.toSeq.map { case (t, files) => (t, files.toSeq) },
+    val groups = byTopic.valuesIterator.map(_.toSeq).toSeq
+    pack(if (keyGroupedOnTopic(required)) groups else Seq(groups.flatten),
       conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes, math.max(1, slots))
   }
 
-  /** Packs each topic's `(file, bytes)` list, in order, into
-    * [[WalrusFilePartition]]s of that topic alone. Spark's split rule with
-    * the topic boundary kept: the `slots` read slots are shared among the
-    * topics, one each and the rest in proportion to their cost (bytes plus
-    * the `open` cost per file, largest remainder first), and a topic's
+  /** Packs each group's `(file, bytes)` list, in order, into
+    * [[WalrusFilePartition]]s of that group alone. Spark's split rule with
+    * the group boundary kept: the `slots` read slots are shared among the
+    * groups, one each and the rest in proportion to their cost (bytes plus
+    * the `open` cost per file, largest remainder first), and a group's
     * files are cut into at most that many runs of near-equal cost. As in
     * `FilePartition.getFilePartitions`, a file that would take a run past
     * `maxPartitionBytes` starts a new partition, so a partition of several
     * files holds at most `maxPartitionBytes` plus an open cost per extra
-    * file. Plans at most max(topics, slots) partitions unless that size
+    * file. Plans at most max(groups, slots) partitions unless that size
     * splits them. */
-  private[graft] def pack(topics: Seq[(String, Seq[(WalrusFile, Long)])],
+  private[graft] def pack(groups: Seq[Seq[(WalrusFile, Long)]],
       maxPartitionBytes: Long, open: Long, slots: Int): Array[InputPartition] = {
-    val costs = topics.map { case (_, files) => files.iterator.map(_._2 + open).sum }
+    val costs = groups.map(_.iterator.map(_._2 + open).sum)
     val total = costs.sum
-    val extra = math.max(0, slots - topics.size)
+    val extra = math.max(0, slots - groups.size)
     val exact = costs.map(c => if (total > 0) c.toDouble * extra / total else 0.0)
     val bonus = exact.zipWithIndex.sortBy { case (e, i) => (e.floor - e, i) }
       .take(extra - exact.map(_.toInt).sum).map(_._2).toSet
     val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    topics.zip(costs).zipWithIndex.foreach { case (((t, files), cost), i) =>
+    groups.zip(costs).zipWithIndex.foreach { case ((files, cost), i) =>
       val runs = math.min(files.size, 1 + exact(i).toInt + (if (bonus(i)) 1 else 0))
       val cur = scala.collection.mutable.ArrayBuffer.empty[WalrusFile]
       var size = 0L   // cost of the open partition
-      var before = 0L // cost of the topic's files before this one
+      var before = 0L // cost of the group's files before this one
       var run = 0
       def close(): Unit = if (cur.nonEmpty) {
-        out += WalrusFilePartition(t, cur.toVector); cur.clear(); size = 0L
+        out += WalrusFilePartition(cur.toVector); cur.clear(); size = 0L
       }
       files.foreach { case (f, bytes) =>
         val r = if (cost > 0) math.min(runs - 1, (before.toDouble * runs / cost).toInt) else 0
@@ -771,27 +848,37 @@ object WalrusLogSource {
     out.toArray
   }
 
-  private def topicDirs(batchDir: Path, spec: PruneSpec): Seq[Path] = {
-    if (!Files.exists(batchDir)) return Seq.empty
-    val s = Files.list(batchDir)
-    val dirs = try s.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("topic=")).toSeq
-      finally s.close()
-    dirs.filter(d =>
-      spec.topicMatches(decodeTopic(d.getFileName.toString.stripPrefix("topic="))))
+  /** Whether a scan reading `required` reports key-grouped partitioning
+    * on `topic` (see [[WalrusLogScan.outputPartitioning]]): only with
+    * `spark.sql.sources.v2.bucketing.enabled` and `topic` read. */
+  private[sources] def keyGroupedOnTopic(required: StructType): Boolean = {
+    val bucketing = try org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
+    catch { case _: Exception => false }
+    bucketing && required.fieldNames.contains("topic")
   }
 
+  /** The `topic=` dirs of commit `c` that `spec` keeps, named from the
+    * topics the commit records (the writers' own escaping), in dir-name
+    * order. */
+  private def topicDirsOf(nsDir: Path, c: CommitRecord, spec: PruneSpec): Seq[(String, Path)] = {
+    val batchDir = nsDir.resolve("data").resolve(s"batch=${c.id}")
+    c.topics.keysIterator.filter(spec.topicMatches).map { t =>
+      t -> batchDir.resolve(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString("topic", t))
+    }.toSeq.sortBy(_._2.getFileName.toString)
+  }
+
+  /** The data files of a topic dir; none when the dir is gone (a vacuum
+    * or compaction reclaimed it after the commit list was taken). */
   private def parquetFiles(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
+    val s = try Files.list(dir) catch { case _: java.nio.file.NoSuchFileException => return Seq.empty }
     try s.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
       n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
     }.toSeq
     finally s.close()
   }
-
-  private def decodeTopic(escaped: String): String =
-    java.net.URLDecoder.decode(escaped, "UTF-8")
 
   /** Stable topic → real-time-reader-partition assignment (String.hashCode
     * is spec-fixed, so drivers and executors of any JVM agree). */
@@ -807,18 +894,14 @@ object WalrusLogSource {
       partitionId: Int, numPartitions: Int): Seq[(String, String, Int)] = {
     val spec = prune.withTopic(topic)
     if (!spec.commitMatches(c)) return Seq.empty
-    val batchDir = nsDir.resolve("data").resolve(s"batch=${c.id}")
-    topicDirs(batchDir, spec)
-      .sortBy(_.getFileName.toString)
-      .flatMap { td =>
-        val t = decodeTopic(td.getFileName.toString.stripPrefix("topic="))
-        if (rtPartitionOf(t, numPartitions) != partitionId) Seq.empty
-        else {
-          val capacity = graft.io.LogParquet.capacityFor(c, t)
-          parquetFiles(td).sortBy(_.getFileName.toString)
-            .map(f => (t, f.toString, capacity))
-        }
+    topicDirsOf(nsDir, c, spec).flatMap { case (t, td) =>
+      if (rtPartitionOf(t, numPartitions) != partitionId) Seq.empty
+      else {
+        val capacity = graft.io.LogParquet.capacityFor(c, t)
+        parquetFiles(td).sortBy(_.getFileName.toString)
+          .map(f => (t, f.toString, capacity))
       }
+    }
   }
 }
 
@@ -1116,10 +1199,7 @@ class WalrusLogScan(nsDir: Path, options: CaseInsensitiveStringMap,
     // partition planning (a full file listing) only when the feature can
     // actually be used — Spark calls this on EVERY plan of the scan, and
     // with bucketing disabled the answer is discarded
-    val bucketing = try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.sql.sources.v2.bucketing.enabled", "false") == "true"
-    catch { case _: Exception => false }
-    if (bucketing && required.fieldNames.contains("topic"))
+    if (WalrusLogSource.keyGroupedOnTopic(required))
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         Array(org.apache.spark.sql.connector.expressions.Expressions.identity("topic")),
         plannedPartitions().length)
@@ -1152,7 +1232,7 @@ class WalrusLogScan(nsDir: Path, options: CaseInsensitiveStringMap,
           case _ =>
             val parts = WalrusLogSource.partitionsFor(nsDir,
               limitPrefix(visibleAsOf(commitsSnapshot), spec.withTopic(topic)),
-              topic, spec)
+              topic, required, spec)
             plannedCache = Some((spec, parts))
             parts
         }
@@ -1413,45 +1493,28 @@ class WalrusMicroBatchStream(
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow with SupportsRealTimeMode {
 
-  /** Cached parsed prefix of the commit log — the same incremental-tail
-    * pattern as [[WalrusRealTimeReader.refreshCommits]]: the cold start is
-    * newest-manifest + JSON tail (one manifest + O(tail) parses however
-    * old the log), every later trigger is a names-only listing plus a
-    * parse of ONLY the new suffix (the commit log is append-only by id, so
-    * the cached prefix is stable). Without this, `latestOffset` /
-    * `planInputPartitions` / `reportLatestOffset` each re-parsed EVERY
-    * commit JSON on the driver — ~3 full O(N_commits) passes per trigger,
-    * the one driver-side bottleneck left at high commit counts.
+  /** The commit log this stream has loaded ([[WalrusLogSource.CommitTail]]):
+    * the cold start is newest-manifest + JSON tail, and every later look
+    * probes past the newest loaded id, parsing only the new commits (the
+    * commit log is append-only by id, so the loaded prefix is stable).
     *
     * Staleness exposure (same as the RTM reader's, documented there): a
-    * vacuum that lands after an entry was cached leaves its flag `false`;
+    * vacuum that lands after an entry was loaded leaves its flag `false`;
     * planning then finds the reclaimed batch's dir empty and emits zero
     * partitions — an IO-level no-op, never wrong rows.
     *
-    * One `commits/` listing per trigger: only [[latestOffset]] (and the
-    * AvailableNow fence) look for new commits; the planning and reporting
-    * calls of the same trigger read the prefix it refreshed, which covers
-    * the end offset they are given. */
-  private var cachedCommits: Vector[(CommitRecord, Boolean)] = Vector.empty
-  private var coldLoaded = false
+    * Only [[latestOffset]] (and the AvailableNow fence) look for new
+    * commits; the planning and reporting calls of the same trigger read
+    * the prefix it refreshed, which covers the end offset they are given. */
+  private val tail = new WalrusLogSource.CommitTail(nsDir, WalrusLogSource.assembleCommits)
 
-  /** The commit log with every commit published so far: one listing. */
-  private def commits: Vector[(CommitRecord, Boolean)] = synchronized {
-    if (!coldLoaded) {
-      cachedCommits = WalrusLogSource.assembleCommits(nsDir)
-      coldLoaded = true
-    } else {
-      cachedCommits = cachedCommits ++ WalrusLogSource.newCommitFiles(nsDir,
-        cachedCommits.size, cachedCommits.lastOption.fold(-1L)(_._1.id))
-        .map(WalrusLogSource.parseCommit)
-    }
-    cachedCommits
-  }
+  /** The commit log with every commit published so far. */
+  private def commits: Vector[(CommitRecord, Boolean)] = synchronized(tail.refresh())
 
   /** A prefix of the commit log holding at least `end` commits (0: any
-    * loaded prefix): the cached one when it does, else a refreshed one. */
+    * loaded prefix): the loaded one when it does, else a refreshed one. */
   private def commitsThrough(end: Long): Vector[(CommitRecord, Boolean)] = synchronized {
-    if (coldLoaded && cachedCommits.size >= end) cachedCommits else commits
+    tail.current.filter(_.size >= end).getOrElse(tail.refresh())
   }
 
   /** `Trigger.AvailableNow` end-of-stream fence: the commit-log size is
@@ -1669,7 +1732,7 @@ class WalrusMicroBatchStream(
           "gone. Set failOnDataLoss=false to skip reclaimed ranges, or " +
           "retain data at least as long as the slowest consumer")
     }
-    WalrusLogSource.partitionsFor(nsDir, slice, topic, prune)
+    WalrusLogSource.partitionsFor(nsDir, slice, topic, required, prune)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1862,20 +1925,22 @@ class WalrusAggRowsReaderFactory(schema: StructType) extends PartitionReaderFact
   }
 }
 
-/** One data file of a [[WalrusFilePartition]]: the commit that published
-  * it (its `_commit` constant) and the batch capacity it opens with. */
-case class WalrusFile(path: String, commitId: Long, capacity: Int)
+/** One data file of a [[WalrusFilePartition]]: its topic (the `topic`
+  * constant), the commit that published it (its `_commit` constant) and
+  * the batch capacity it opens with. */
+case class WalrusFile(path: String, topic: String, commitId: Long, capacity: Int)
 
-/** Data files of one topic, read in order (see [[WalrusLogSource.pack]]). */
-case class WalrusFilePartition(topic: String, files: Seq[WalrusFile]) extends InputPartition
+/** Data files read in order (see [[WalrusLogSource.pack]]). */
+case class WalrusFilePartition(files: Seq[WalrusFile]) extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
-  /** Storage-partitioned execution: every partition of a topic carries the
-    * topic as its partition key, so Spark (with
-    * `spark.sql.sources.v2.bucketing.enabled`) groups splits per topic
-    * and per-topic aggregations/joins run WITHOUT a shuffle — the log's
-    * directory layout IS a bucketed table on `topic`. */
+  /** Storage-partitioned execution: when the scan reports key-grouped
+    * partitioning every partition holds one topic and carries it as its
+    * partition key, so Spark (with `spark.sql.sources.v2.bucketing.enabled`)
+    * groups splits per topic and per-topic aggregations/joins run WITHOUT
+    * a shuffle — the log's directory layout IS a bucketed table on
+    * `topic`. */
   override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](UTF8String.fromString(topic)))
+    new GenericInternalRow(Array[Any](UTF8String.fromString(files.head.topic)))
 }
 
 /** One real-time tail reader's assignment: its id in the fixed reader set,
@@ -1886,9 +1951,9 @@ case class WalrusRealTimePartition(
     startCommitIdx: Long, startRowInCommit: Long,
     failOnDataLoss: Boolean = false, streamId: String = "") extends InputPartition
 
-/** Reads the data files of one topic partition, in order. File columns
-  * are a subset of (offset, ts_us, value, checksum, len); `topic` comes
-  * from the dir name and `_commit` from the file's commit, both appended
+/** Reads the data files of one partition, in order. File columns
+  * are a subset of (offset, ts_us, value, checksum, len); `topic` and
+  * `_commit` come from the file's topic and commit, both appended
   * per file as constant partition columns by the vectorized reader.
   * Pruned column sets stream straight from parquet pages into
   * `ColumnarBatch`es; only a topic-only/empty projection (e.g. count(*))
@@ -1901,9 +1966,9 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
   private val constCols = schema.fields.filter(f => ConstNames(f.name))
   private val fileSchema = StructType(schema.fields.filterNot(f => ConstNames(f.name)))
 
-  private def constRow(topic: String, f: WalrusFile): InternalRow =
+  private def constRow(f: WalrusFile): InternalRow =
     new GenericInternalRow(constCols.map {
-      case c if c.name == "topic" => UTF8String.fromString(topic)
+      case c if c.name == "topic" => UTF8String.fromString(f.topic)
       case _ => java.lang.Long.valueOf(f.commitId)
     }.toArray[Any])
 
@@ -1919,7 +1984,7 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
         val r = graft.io.LogParquet.openColumnar(f.path, fileSchema, f.capacity)
         var ok = false
         try {
-          r.initBatch(StructType(constCols.toSeq), constRow(p.topic, f))
+          r.initBatch(StructType(constCols.toSeq), constRow(f))
           r.enableReturningBatches()
           ok = true
         } finally if (!ok) r.close()
@@ -1958,7 +2023,7 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
           if (!files.hasNext) return false
           val f = files.next()
           remaining = graft.io.LogParquet.rowCount(f.path)
-          row = constRow(p.topic, f)
+          row = constRow(f)
         }
         remaining -= 1
         true
@@ -1979,9 +2044,9 @@ class WalrusReaderFactory(schema: StructType) extends PartitionReaderFactory {
   *
   * Single-threaded like every PartitionReader; files of one commit slice
   * are read in the stable (topic dir, file name) order that makes
-  * row-granular offsets replayable. Poll cadence 5 ms over a names-only
-  * dir listing (commit JSONs parse incrementally) — the latency floor of
-  * the tail, far below any achievable trigger cadence. */
+  * row-granular offsets replayable. Poll cadence 5 ms, each poll a probe
+  * for the next commit id (commit JSONs parse incrementally) — the
+  * latency floor of the tail, far below any achievable trigger cadence. */
 class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
     extends PartitionReader[InternalRow] with SupportsRealTimeRead[InternalRow] {
   require(!schema.fieldNames.contains("_commit"),
@@ -1993,7 +2058,8 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   private val fileSchema = StructType(schema.fields.filter(_.name != "topic"))
   private val hasTopic = schema.fieldNames.contains("topic")
 
-  private var commits = WalrusLogSource.listCommits(nsDir).toVector
+  private val tail = new WalrusLogSource.CommitTail(nsDir, WalrusLogSource.listCommits)
+  private var commits = tail.refresh()
   private var commitIdx: Long = p.startCommitIdx // position in the ordered commit log
   private var rowInCommit: Long = 0L             // slice rows consumed (emitted + skipped)
   private var toSkip: Long = p.startRowInCommit  // resume skip within the first commit
@@ -2004,14 +2070,12 @@ class WalrusRealTimeReader(p: WalrusRealTimePartition, schema: StructType)
   private var constRow: InternalRow = null
   private var current: InternalRow = null
 
-  /** Incremental tail refresh: list names (cheap), parse only commits past
-    * the cached prefix — the commit log is append-only by id, so the
-    * prefix never changes order. (A concurrent vacuum rewrites an OLD
-    * commit's flag in place; the tail reader is past it by definition —
-    * the same listing-race exposure as the batch planner.) */
-  private def refreshCommits(): Unit =
-    commits = commits ++ WalrusLogSource.newCommitFiles(nsDir, commits.size,
-      commits.lastOption.fold(-1L)(_._1.id)).map(WalrusLogSource.parseCommit)
+  /** Incremental tail refresh: probe past the newest loaded commit and
+    * parse only what it finds (see [[WalrusLogSource.CommitTail]]). (A
+    * concurrent vacuum rewrites an OLD commit's flag in place; the tail
+    * reader is past it by definition — the same exposure as the batch
+    * planner.) */
+  private def refreshCommits(): Unit = commits = tail.refresh()
 
   private lazy val lossSpec = p.prune.withTopic(p.topic)
 

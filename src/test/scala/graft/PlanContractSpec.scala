@@ -1298,6 +1298,14 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.sum
   }
 
+  private def scannedFiles(q: org.apache.spark.sql.DataFrame): Seq[graft.sources.WalrusFile] = {
+    q.collect()
+    q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.flatMap(_.asInstanceOf[graft.sources.WalrusFilePartition].files)
+    }.flatten
+  }
+
   test("TopN trimming survives compaction: per-topic RANGE order, not commit-id order") {
     // A compaction commit carries OLD offsets (and a ts RANGE) at a NEW
     // commit id — r9 yielded the whole commit list whenever one existed,
@@ -1383,8 +1391,9 @@ class PlanContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rows: only the two matching topics
     val q = df.select("topic", "offset")
     assert(q.collect().map(_.getString(0)).toSet == Set("orders", "orders_eu"))
-    // plan: the non-matching topic's file is never planned
-    assert(scannedParts(q) == 2,
+    // plan: the non-matching topic's file is never planned (the matching
+    // topics' files may share a partition)
+    assert(scannedFiles(q).map(_.topic).sorted == Seq("orders", "orders_eu"),
       "pattern must prune the audit topic's directory from the plan")
     // the metadata-aggregate path honors the pattern (zero data IO count)
     val agg = df.groupBy("topic").agg(count(lit(1)).as("n")).collect()

@@ -204,4 +204,70 @@ class LogParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(log.batchRead("u", Long.MaxValue, checkpoint = false).size == 40)
     }
   }
+
+  /** Each batch `reader` yields, as its rows' values. */
+  private def batchesOf(reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader,
+      columns: StructType): Seq[Seq[Seq[Any]]] = {
+    import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
+    reader.initBatch(new StructType(), org.apache.spark.sql.catalyst.InternalRow.empty)
+    reader.enableReturningBatches()
+    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Seq[Any]]]
+    try while (reader.nextKeyValue()) {
+      val b = reader.getCurrentValue.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
+      out += b.rowIterator().asScala.map { r =>
+        columns.fields.toSeq.zipWithIndex.map {
+          case (f, i) if f.dataType == LongType => r.getLong(i)
+          case (f, i) if f.dataType == IntegerType => r.getInt(i)
+          case (f, i) if f.dataType == BinaryType => r.getBinary(i).toSeq
+          case (f, _) => fail(s"unexpected column $f")
+        }
+      }.toVector
+    } finally reader.close()
+    out.toSeq
+  }
+
+  test("the one-stream open reads what Spark's split open reads, for every codec and column subset") {
+    import org.apache.hadoop.mapred.FileSplit
+    import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+    Seq("snappy", "zstd", "uncompressed").foreach { codec =>
+      val log = new WalrusLog(spark, graft.TestDirs.create(s"lparq-open-$codec-").toString,
+        cfg = LogConfig(compression = codec))
+      log.batchAppend("t", Seq(bytes("a"), bytes("bb"), bytes("")))
+      log.batchAppend("t", (0 until 2000).map(i => bytes(s"big-$i")))
+      val files = dataFiles(log.root).map(_.toString)
+      assert(files.size == 2)
+      // the entry file layout: offset, ts_us, value, checksum, len
+      val schema = StructType(WalrusLogSource.Schema.filter(_.name != "topic") :+
+        org.apache.spark.sql.types.StructField("len", org.apache.spark.sql.types.IntegerType))
+      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head), new Configuration()))
+      val fileColumns = try footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toVector
+        finally footer.close()
+      assert(fileColumns == schema.fieldNames.toVector)
+      val subsets = (1 to fileColumns.size).flatMap(fileColumns.combinations)
+      assert(subsets.size == 31)
+      for (f <- files; cols <- subsets) {
+        val columns = StructType(cols.map(c => schema(c)))
+        // capacity 1000 cuts the 2000-row file into two batches
+        val ours = batchesOf(LogParquet.openColumnar(f, columns, 1000), columns)
+        val spark2 = new VectorizedParquetRecordReader(false, 1000)
+        val len = Files.size(java.nio.file.Paths.get(f))
+        spark2.initialize(new FileSplit(new org.apache.hadoop.fs.Path(f), 0L, len, Array.empty[String]),
+          LogParquet.context(columns))
+        val theirs = batchesOf(spark2, columns)
+        assert(ours == theirs, s"$codec $f ${cols.mkString(",")}")
+        assert(ours.flatten.size == LogParquet.rowCount(f))
+      }
+    }
+  }
+
+  test("opening a deleted log file fails with NoSuchFileException") {
+    val log = new WalrusLog(spark, graft.TestDirs.create("lparq-gone-").toString)
+    log.append("t", bytes("e0"))
+    val f = dataFiles(log.root).head
+    Files.delete(f)
+    val columns = StructType(WalrusLogSource.Schema.filter(_.name == "value"))
+    intercept[java.nio.file.NoSuchFileException](LogParquet.openColumnar(f.toString, columns, 1))
+    intercept[java.nio.file.NoSuchFileException](LogParquet.rowCount(f.toString))
+  }
 }

@@ -1481,6 +1481,52 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"fail-stop took ${waitedMs} ms — claimGapWaitMs=200 not honored")
   }
 
+  test("a writer that opens in another writer's claim → publish gap waits for that commit") {
+    val root = tempRoot()
+    val a = new WalrusLog(spark, root)
+    a.batchAppend("t", Seq(bytes("a0")))
+    a.batchAppend("t", Seq(bytes("a1")))
+    // the disk as A's claim → publish gap leaves it: batch=1 claimed, no
+    // commit file
+    val commit1 = java.nio.file.Paths.get(root, "default", "commits", f"${1L}%012d.json")
+    val aside = java.nio.file.Paths.get(root, "a-commit-1.json")
+    Files.move(commit1, aside)
+    val b = new WalrusLog(spark, root)
+    val appended = new java.util.concurrent.CompletableFuture[Unit]()
+    val writer = new Thread(() =>
+      try { b.append("t", bytes("b0")); appended.complete(()) }
+      catch { case e: Throwable => appended.completeExceptionally(e) })
+    writer.start()
+    Thread.sleep(300)
+    // A publishes
+    Files.move(aside, commit1)
+    appended.get(60, java.util.concurrent.TimeUnit.SECONDS)
+    val fresh = new WalrusLog(spark, root)
+    val got = fresh.batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.map(e => (e.offset, str(e.value))) == Seq((0L, "a0"), (1L, "a1"), (2L, "b0")))
+    assert(fresh.entryCount("t") == 3L)
+    val offsets = fresh.toDF().selectExpr("offset").collect().map(_.getLong(0)).toSeq
+    assert(offsets.sorted == Seq(0L, 1L, 2L), s"toDF offsets $offsets")
+  }
+
+  test("a writer reopened after crashing in its own claim → publish gap waits once, then commits") {
+    val root = tempRoot()
+    val cfg = LogConfig(claimGapWaitMs = 2000L)
+    val a = new WalrusLog(spark, root, cfg = cfg)
+    a.batchAppend("t", Seq(bytes("a0")))
+    a.batchAppend("t", Seq(bytes("a1")))
+    // the crash: batch=1 claimed a moment ago, its commit never published
+    Files.delete(java.nio.file.Paths.get(root, "default", "commits", f"${1L}%012d.json"))
+    val b = new WalrusLog(spark, root, cfg = cfg)
+    b.append("t", bytes("b0"))
+    val t0 = System.nanoTime()
+    b.append("t", bytes("b1"))
+    val secondMs = (System.nanoTime() - t0) / 1000000L
+    assert(secondMs < cfg.claimGapWaitMs, s"the second commit waited ${secondMs} ms for the orphan again")
+    val got = new WalrusLog(spark, root).batchRead("t", Long.MaxValue, checkpoint = false)
+    assert(got.map(e => (e.offset, str(e.value))) == Seq((0L, "a0"), (1L, "b0"), (2L, "b1")))
+  }
+
   test("commitCollisionRetries = 0 restores pure fail-stop: exactly one append wins") {
     val root = tempRoot()
     val cfg = LogConfig(commitCollisionRetries = 0)
@@ -1788,12 +1834,14 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // consumers: (topic, offset, value) in the order each one received them
     val received = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[(String, Long, String)]]
+    val consuming = new java.util.concurrent.atomic.AtomicBoolean(true)
     def consumer(): Thread = {
       val got = mutable.ArrayBuffer.empty[(String, Long, String)]
       received += got
       worker {
         var i = 0
         while (!stop.get()) {
+          while (!consuming.get() && !stop.get()) Thread.sleep(1)
           val t = topics(i % topics.size); i += 1
           log.readNext(t) match {
             case Some(e) => got += ((t, e.offset, str(e.value)))
@@ -1821,9 +1869,17 @@ class WalrusLogSpec extends AnyFunSuite with BeforeAndAfterAll {
         log.compact()
         compactNs += System.nanoTime() - c0; rounds += 1
         Thread.sleep(20 + rand.nextInt(100))
+        // consumers that keep up read only the newest commits, which no
+        // step removes: they pause while a backlog builds, and retention
+        // reclaims the oldest of it as they resume on it
+        consuming.set(false)
+        val (backlog, pausedMs) = (appended.size + 2000, System.currentTimeMillis())
+        while (appended.size < backlog && System.currentTimeMillis() - pausedMs < 3000L)
+          Thread.sleep(5)
+        consuming.set(true)
         log.synchronized {
           val before = ranges
-          log.vacuumOlderThan(System.currentTimeMillis() - 20 - rand.nextInt(200))
+          log.vacuumOlderThan(pausedMs + rand.nextInt(300))
           reclaimed ++= before -- ranges
         }
         log.vacuum()

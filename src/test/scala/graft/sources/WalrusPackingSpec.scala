@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.log.WalrusLog
 
-/** Read planning packs each topic's files into multi-file partitions:
-  * fewer tasks per micro-batch, the same rows, per-topic offset order and
-  * `_commit` values as reading one file per partition. */
+/** Read planning packs files into multi-file partitions (across topics,
+  * unless the scan reports key-grouped partitioning): fewer tasks per
+  * micro-batch, the same rows, per-topic offset order and `_commit`
+  * values as reading one file per partition. */
 class WalrusPackingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -51,14 +52,16 @@ class WalrusPackingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val topicOnly = StructType(Seq(StructField("topic", org.apache.spark.sql.types.StringType),
     StructField("_commit", LongType)))
 
-  /** The stream's plan of commits `[0, Commits)` and its reader factory. */
-  private def plan(columns: StructType): (Array[WalrusFilePartition], PartitionReaderFactory) = {
-    val opts = new CaseInsensitiveStringMap(Map("path" -> root).asJava)
+  /** The stream's plan of commits `[0, n)` of the log at `at` and its
+    * reader factory. */
+  private def plan(columns: StructType, at: String = root,
+      n: Int = Commits): (Array[WalrusFilePartition], PartitionReaderFactory) = {
+    val opts = new CaseInsensitiveStringMap(Map("path" -> at).asJava)
     val builder = new WalrusLogTable(opts).newScanBuilder(opts)
     builder.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(columns)
-    val stream = builder.build().toMicroBatchStream(root + "/unused-ckpt")
+    val stream = builder.build().toMicroBatchStream(at + "/unused-ckpt")
       .asInstanceOf[MicroBatchStream]
-    val parts = stream.planInputPartitions(CommitIndexOffset(0), CommitIndexOffset(Commits))
+    val parts = stream.planInputPartitions(CommitIndexOffset(0), CommitIndexOffset(n))
       .map(_.asInstanceOf[WalrusFilePartition])
     (parts, stream.createReaderFactory())
   }
@@ -90,9 +93,9 @@ class WalrusPackingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def assertSameRows(columns: StructType): Array[WalrusFilePartition] = {
     val (parts, factory) = plan(columns)
     assert(parts.forall(p => p.files.nonEmpty &&
-      p.files.forall(_.path.contains(s"/topic=${p.topic}/"))), "a partition holds one topic")
+      p.files.forall(f => f.path.contains(s"/topic=${f.topic}/"))), "a file carries its own topic")
     val packed = parts.toSeq.flatMap(read(factory, _, columns))
-    val single = parts.toSeq.flatMap(p => p.files.map(f => WalrusFilePartition(p.topic, Seq(f))))
+    val single = parts.toSeq.flatMap(p => p.files.map(f => WalrusFilePartition(Seq(f))))
       .flatMap(read(factory, _, columns))
     assert(packed.groupBy(_._1) == single.groupBy(_._1))
     assert(packed.size == single.size && packed.nonEmpty)
@@ -126,13 +129,47 @@ class WalrusPackingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val parts = assertSameRows(columns)
       assert(parts.exists(_.files.size > 1), "nothing was packed")
       parts.foreach { p =>
-        val size = p.files.map(f => bytes(f.commitId)(p.topic).bytes).sum + open * (p.files.size - 1)
+        val size = p.files.map(f => bytes(f.commitId)(f.topic).bytes).sum + open * (p.files.size - 1)
         assert(p.files.size == 1 || size <= max, s"$p holds $size of $max bytes")
       }
     } finally {
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
       spark.conf.unset("spark.sql.files.openCostInBytes")
     }
+  }
+
+  test("a micro-batch packs files across topics: at most max(1, slots) partitions, the per-topic plan's rows") {
+    val topics = (0 until 8).map(i => s"t$i")
+    val at = graft.TestDirs.create("wpack-x-").toString
+    val log = new WalrusLog(spark, at)
+    val n = 40
+    (0 until n).foreach(i => log.append(topics(i % topics.size), s"v$i".getBytes("UTF-8")))
+    val slots = spark.sparkContext.defaultParallelism
+    val commitOf = WalrusLogSource.listCommits(java.nio.file.Paths.get(at, "default"))
+      .map { case (c, _) => c.topics.keys.head -> c.topics.values.head.start -> c.id }.toMap
+    // the per-topic plan of the same commits: a scan reporting key-grouped
+    // partitioning keeps one topic per partition
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val (grouped, perTopic) = try {
+      (plan(withCommit, at, n)._1, WalrusLogSource.partitionsFor(java.nio.file.Paths.get(at, "default"),
+        WalrusLogSource.listCommits(java.nio.file.Paths.get(at, "default")), None, WalrusLogSource.Schema)
+        .map(_.asInstanceOf[WalrusFilePartition]))
+    } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+    assert(perTopic.length >= topics.size)
+    assert((grouped ++ perTopic).forall(_.files.map(_.topic).distinct.size == 1))
+    val (parts, factory) = plan(withCommit, at, n)
+    assert(parts.length <= math.max(1, slots), s"${parts.length} partitions on $slots slots")
+    assert(parts.exists(_.files.map(_.topic).distinct.size > 1), "no partition mixes topics")
+    val rows = parts.toSeq.flatMap(read(factory, _, withCommit))
+    rows.foreach { case (t, o, _, c) =>
+      assert(commitOf((t, o)) == c, s"row ($t, $o) carries _commit $c")
+    }
+    val want = perTopic.toSeq.flatMap(read(factory, _, withCommit))
+    assert(rows.size == n && rows.sorted == want.sorted)
+    topics.foreach { t =>
+      assert(rows.filter(_._1 == t).map(_._2) == want.filter(_._1 == t).map(_._2), s"topic $t order")
+    }
+    assert(grouped.flatMap(_.files).map(_.path).sorted.toSeq == parts.flatMap(_.files).map(_.path).sorted.toSeq)
   }
 
   test("a batch scan reads the packed partitions: same rows and _commit values as toDF") {

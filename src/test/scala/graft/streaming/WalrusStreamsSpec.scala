@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -565,6 +567,118 @@ class WalrusStreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one per trigger, plus the AvailableNow fence and the last look that
     // finds nothing new
     assert(listings <= n + 2L, s"$n one-commit triggers made $listings commits/ listings")
+  }
+
+  /** Values of topic `t` a micro-batch stream delivers for `(start, end]`. */
+  private def deliver(stream: graft.sources.WalrusMicroBatchStream,
+      start: org.apache.spark.sql.connector.read.streaming.Offset,
+      end: org.apache.spark.sql.connector.read.streaming.Offset): Seq[String] = {
+    val factory = stream.createReaderFactory()
+    stream.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val r = factory.createColumnarReader(p)
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      try while (r.next()) {
+        val b = r.get()
+        (0 until b.numRows()).foreach(i => out += new String(b.column(2).getBinary(i), "UTF-8"))
+      } finally r.close()
+      out.toSeq
+    }
+  }
+
+  test("a ProcessingTime stream over a log that gains commits between triggers lists commits/ only at its cold load") {
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    log.batchAppend("t", Seq(bytes("e0")))
+    val n = 6
+    // listings counted as each batch runs; each batch publishes the
+    // commit the next trigger finds
+    val listingsAt = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val rows = new java.util.concurrent.atomic.AtomicLong(0L)
+    val q = spark.readStream.format("walruslog").option("path", root).load()
+      .writeStream.foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        rows.addAndGet(df.count())
+        listingsAt.put(id, graft.sources.WalrusLogSource.commitDirListCount.get())
+        if (id < n) log.batchAppend("t", Seq(bytes(s"e${id + 1}")))
+        ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds")).start()
+    try {
+      val deadline = System.currentTimeMillis() + 120000L
+      while (!listingsAt.containsKey(n.toLong) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally q.stop()
+    assert(listingsAt.containsKey(n.toLong), s"batches seen: ${listingsAt.keySet()}")
+    assert(rows.get() == n + 1L)
+    val after = listingsAt.get(n.toLong) - listingsAt.get(0L)
+    assert(after == 0L, s"$n triggers after the first made $after commits/ listings")
+  }
+
+  test("a commit published past a skipped id is delivered after one fallback listing") {
+    import graft.sources.{CommitIndexOffset, WalrusLogSource}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val root = tempRoot()
+    val nsDir = java.nio.file.Paths.get(root, "default")
+    val log = new WalrusLog(spark, root)
+    (0 until 3).foreach(i => log.batchAppend("t", Seq(bytes(s"e$i"))))
+    val stream = new graft.sources.WalrusMicroBatchStream(nsDir, Some("t"), None,
+      WalrusLogSource.Schema)
+    val o1 = stream.latestOffset(CommitIndexOffset(0L), ReadLimit.allAvailable())
+    assert(o1 == CommitIndexOffset(3L))
+    // id 3 becomes a skip: no commit file and no batch dir, as an abandoned
+    // claim leaves it once a later open sweeps its dir
+    log.batchAppend("t", Seq(bytes("skipped")))
+    log.batchAppend("t", Seq(bytes("e4")))
+    Files.delete(nsDir.resolve("commits").resolve(f"${3L}%012d.json"))
+    WalrusLog.deleteRecursively(nsDir.resolve("data").resolve("batch=3"))
+    // and all of it a while ago: the listing below is trusted
+    Files.setLastModifiedTime(nsDir.resolve("commits"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
+    val before = WalrusLogSource.commitDirListCount.get()
+    val o2 = stream.latestOffset(o1, ReadLimit.allAvailable())
+    assert(WalrusLogSource.commitDirListCount.get() - before == 1L)
+    assert(o2 == CommitIndexOffset(4L))
+    assert(deliver(stream, o1, o2) == Seq("e4"))
+    // nothing new and the dir unchanged since that listing: no listing
+    assert(stream.latestOffset(o2, ReadLimit.allAvailable()) == o2)
+    assert(WalrusLogSource.commitDirListCount.get() - before == 1L)
+    // the next commit is found by its id again
+    log.batchAppend("t", Seq(bytes("e5")))
+    val o3 = stream.latestOffset(o2, ReadLimit.allAvailable())
+    assert(deliver(stream, o2, o3) == Seq("e5"))
+    assert(WalrusLogSource.commitDirListCount.get() - before == 1L)
+  }
+
+  test("the real-time reader lists commits/ only on a probe miss with a moved mtime") {
+    import graft.sources.WalrusLogSource
+    val root = tempRoot()
+    val log = new WalrusLog(spark, root)
+    (0 until 2).foreach(i => log.batchAppend("t", Seq(bytes(s"e$i"))))
+    val nsDir = java.nio.file.Paths.get(root, "default")
+    // a dir quiet for an hour: its mtime is trusted from the cold load on
+    Files.setLastModifiedTime(nsDir.resolve("commits"),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
+    val reader = new graft.sources.WalrusRealTimeReader(
+      graft.sources.WalrusRealTimePartition(0, 1, nsDir.toString, Some("t"),
+        WalrusLogSource.PruneSpec(), 0L, 0L), WalrusLogSource.Schema)
+    def drain(ms: Long): Seq[String] = {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+      val deadline = System.currentTimeMillis() + ms
+      while (reader.nextWithTimeout(deadline).hasRecord)
+        rows += new String(reader.get().getBinary(2), "UTF-8")
+      rows.toSeq
+    }
+    try {
+      val before = WalrusLogSource.commitDirListCount.get()
+      // ~40 polls of 5 ms over an unchanged dir
+      assert(drain(200L) == Seq("e0", "e1"))
+      assert(WalrusLogSource.commitDirListCount.get() == before)
+      // a new commit is found by the probe; the first miss after it sees
+      // the moved mtime and lists once
+      log.batchAppend("t", Seq(bytes("e2")))
+      assert(drain(300L) == Seq("e2"))
+      val listings = WalrusLogSource.commitDirListCount.get() - before
+      assert(listings >= 1L && listings <= 2L, s"$listings listings after one commit")
+    } finally reader.close()
   }
 
   test("real-time reader of a killed task yields none of a later commit's rows") {
